@@ -251,8 +251,8 @@ object Bench {
         ".state.RocksDBStateStoreProvider")
       val src = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long)]
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-warm-stream").toString
+      val out = FixtureMemo.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft-warm-stream").toString)
       val q =
         try src.toDF().toDF("ts", "v")
           .withWatermark("ts", "5 seconds")

@@ -51,5 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     // native AS-OF join physical operator (plans.NativeAsOfJoin)
     ext.injectPlannerStrategy(_ => graft.plans.NativeAsOfJoin.AsOfStrategy)
+    // Avro codec: decode_transaction(_safe) / encode_approved, and the
+    // decode plan node's strategy (plans.DecodeFrames)
+    graft.pipeline.TransactionAvro.functionDescriptions.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => graft.plans.DecodeFrames.DecodeStrategy)
   }
 }

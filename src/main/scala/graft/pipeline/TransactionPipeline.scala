@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -76,13 +76,12 @@ object TransactionPipeline {
     * plus topic/partition/offset metadata) → typed Transaction columns.
     * The broker-less test tier drives this directly on framed fixture
     * bytes, which is exactly what both `.load()` paths feed it.
+    * `resolver` maps frame ids to writer schemas (by default the two
+    * registered subjects).
     */
-  def decodeValues(kafkaDf: DataFrame): DataFrame = {
-    TransactionAvro.registerUdfs(kafkaDf.sparkSession)
-    kafkaDf
-      .select(call_udf("decode_transaction", col("value")).as("t"))
-      .select(col("t.*"))
-  }
+  def decodeValues(kafkaDf: DataFrame,
+      resolver: TransactionAvro.SchemaResolver = TransactionAvro.DefaultResolver): DataFrame =
+    decode(kafkaDf, permissive = false, resolver)
 
   /** Quarantine twin of [[decodeValues]] (the q23b pattern at the ingest
     * edge): every frame decodes permissively into (`t` struct,
@@ -90,13 +89,22 @@ object TransactionPipeline {
     * carry their error and raw bytes as a dead-letter row instead of
     * failing the batch. Split with [[goodRows]] / [[deadLetters]].
     */
-  def decodeValuesPermissive(kafkaDf: DataFrame): DataFrame = {
-    TransactionAvro.registerUdfs(kafkaDf.sparkSession)
-    kafkaDf
-      .select(col("value"),
-        call_udf("decode_transaction_safe", col("value")).as("r"))
-      .select(col("r.t").as("t"), col("value").as("frame"),
-        col("r.error").as("decode_error"))
+  def decodeValuesPermissive(kafkaDf: DataFrame,
+      resolver: TransactionAvro.SchemaResolver = TransactionAvro.DefaultResolver): DataFrame =
+    decode(kafkaDf, permissive = true, resolver)
+
+  /** Both decode forms: one [[graft.plans.DecodeFrames]] node over the
+    * `value` column, so each frame is decoded once, before any filter.
+    */
+  private def decode(kafkaDf: DataFrame, permissive: Boolean,
+      resolver: TransactionAvro.SchemaResolver): DataFrame = {
+    val spark = kafkaDf.sparkSession
+    TransactionAvro.registerUdfs(spark)
+    val plan = kafkaDf.queryExecution.analyzed
+    val value = plan.output.find(a => spark.sessionState.conf.resolver(a.name, "value"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no value column in ${plan.output.mkString(", ")}"))
+    GraftSqlShim.ofRows(spark, graft.plans.DecodeFrames(value, permissive, resolver, plan))
   }
 
   /** Successfully decoded rows of a [[decodeValuesPermissive]] frame. */

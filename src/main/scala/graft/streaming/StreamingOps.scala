@@ -2306,11 +2306,6 @@ object StreamingOps {
     }
   }
 
-  /** The one shared OUTER changelog-join replay per (process, dir):
-    * the left gate's thinned fixture through
-    * [[ChangelogOuterJoinMultiProcessor]], memoized as a parquet PATH;
-    * the left/full gates slice their tag.
-    */
   /** The inner changelog-join replay, memoized as a parquet PATH —
     * dedicated, DELIBERATELY not folded into the outer-join multi
     * replay: the inner machine emits ~an order of magnitude more delta
@@ -2332,6 +2327,11 @@ object StreamingOps {
     s.read.parquet(changelogOuterPath(s, dir))
   }
 
+  /** The one shared OUTER changelog-join replay per (process, dir):
+    * the left gate's thinned fixture through
+    * [[ChangelogOuterJoinMultiProcessor]], memoized as a parquet PATH;
+    * the left/full gates slice their tag.
+    */
   private def changelogOuterPath(s: SparkSession, dir: String): String =
     memoFixture("changelog_outer_join_replay_path", dir) {
       import s.implicits._
@@ -4079,21 +4079,22 @@ object StreamingOps {
     // re-touches the accumulated per-side state, so batch count is the
     // replay's cost driver; one seam already proves the cross-batch
     // match path (a pair whose sides arrive in different batches)
-    val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
-    halves.foreach { chunk =>
-      val lc = chunk.filter(_.event_type == leftType)
-      val rc = chunk.filter(_.event_type == rightType)
-      if (lc.nonEmpty) l.addData(lc.toSeq)
-      if (rc.nonEmpty) r.addData(rc.toSeq)
-      q.processAllAvailable()
-    }
-    // outer joins emit their null-padded rows only at watermark
-    // passage: the flush row advances BOTH sides past every
-    // interval's expiry so the unmatched state drains
-    flush.foreach { f =>
-      l.addData(Seq(f)); r.addData(Seq(f)); q.processAllAvailable()
-    }
-    q.stop()
+    try {
+      val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
+      halves.foreach { chunk =>
+        val lc = chunk.filter(_.event_type == leftType)
+        val rc = chunk.filter(_.event_type == rightType)
+        if (lc.nonEmpty) l.addData(lc.toSeq)
+        if (rc.nonEmpty) r.addData(rc.toSeq)
+        q.processAllAvailable()
+      }
+      // outer joins emit their null-padded rows only at watermark
+      // passage: the flush row advances BOTH sides past every
+      // interval's expiry so the unmatched state drains
+      flush.foreach { f =>
+        l.addData(Seq(f)); r.addData(Seq(f)); q.processAllAvailable()
+      }
+    } finally q.stop()
     outDir
   }
 
@@ -4153,16 +4154,17 @@ object StreamingOps {
           .outputMode("append").start()
       }
     }
-    val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
-    halves.foreach { chunk =>
-      srcs.foreach(_.addData(chunk.toSeq))
-      qs.foreach(_.processAllAvailable())
-    }
-    flush.foreach { f =>
-      srcs.foreach(_.addData(Seq(f)))
-      qs.foreach(_.processAllAvailable())
-    }
-    qs.foreach(_.stop())
+    try {
+      val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
+      halves.foreach { chunk =>
+        srcs.foreach(_.addData(chunk.toSeq))
+        qs.foreach(_.processAllAvailable())
+      }
+      flush.foreach { f =>
+        srcs.foreach(_.addData(Seq(f)))
+        qs.foreach(_.processAllAvailable())
+      }
+    } finally qs.foreach(_.stop())
     outs
   }
 
@@ -4624,12 +4626,13 @@ object StreamingOps {
         }
         .outputMode(mode).start()
     }
-    val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
-    halves.foreach { chunk =>
-      src.addData(chunk.toSeq); q.processAllAvailable()
-    }
-    if (flush.nonEmpty) { src.addData(flush); q.processAllAvailable() }
-    q.stop()
+    try {
+      val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
+      halves.foreach { chunk =>
+        src.addData(chunk.toSeq); q.processAllAvailable()
+      }
+      if (flush.nonEmpty) { src.addData(flush); q.processAllAvailable() }
+    } finally q.stop()
     outDir
   }
 
