@@ -1492,19 +1492,8 @@ object StreamingOps {
     * The DuckDB oracle ranks the definitional net state directly.
     */
   def retractTopNGate(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    import s.implicits._
-    // n == 3 (the gate's only binding) slices the shared agg/Top-N
-    // replay; any other n keeps the dedicated single-machine replay
-    val snaps =
-      if (n == 3)
-        changelogAggTopnReplayed(s, dir).filter(col("tag") === 1)
-          .select(col("group"), col("ver"), col("rk"), col("id"),
-            col("value_c"))
-      else {
-        val fixture = changelogFixture(s, dir)
-        s.read.parquet(replayTypedPath(s, fixture, Nil, "update")(ds =>
-          retractTopNStream(ds, n).toDF()))
-      }
+    warmStreamReplays(s, dir)
+    val snaps = s.read.parquet(changelogTopnPath(s, dir, n))
     snaps.withColumn("__mx", max(col("ver")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("group"))))
       .filter(col("ver") === col("__mx") && col("rk") > 0)
@@ -1657,40 +1646,6 @@ object StreamingOps {
   final case class JoinDelta(op: String, group: Long, l_id: Long,
       r_id: Long, l_val: Long, r_val: Long)
 
-  /** CHANGELOG EQUI-JOIN — the join member of the retraction family
-    * (Flink's streaming regular join over two upsert/changelog inputs:
-    * `StreamingJoinOperator` with retraction), completing the chain
-    * changelog source → normalize → JOIN → retract agg → retract
-    * Top-N. Both inputs are keyed I/U/D changelogs in the upsert wire
-    * shape (key + new value or tombstone, no old value); the output is
-    * itself a changelog of joined rows:
-    *
-    *   - a new/updated row on one side emits D-deltas against the
-    *     other side's live rows for its PRIOR value (if any) and
-    *     I-deltas for its new value — an update is its own retraction;
-    *   - a delete emits only the D-deltas;
-    *   - an idempotent update (same value re-sent) emits nothing
-    *     (the normalize-stage dedup — without it every no-op U would
-    *     churn |other side| rows downstream);
-    *   - a delete of an unknown id is a silent no-op (at-least-once
-    *     producers re-send tombstones).
-    *
-    * The fold contract: summing +1 ("I") / −1 ("D") per distinct
-    * (group, l_id, r_id, l_val, r_val) row yields exactly the join of
-    * the two sides' net states, because every delta batch is the exact
-    * symmetric difference of consecutive join states (the spec and the
-    * `stream_changelog_join` gate both pin this against the
-    * definitional net-state join).
-    *
-    * State is the two live maps — O(live ids) per group per side, the
-    * same irreducible materialization Flink's streaming join holds —
-    * and per-op emission is O(|other side's live set|), the inherent
-    * changelog-join cost. The processor keys by `group`, which IS the
-    * equi-join key, so state shards exactly as the join requires; a
-    * hot join key concentrates its two live maps on one task in any
-    * engine (the skew remedy is upstream key salting plus re-merge,
-    * as in the batch salted join — out of scope here).
-    */
   /** Delta row of the LEFT OUTER changelog join: `r_id`/`r_val` are
     * None on the null-padded rows an unmatched left side emits.
     */
@@ -1831,27 +1786,9 @@ object StreamingOps {
     * included. NULLS LAST ordering on both engines.
     */
   def changelogLeftJoinGate(s: SparkSession, dir: String): DataFrame = {
-    // slice of the shared OUTER-join replay (left + full machines over
-    // the shared thinned fixture; the inner gate keeps its dedicated
-    // replay — measured: folding its high-volume delta channel into
-    // the union row cost more than the saved lifecycles)
-    val deltas = changelogOuterJoinReplayed(s, dir).filter(col("tag") === 1)
-    val folded = deltas
-      .groupBy(col("group").as("grp"), col("l_id"), col("r_id"),
-        col("l_val"), col("r_val"))
-      .agg(sum(when(col("op") === "I", 1L).otherwise(-1L)).as("m"))
-      // one fold computation serves both the multiplicity assert and
-      // the returned slice (the assert's collect used to re-run the
-      // whole delta aggregation a second time under the noop sink)
-      .localCheckpoint(true)
-    val badRows = folded.filter(col("m") =!= 0L && col("m") =!= 1L)
-      .limit(5).collect()
-    require(badRows.isEmpty,
-      s"left-outer changelog join fold produced multiplicity outside " +
-        s"{0,1}: ${badRows.mkString(", ")}")
-    folded.filter(col("m") === 1L)
-      .select(col("grp"), col("l_id"), col("r_id"),
-        col("l_val"), col("r_val"))
+    warmStreamReplays(s, dir)
+    foldJoinDeltas(s.read.parquet(changelogLeftPath(s, dir)),
+        "left-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc,
         col("r_id").asc_nulls_last)
   }
@@ -1987,29 +1924,47 @@ object StreamingOps {
     * directions; folded deltas ≡ DuckDB's net-state FULL JOIN.
     */
   def changelogFullJoinGate(s: SparkSession, dir: String): DataFrame = {
-    // slice of the shared OUTER-join replay: the full machine applies
-    // its extra fixture cut (group 2's left side) row-locally
-    val deltas = changelogOuterJoinReplayed(s, dir).filter(col("tag") === 2)
-    val folded = deltas
-      .groupBy(col("group").as("grp"), col("l_id"), col("r_id"),
-        col("l_val"), col("r_val"))
-      .agg(sum(when(col("op") === "I", 1L).otherwise(-1L)).as("m"))
-      // one fold computation serves both the multiplicity assert and
-      // the returned slice (the assert's collect used to re-run the
-      // whole delta aggregation a second time under the noop sink)
-      .localCheckpoint(true)
-    val badRows = folded.filter(col("m") =!= 0L && col("m") =!= 1L)
-      .limit(5).collect()
-    require(badRows.isEmpty,
-      s"full-outer changelog join fold produced multiplicity outside " +
-        s"{0,1}: ${badRows.mkString(", ")}")
-    folded.filter(col("m") === 1L)
-      .select(col("grp"), col("l_id"), col("r_id"),
-        col("l_val"), col("r_val"))
+    warmStreamReplays(s, dir)
+    foldJoinDeltas(s.read.parquet(changelogFullPath(s, dir)),
+        "full-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc_nulls_last,
         col("r_id").asc_nulls_last)
   }
 
+  /** CHANGELOG EQUI-JOIN — the join member of the retraction family
+    * (Flink's streaming regular join over two upsert/changelog inputs:
+    * `StreamingJoinOperator` with retraction), completing the chain
+    * changelog source → normalize → JOIN → retract agg → retract
+    * Top-N. Both inputs are keyed I/U/D changelogs in the upsert wire
+    * shape (key + new value or tombstone, no old value); the output is
+    * itself a changelog of joined rows:
+    *
+    *   - a new/updated row on one side emits D-deltas against the
+    *     other side's live rows for its PRIOR value (if any) and
+    *     I-deltas for its new value — an update is its own retraction;
+    *   - a delete emits only the D-deltas;
+    *   - an idempotent update (same value re-sent) emits nothing
+    *     (the normalize-stage dedup — without it every no-op U would
+    *     churn |other side| rows downstream);
+    *   - a delete of an unknown id is a silent no-op (at-least-once
+    *     producers re-send tombstones).
+    *
+    * The fold contract: summing +1 ("I") / −1 ("D") per distinct
+    * (group, l_id, r_id, l_val, r_val) row yields exactly the join of
+    * the two sides' net states, because every delta batch is the exact
+    * symmetric difference of consecutive join states (the spec and the
+    * `stream_changelog_join` gate both pin this against the
+    * definitional net-state join).
+    *
+    * State is the two live maps — O(live ids) per group per side, the
+    * same irreducible materialization Flink's streaming join holds —
+    * and per-op emission is O(|other side's live set|), the inherent
+    * changelog-join cost. The processor keys by `group`, which IS the
+    * equi-join key, so state shards exactly as the join requires; a
+    * hot join key concentrates its two live maps on one task in any
+    * engine (the skew remedy is upstream key salting plus re-merge,
+    * as in the batch salted join — out of scope here).
+    */
   class ChangelogJoinProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, SideOp, JoinDelta] {
@@ -2121,198 +2076,8 @@ object StreamingOps {
         .as[SideOp].orderBy(col("seq")).collect().toIndexedSeq
     }
 
-  /** Tagged union row of the outer changelog-join machines' deltas
-    * (tag 1 left-outer / 2 full-outer); the nullable sides cover both
-    * shapes — the left slice pads only the right side, the full slice
-    * either.
-    */
-  final case class JoinMultiDelta(tag: Int, op: String, group: Long,
-    l_id: Option[Long], r_id: Option[Long],
-    l_val: Option[Long], r_val: Option[Long])
-
-  /** ONE processor running BOTH outer changelog-join machines
-    * (left-outer and full-outer) over the shared thinned SideOp replay
-    * — the CEP multi-machine consolidation applied to the join
-    * family's outer half (r17 optimization): the two gates' fixtures
-    * differ only by the full gate's extra ROW-LOCAL cut (group 2's
-    * left side), so the replay feeds the left gate's fixture and the
-    * full machine guards that cut inside the processor; each machine
-    * keeps its own maps/counters, logic transcribed verbatim from the
-    * single-machine processors (state names suffixed). Contiguous-
-    * halves batching preserves each machine's seq-ordered op sequence,
-    * so emissions are per-machine identical and only their batch
-    * placement moves — invisible to the gates' fold + orderBy. One
-    * state-store lifecycle instead of two; outputs re-dumped
-    * bit-identical at sf0.01. (The INNER machine stays on its own
-    * replay — its unthinned delta volume made the tagged union row a
-    * measured net loss; see changelogJoinGate.)
-    */
-  class ChangelogOuterJoinMultiProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, SideOp, JoinMultiDelta] {
-    @transient private var lmap1:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rmap1:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rcount1:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var lmap2:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rmap2:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var counts2:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      def mkMap(name: String) = getHandle.getMapState[Long, Long](name,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      lmap1 = mkMap("lmap1"); rmap1 = mkMap("rmap1")
-      lmap2 = mkMap("lmap2"); rmap2 = mkMap("rmap2")
-      rcount1 = getHandle.getValueState[Long]("rcount1",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      counts2 = getHandle.getValueState[(Long, Long)]("counts2",
-        org.apache.spark.sql.Encoders.kryo[(Long, Long)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[SideOp],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[JoinMultiDelta] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[JoinMultiDelta]
-      var rc1 = if (rcount1.exists()) rcount1.get() else 0L
-      var (lc2, rc2) = if (counts2.exists()) counts2.get() else (0L, 0L)
-      def priorNext(own: org.apache.spark.sql.streaming.MapState[Long, Long],
-          r: SideOp): (Option[Long], Option[Long]) = {
-        val prior = if (own.containsKey(r.id)) Some(own.getValue(r.id))
-                    else None
-        val next = r.op match {
-          case "I" | "U" => Some(r.value_c)
-          case "D"       => None
-          case bad => throw new IllegalArgumentException(
-            s"changelog multi-join: unknown op '$bad' (want I/U/D)")
-        }
-        (prior, next)
-      }
-      def commit(own: org.apache.spark.sql.streaming.MapState[Long, Long],
-          id: Long, next: Option[Long]): Unit = next match {
-        case Some(v) => own.updateValue(id, v)
-        case None    => own.removeKey(id)
-      }
-      rows.toSeq.sortBy(_.seq).foreach { r =>
-        val isLeft = r.side == "L"
-        require(isLeft || r.side == "R",
-          s"changelog multi-join: unknown side '${r.side}' (want L/R)")
-        // machine 1 (left-outer) — every replayed row (the replay
-        // already feeds the left gate's thinned fixture)
-        locally {
-          val own = if (isLeft) lmap1 else rmap1
-          val (prior, next) = priorNext(own, r)
-          if (prior != next) {
-            if (isLeft) {
-              if (rc1 == 0L) {
-                prior.foreach(v => out += JoinMultiDelta(1, "D", key,
-                  Some(r.id), None, Some(v), None))
-                next.foreach(v => out += JoinMultiDelta(1, "I", key,
-                  Some(r.id), None, Some(v), None))
-              } else {
-                val rights = rmap1.iterator().toList
-                prior.foreach(v => rights.foreach { case (rid, rv) =>
-                  out += JoinMultiDelta(1, "D", key, Some(r.id), Some(rid),
-                    Some(v), Some(rv))
-                })
-                next.foreach(v => rights.foreach { case (rid, rv) =>
-                  out += JoinMultiDelta(1, "I", key, Some(r.id), Some(rid),
-                    Some(v), Some(rv))
-                })
-              }
-            } else {
-              lazy val lefts = lmap1.iterator().toList
-              if (rc1 == 0L && next.isDefined)
-                lefts.foreach { case (lid, lv) =>
-                  out += JoinMultiDelta(1, "D", key, Some(lid), None,
-                    Some(lv), None)
-                }
-              prior.foreach(v => lefts.foreach { case (lid, lv) =>
-                out += JoinMultiDelta(1, "D", key, Some(lid), Some(r.id),
-                  Some(lv), Some(v))
-              })
-              next.foreach(v => lefts.foreach { case (lid, lv) =>
-                out += JoinMultiDelta(1, "I", key, Some(lid), Some(r.id),
-                  Some(lv), Some(v))
-              })
-              if (rc1 == 1L && prior.isDefined && next.isEmpty)
-                lefts.foreach { case (lid, lv) =>
-                  out += JoinMultiDelta(1, "I", key, Some(lid), None,
-                    Some(lv), None)
-                }
-              if (prior.isEmpty && next.isDefined) rc1 += 1
-              if (prior.isDefined && next.isEmpty) rc1 -= 1
-            }
-            commit(own, r.id, next)
-          }
-        }
-        // machine 2 (full-outer) — its extra fixture cut, row-local
-        if (!(r.side == "L" && key == 2L)) {
-          val own = if (isLeft) lmap2 else rmap2
-          val other = if (isLeft) rmap2 else lmap2
-          val otherCount = if (isLeft) rc2 else lc2
-          val (prior, next) = priorNext(own, r)
-          def pad(padLeft: Boolean, op: String, id: Long, v: Long) =
-            if (padLeft) JoinMultiDelta(2, op, key, Some(id), None,
-              Some(v), None)
-            else JoinMultiDelta(2, op, key, None, Some(id), None, Some(v))
-          def pair(op: String, lid: Long, lv: Long, rid: Long, rv: Long) =
-            JoinMultiDelta(2, op, key, Some(lid), Some(rid),
-              Some(lv), Some(rv))
-          if (prior != next) {
-            if (otherCount == 0L) {
-              prior.foreach(v => out += pad(isLeft, "D", r.id, v))
-              next.foreach(v => out += pad(isLeft, "I", r.id, v))
-            } else {
-              val others = other.iterator().toList
-              def emit(op: String, v: Long): Unit = others.foreach {
-                case (oid, ov) =>
-                  out += (if (isLeft) pair(op, r.id, v, oid, ov)
-                          else pair(op, oid, ov, r.id, v))
-              }
-              if (prior.isEmpty && (if (isLeft) lc2 else rc2) == 0L)
-                others.foreach { case (oid, ov) =>
-                  out += pad(!isLeft, "D", oid, ov)
-                }
-              prior.foreach(emit("D", _))
-              next.foreach(emit("I", _))
-              if (next.isEmpty && (if (isLeft) lc2 else rc2) == 1L)
-                others.foreach { case (oid, ov) =>
-                  out += pad(!isLeft, "I", oid, ov)
-                }
-            }
-            val d = (prior, next) match {
-              case (None, Some(_)) => 1L
-              case (Some(_), None) => -1L
-              case _ => 0L
-            }
-            if (isLeft) lc2 += d else rc2 += d
-            commit(own, r.id, next)
-          }
-        }
-      }
-      rcount1.update(rc1)
-      counts2.update((lc2, rc2))
-      out.iterator
-    }
-  }
-
-  /** The inner changelog-join replay, memoized as a parquet PATH —
-    * dedicated, DELIBERATELY not folded into the outer-join multi
-    * replay: the inner machine emits ~an order of magnitude more delta
-    * rows than the outer machines (every op × the other side's live
-    * set over the UNTHINNED fixture), and the r17 consolidation trial
-    * measured the union-row (tagged, nullable) encoding of that
-    * channel at +4-6 s — more than two saved lifecycles are worth.
+  /** The inner changelog-join replay over the unthinned fixture,
+    * memoized as a parquet PATH.
     */
   private def changelogInnerPath(s: SparkSession, dir: String): String =
     memoFixture("changelog_inner_replay_path", dir) {
@@ -2321,59 +2086,71 @@ object StreamingOps {
         changelogJoinStream(ds).toDF())
     }
 
-  private def changelogOuterJoinReplayed(s: SparkSession,
-      dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
-    s.read.parquet(changelogOuterPath(s, dir))
-  }
-
-  /** The one shared OUTER changelog-join replay per (process, dir):
-    * the left gate's thinned fixture through
-    * [[ChangelogOuterJoinMultiProcessor]], memoized as a parquet PATH;
-    * the left/full gates slice their tag.
+  /** The outer gates' thinned fixture: every third op (the padding
+    * transitions stay exercised at a third of the replay cost), with
+    * group 3's right side removed so its left rows stay unmatched.
     */
-  private def changelogOuterPath(s: SparkSession, dir: String): String =
-    memoFixture("changelog_outer_join_replay_path", dir) {
+  private def outerJoinFixture(s: SparkSession, dir: String): Seq[SideOp] =
+    sideOpFixture(s, dir).filter(o =>
+      o.seq % 3 == 0 && !(o.side == "R" && o.group == 3L))
+
+  private def changelogLeftPath(s: SparkSession, dir: String): String =
+    memoFixture("changelog_left_replay_path", dir) {
       import s.implicits._
-      val fixture = sideOpFixture(s, dir).filter(o =>
-        o.seq % 3 == 0 && !(o.side == "R" && o.group == 3L))
+      replayTypedPath(s, outerJoinFixture(s, dir), Nil, "append")(ds =>
+        changelogLeftJoinStream(ds).toDF())
+    }
+
+  /** The full-outer replay also drops group 2's left side, so padding
+    * survives in both directions.
+    */
+  private def changelogFullPath(s: SparkSession, dir: String): String =
+    memoFixture("changelog_full_replay_path", dir) {
+      import s.implicits._
+      val fixture = outerJoinFixture(s, dir)
+        .filter(o => !(o.side == "L" && o.group == 2L))
       replayTypedPath(s, fixture, Nil, "append")(ds =>
-        ds.groupByKey(_.group)
-          .transformWithState(new ChangelogOuterJoinMultiProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF())
+        changelogFullJoinStream(ds).toDF())
     }
 
   /** stream_changelog_join gate — two events-derived changelogs (left:
     * even event_ids folded to 13 id slots, right: odd folded to 11,
     * groups = user_id mod 4, same op mapping as
     * [[changelogFromEvents]]) interleaved by seq and replayed in 2
-    * micro-batches; the emitted deltas fold by signed count and must
-    * equal DuckDB's definitional net-state join. Fully-cancelled rows
-    * (sum 0) must vanish — the fold asserts no other multiplicity
-    * arises (any sum outside {0, 1} would be a dropped or duplicated
-    * retraction and fails loudly rather than filtering silently).
+    * micro-batches; the emitted deltas fold by signed count
+    * ([[foldJoinDeltas]]) and must equal DuckDB's definitional
+    * net-state join.
     */
   def changelogJoinGate(s: SparkSession, dir: String): DataFrame = {
     warmStreamReplays(s, dir)
-    val deltas = s.read.parquet(changelogInnerPath(s, dir))
+    foldJoinDeltas(s.read.parquet(changelogInnerPath(s, dir)),
+        "changelog join")
+      .orderBy(col("grp"), col("l_id"), col("r_id"))
+  }
+
+  /** Signed-count fold shared by the changelog-join gates: summing +1
+    * ("I") / −1 ("D") per distinct joined row leaves multiplicity 1 on
+    * exactly the join of the two sides' net states. Any multiplicity
+    * outside {0, 1} is a dropped or duplicated retraction and fails
+    * loudly rather than filtering silently.
+    */
+  private def foldJoinDeltas(deltas: DataFrame, join: String): DataFrame = {
     val folded = deltas
       .groupBy(col("group").as("grp"), col("l_id"), col("r_id"),
         col("l_val"), col("r_val"))
       .agg(sum(when(col("op") === "I", 1L).otherwise(-1L)).as("m"))
       // one fold computation serves both the multiplicity assert and
-      // the returned slice (see the outer gates' identical note)
+      // the returned slice (the assert's collect would otherwise re-run
+      // the whole delta aggregation a second time under the noop sink)
       .localCheckpoint(true)
-    val bad = folded.filter(col("m") =!= 0L && col("m") =!= 1L)
-    val badRows = bad.limit(5).collect()
+    val badRows = folded.filter(col("m") =!= 0L && col("m") =!= 1L)
+      .limit(5).collect()
     require(badRows.isEmpty,
-      s"changelog join fold produced multiplicity outside {0,1}: " +
+      s"$join fold produced multiplicity outside {0,1}: " +
         badRows.mkString(", "))
     folded.filter(col("m") === 1L)
       .select(col("grp"), col("l_id"), col("r_id"),
         col("l_val"), col("r_val"))
-      .orderBy(col("grp"), col("l_id"), col("r_id"))
   }
 
   /** STREAMING CEP — the live twin of [[graft.operators.Cep.cepMatchOf]]
@@ -2934,11 +2711,6 @@ object StreamingOps {
     }
   }
 
-  /** (user_id, ts_us, event_id, event_type, value_c) stream → tagged
-    * matches (spec index, match) from N machines over one shared
-    * buffer — see [[CepMultiStreamProcessor]]. Each spec validates
-    * exactly as its single-machine form would.
-    */
   /** The FULL multi-pattern channel: tagged [[graft.operators.Cep
     * .CepMeasured]] rows — tag i = spec i's matches as step = −1
     * SHELLS, tag i + [[CepTimeoutTag]] = its window-expired partials,
@@ -2990,6 +2762,11 @@ object StreamingOps {
         org.apache.spark.sql.streaming.OutputMode.Append())
   }
 
+  /** (user_id, ts_us, event_id, event_type, value_c) stream → tagged
+    * matches (spec index, match) from N machines over one shared
+    * buffer — see [[CepMultiStreamProcessor]]. Each spec validates
+    * exactly as its single-machine form would.
+    */
   def cepStreamMulti(events: Dataset[(Long, Long, Long, String, Long)],
       specs: Seq[CepSpec],
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None)
@@ -3132,131 +2909,9 @@ object StreamingOps {
     * The DuckDB oracle computes the same answer definitionally: last
     * op per (group, id) by seq, deletes removed, SUM/COUNT per group.
     */
-  /** Tagged union row of the changelog aggregate (tag 0: ver/sum_c/cnt)
-    * and retractable Top-N (tag 1: ver/rk/id/value_c) snapshots.
-    */
-  final case class AggTopnRow(tag: Int, group: Long, ver: Long,
-    sum_c: Long, cnt: Long, rk: Long, id: Long, value_c: Long)
-
-  /** ONE processor running the changelog aggregate AND the retractable
-    * Top-N over the shared ChangeOp replay (r17 optimization, the CEP
-    * multi-machine accounting): both machines keep the SAME
-    * id → last-value live map — the irreducible retraction state — so
-    * the combined form stores it once and keeps each machine's own
-    * accumulator/podium + version counter. Per-machine snapshot
-    * sequences are exactly the single-machine processors' (bodies
-    * transcribed, including the Top-N dirty check); one state-store
-    * lifecycle instead of two. Outputs re-dumped bit-identical.
-    */
-  class ChangelogAggTopnProcessor(n: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, ChangeOp, AggTopnRow] {
-    @transient private var live:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var acc:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long, Long)] = _
-    @transient private var podium:
-      org.apache.spark.sql.streaming.ValueState[
-        (Long, List[(Long, Long)])] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      live = getHandle.getMapState[Long, Long]("live",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      acc = getHandle.getValueState[(Long, Long, Long)]("acc",
-        org.apache.spark.sql.Encoders.kryo[(Long, Long, Long)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      podium = getHandle.getValueState[(Long, List[(Long, Long)])]("podium",
-        org.apache.spark.sql.Encoders.kryo[(Long, List[(Long, Long)])],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[ChangeOp],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[AggTopnRow] = {
-      val (aver, sum0, cnt0) = if (acc.exists()) acc.get() else (0L, 0L, 0L)
-      var sum = sum0; var cnt = cnt0
-      val (tver, top) = if (podium.exists()) podium.get() else (0L, Nil)
-      val topIds = top.map(_._1).toSet
-      val nthVal = if (top.length >= n) top.map(_._2).min else Long.MinValue
-      var dirty = !podium.exists()
-      rows.toSeq.sortBy(_.seq).foreach { r =>
-        val prior = if (live.containsKey(r.id)) Some(live.getValue(r.id))
-                    else None
-        r.op match {
-          case "I" | "U" =>
-            prior match {
-              case Some(old) => sum += r.value_c - old
-              case None      => sum += r.value_c; cnt += 1
-            }
-            live.updateValue(r.id, r.value_c)
-            if (r.value_c >= nthVal || topIds.contains(r.id) ||
-                top.length < n) dirty = true
-          case "D" =>
-            prior.foreach { old =>
-              sum -= old; cnt -= 1; live.removeKey(r.id)
-              if (topIds.contains(r.id)) dirty = true
-            }
-          case other =>
-            throw new IllegalArgumentException(
-              s"changelog agg+topn: unknown op '$other' (want I/U/D)")
-        }
-      }
-      val aggOut: Iterator[AggTopnRow] =
-        if (sum == sum0 && cnt == cnt0 && acc.exists()) Iterator.empty
-        else {
-          acc.update((aver + 1, sum, cnt))
-          Iterator.single(AggTopnRow(0, key, aver + 1, sum, cnt, 0L, 0L, 0L))
-        }
-      val topOut: Iterator[AggTopnRow] =
-        if (!dirty) Iterator.empty
-        else {
-          val ranked = live.iterator().toList
-            .sortBy { case (id, v) => (-v, id) }.take(n)
-          if (podium.exists() && ranked == top) Iterator.empty
-          else {
-            podium.update((tver + 1, ranked))
-            if (ranked.isEmpty)
-              Iterator.single(AggTopnRow(1, key, tver + 1, 0L, 0L,
-                0L, -1L, 0L))
-            else ranked.zipWithIndex.iterator.map { case ((id, v), i) =>
-              AggTopnRow(1, key, tver + 1, 0L, 0L, i + 1L, id, v)
-            }
-          }
-        }
-      aggOut ++ topOut
-    }
-  }
-
-  /** The one shared changelog agg/Top-N replay per (process, dir):
-    * the ChangeOp fixture through [[ChangelogAggTopnProcessor]],
-    * memoized as a parquet PATH; the two gates slice their tag.
-    */
-  private def changelogAggTopnReplayed(s: SparkSession,
-      dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
-    s.read.parquet(changelogAggTopnPath(s, dir))
-  }
-
-  private def changelogAggTopnPath(s: SparkSession, dir: String): String =
-    memoFixture("changelog_aggtopn_replay_path", dir) {
-      import s.implicits._
-      replayTypedPath(s, changelogFixture(s, dir), Nil, "update")(ds =>
-        ds.groupByKey(_.group)
-          .transformWithState(new ChangelogAggTopnProcessor(3),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF())
-    }
-
   def changelogAggGate(s: SparkSession, dir: String): DataFrame = {
-    // slice of the shared agg/Top-N replay (fixture-sized driver
-    // materialization lives in the replay builder; the operator itself
-    // stays a fully distributed transformWithState)
-    val snaps = changelogAggTopnReplayed(s, dir).filter(col("tag") === 0)
-      .select(col("group"), col("ver"), col("sum_c"), col("cnt"))
+    warmStreamReplays(s, dir)
+    val snaps = s.read.parquet(changelogAggPath(s, dir))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group")).orderBy(col("ver").desc)
     snaps.withColumn("__rn", row_number().over(w))
@@ -3266,6 +2921,21 @@ object StreamingOps {
       .select(col("group").as("grp"), col("sum_c"), col("cnt"))
       .orderBy(col("grp"))
   }
+
+  private def changelogAggPath(s: SparkSession, dir: String): String =
+    memoFixture("changelog_agg_replay_path", dir) {
+      import s.implicits._
+      replayTypedPath(s, changelogFixture(s, dir), Nil, "update")(ds =>
+        changelogAggStream(ds).toDF())
+    }
+
+  private def changelogTopnPath(s: SparkSession, dir: String,
+      n: Int): String =
+    memoFixture("changelog_topn_replay_path", s"$dir|$n") {
+      import s.implicits._
+      replayTypedPath(s, changelogFixture(s, dir), Nil, "update")(ds =>
+        retractTopNStream(ds, n).toDF())
+    }
 
   /** One row of the unioned temporal-join input. `side` tags which
     * stream the row belongs to:
@@ -3590,185 +3260,38 @@ object StreamingOps {
     * oracle is the identical batch frame in DuckDB:
     * `ROWS BETWEEN 3 PRECEDING AND CURRENT ROW` over (ts, id).
     */
-  def rowsOverGate(s: SparkSession, dir: String): DataFrame =
-    // slice of the shared OVER replay (r17 optimization): tag 0 is the
-    // ROWS-frame machine's output, bit-identical to the dedicated
-    // [[rowsOverStream]] replay (the flush row still emits and is cut
-    // by its sentinel id)
-    overMultiReplayed(s, dir).filter(col("tag") === 0 && col("id") =!= -1L)
-      .select(col("key").as("k"), col("ts_us"), col("id"),
-        col("value_l").as("value_c"), col("sum_l").as("sum_w"),
-        col("cnt").as("cnt_w"))
-      .orderBy(col("k"), col("ts_us"), col("id"))
-
-  /** Tagged union row of the two OVER machines' per-event aggregates
-    * (tag 0 ROWS frame, integer channel; tag 1 RANGE frame, double
-    * channel).
-    */
-  final case class OverMultiRow(tag: Int, key: Long, ts_us: Long, id: Long,
-    value_l: Long, sum_l: Long, value_d: Double, sum_d: Double, cnt: Long)
-
-  /** ONE processor running BOTH bounded-OVER machines (the n = 3
-    * ROWS-frame deque and the 10-minute RANGE-frame prefix-sum drain)
-    * over the shared (ts, id)-ordered fixture (r17 optimization): the
-    * two gates buffered the SAME rows in two state stores and drained
-    * them at the SAME watermark instants. Each machine's drain logic is
-    * the single-machine processor's transcribed verbatim (the RANGE
-    * machine consumes value_c widened to double exactly as its gate's
-    * driver-side map did); the late-row guard and drained frontier are
-    * shared because their trajectories are identical. One state-store
-    * lifecycle instead of two; outputs re-dumped bit-identical.
-    */
-  class OverMultiProcessor(n: Int, windowUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, Long), OverMultiRow] with MinTimerChain {
-    // ROWS machine: undrained rows per instant + the (n+1)-deep deque
-    @transient private var buf:
-      org.apache.spark.sql.streaming.MapState[Long, List[(Long, Long)]] = _
-    @transient private var deque:
-      org.apache.spark.sql.streaming.ValueState[List[(Long, Long, Long)]] = _
-    // RANGE machine: per-instant (sum, cnt, unemitted rows) — aggregates
-    // outlive emission (later windows still read them)
-    @transient private var content:
-      org.apache.spark.sql.streaming.MapState[Long,
-        (Double, Long, List[(Long, Double)])] = _
-    // shared drained frontier: both machines advance it to the same
-    // watermark at every fire
-    @transient private var drained:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      buf = getHandle.getMapState[Long, List[(Long, Long)]]("buf",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.kryo[List[(Long, Long)]],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      deque = getHandle.getValueState[List[(Long, Long, Long)]]("deque",
-        org.apache.spark.sql.Encoders.kryo[List[(Long, Long, Long)]],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      content = getHandle.getMapState[Long,
-        (Double, Long, List[(Long, Double)])]("content",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.kryo[(Double, Long, List[(Long, Double)])],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      drained = getHandle.getValueState[Long]("drained",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      initTimerChain()
-    }
-
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Long, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[OverMultiRow] = {
-      val frontier = if (drained.exists()) drained.get() else Long.MinValue
-      val wmMs = timerValues.getCurrentWatermarkInMs()
-      val lateBelow =
-        if (wmMs > 0L) math.max(frontier, wmMs * 1000L) else frontier
-      var batchMin = Long.MaxValue
-      rows.foreach { case (_, ts, id, v) =>
-        if (ts > lateBelow) {
-          val cur = if (buf.containsKey(ts)) buf.getValue(ts) else Nil
-          buf.updateValue(ts, (id, v) :: cur)
-          val (s, c, rs) =
-            if (content.containsKey(ts)) content.getValue(ts)
-            else (0.0, 0L, Nil)
-          content.updateValue(ts,
-            (s + v.toDouble, c + 1, (id, v.toDouble) :: rs))
-          if (ts < batchMin) batchMin = ts
-        }
-      }
-      if (batchMin != Long.MaxValue) armChainUs(batchMin)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo):
-        Iterator[OverMultiRow] = {
-      val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-      chainFired(expiredTimerInfo.getExpiryTimeInMs())
-      val already = if (drained.exists()) drained.get() else Long.MinValue
-      if (wmUs <= already) {
-        rearmChainFrom(buf.keys())
-        Iterator.empty
-      } else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[OverMultiRow]
-        var mnU = Long.MaxValue
-        // ROWS machine drain (tag 0)
-        var dq = if (deque.exists()) deque.get() else Nil
-        buf.iterator().toList.sortBy(_._1).foreach { case (ts, pending) =>
-          if (ts <= wmUs && pending.nonEmpty) {
-            pending.sortBy(_._1).foreach { case (id, v) =>
-              dq = ((ts, id, v) :: dq).take(n + 1)
-              out += OverMultiRow(0, key, ts, id, v, dq.map(_._3).sum,
-                0.0, 0.0, dq.length)
-            }
-            buf.removeKey(ts)
-          } else if (ts > wmUs && ts < mnU) mnU = ts
-        }
-        deque.update(dq)
-        // RANGE machine drain (tag 1): one O(content) prefix-sum pass
-        val arr = content.iterator().toList.sortBy(_._1).toArray
-        val m = arr.length
-        val ps = new Array[Double](m + 1)
-        val pc = new Array[Long](m + 1)
-        var i = 0
-        while (i < m) {
-          ps(i + 1) = ps(i) + arr(i)._2._1
-          pc(i + 1) = pc(i) + arr(i)._2._2
-          i += 1
-        }
-        var lo = 0
-        var j = 0
-        while (j < m) {
-          val (ts, (_, _, pending)) = arr(j)
-          if (ts <= wmUs && pending.nonEmpty) {
-            while (arr(lo)._1 < ts - windowUs) lo += 1
-            val sum = ps(j + 1) - ps(lo)
-            val cnt = pc(j + 1) - pc(lo)
-            pending.reverse.foreach { case (id, v) =>
-              out += OverMultiRow(1, key, ts, id, 0L, 0L, v, sum, cnt)
-            }
-            val kept = content.getValue(ts)
-            content.updateValue(ts, (kept._1, kept._2, Nil))
-          }
-          j += 1
-        }
-        arr.foreach(p =>
-          if (p._1 <= wmUs - windowUs) content.removeKey(p._1))
-        rearmChain(if (mnU == Long.MaxValue) None else Some(mnU))
-        drained.update(wmUs)
-        out.iterator
-      }
-    }
-  }
-
-  /** The one shared OVER-gate replay per (process, dir), memoized as a
-    * parquet PATH; the ROWS and RANGE gates slice their tag.
-    */
-  private def overMultiReplayed(s: SparkSession, dir: String): DataFrame = {
+  def rowsOverGate(s: SparkSession, dir: String): DataFrame = {
     warmStreamReplays(s, dir)
-    s.read.parquet(overMultiPath(s, dir))
+    s.read.parquet(rowsOverPath(s, dir)).filter(col("id") =!= -1L)
+      .select(col("key").as("k"), col("ts_us"), col("id"), col("value_c"),
+        col("sum_w"), col("cnt_w"))
+      .orderBy(col("k"), col("ts_us"), col("id"))
   }
 
-  private def overMultiPath(s: SparkSession, dir: String): String =
-    memoFixture("over_multi_replay_path", dir) {
+  /** The OVER gates' flush instant: 10 minutes past the last row, so
+    * the watermark passes every real instant (the gates cut the flush
+    * row's sentinel id −1).
+    */
+  private def overFlushTs(fixture: Seq[(Long, Long, Long, Long)]): Long =
+    fixture.map(_._2).max + 600000000L
+
+  private def rowsOverPath(s: SparkSession, dir: String): String =
+    memoFixture("rows_over_replay_path", dir) {
       import s.implicits._
       val fixture = overFixture(s, dir)
-      val flushTs = fixture.map(_._2).max + 600000000L
-      replayTypedPath(s, fixture,
-        Seq((0L, flushTs, -1L, 0L)), "append")(ds =>
-        ds.withColumn("ts", timestamp_micros(col("_2")))
-          .withWatermark("ts", "5 seconds")
-          .select(col("_1"), col("_2"), col("_3"), col("_4"))
-          .as[(Long, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new OverMultiProcessor(n = 3, windowUs = 600000000L),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF())
+      replayTypedPath(s, fixture, Seq((0L, overFlushTs(fixture), -1L, 0L)),
+        "append")(ds => rowsOverStream(ds, n = 3).toDF())
+    }
+
+  /** The RANGE replay widens cents to exact doubles before feeding. */
+  private def rangeOverPath(s: SparkSession, dir: String): String =
+    memoFixture("range_over_replay_path", dir) {
+      import s.implicits._
+      val cents = overFixture(s, dir)
+      val fixture =
+        cents.map { case (k, ts, id, v) => (k, ts, id, v.toDouble) }
+      replayTypedPath(s, fixture, Seq((0L, overFlushTs(cents), -1L, 0.0)),
+        "append")(ds => overWindowStream(ds, windowUs = 600000000L).toDF())
     }
 
   /** stream_over_range gate — the same replay harness through the r10
@@ -3777,16 +3300,14 @@ object StreamingOps {
     * ts_us. The RANGE form's driver gate upgrades it from the spec tier
     * the r10 verdict recorded.
     */
-  def rangeOverGate(s: SparkSession, dir: String): DataFrame =
-    // slice of the shared OVER replay: tag 1 is the RANGE-frame
-    // machine's output (cents widened to exact doubles INSIDE the
-    // combined processor, the same v.toDouble the dedicated fixture
-    // map applied driver-side)
-    overMultiReplayed(s, dir).filter(col("tag") === 1 && col("id") =!= -1L)
-      .select(col("key").as("k"), col("ts_us"), col("id"),
-        col("value_d").as("value_c"), col("sum_d").as("sum_w"),
-        col("cnt").as("cnt_w"))
+  def rangeOverGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
+    s.read.parquet(rangeOverPath(s, dir)).filter(col("event_id") =!= -1L)
+      .select(col("user_id").as("k"), col("ts_us"),
+        col("event_id").as("id"), col("value").as("value_c"),
+        col("sum_w"), col("cnt_w"))
       .orderBy(col("k"), col("ts_us"), col("id"))
+  }
 
   /** One fixture row for the streaming replay gates below — the events
     * schema the window/join operators consume, so `src.toDF()` drops
@@ -3884,11 +3405,8 @@ object StreamingOps {
   // cache never invalidates: regenerating testdata under the same dir
   // within one JVM would serve stale fixtures (never happens in the
   // driver/bench/spec harnesses, which start fresh JVMs per run).
-  // Delegates to [[graft.FixtureMemo]], which is NESTING-SAFE
-  // (get-then-putIfAbsent): cepMultiReplayed's builder calls
-  // gateEventsDayFolded — a second fixture on the same memo — and a
-  // nested insert inside computeIfAbsent throws "Recursive update"
-  // on JDK 9+ whenever the keys share a bin.
+  // Delegates to [[graft.FixtureMemo]], which is NESTING-SAFE: every
+  // replay path asks the same memo for its input fixture.
   private def memoFixture[T <: AnyRef](kind: String, dir: String)(
       build: => T): T =
     graft.FixtureMemo.of(kind, dir)(build)
@@ -3914,16 +3432,20 @@ object StreamingOps {
     */
   private[graft] def warmStreamReplays(s: SparkSession, dir: String): Unit = {
     memoFixture("stream_replay_pool", dir) {
-      val parts: Seq[(String, () => AnyRef)] = Seq(
+      runReplayPool(Seq(
         ("windowagg", () => windowAggPaths(s, dir)),
-        ("over", () => overMultiPath(s, dir)),
+        ("rows_over", () => rowsOverPath(s, dir)),
+        ("range_over", () => rangeOverPath(s, dir)),
         ("cep", () => cepMultiPath(s, dir)),
         ("interval", () => intervalFullPath(s, dir)),
         ("temporal", () => temporalLeftPath(s, dir)),
         ("changelog_inner", () => changelogInnerPath(s, dir)),
-        ("changelog_outer", () => changelogOuterPath(s, dir)),
-        ("changelog_aggtopn", () => changelogAggTopnPath(s, dir)),
-        ("ewma_cusum", () => ewmaCusumPath(s, dir)),
+        ("changelog_left", () => changelogLeftPath(s, dir)),
+        ("changelog_full", () => changelogFullPath(s, dir)),
+        ("changelog_agg", () => changelogAggPath(s, dir)),
+        ("changelog_topn", () => changelogTopnPath(s, dir, 3)),
+        ("ewma", () => ewmaPath(s, dir)),
+        ("cusum", () => cusumPath(s, dir)),
         ("sql_mr_fields", () => sqlMrFieldsPath(s, dir, 10)),
         ("attribution", () => attributionPath(s, dir)),
         ("topn", () => topnPath(s, dir)),
@@ -3932,41 +3454,38 @@ object StreamingOps {
         ("window_topn", () => windowTopnPath(s, dir)),
         ("window_join", () => windowJoinPath(s, dir)),
         ("late_obs", () => lateObsCount(s, dir)),
-        ("upsert", () => upsertStatePath(s, dir)))
-      val pool =
-        java.util.concurrent.Executors.newFixedThreadPool(parts.length)
-      val wall0 = System.nanoTime()
-      try {
-        val futures = parts.map { case (name, f) =>
-          name -> pool.submit(new java.util.concurrent.Callable[AnyRef] {
-            override def call(): AnyRef = {
-              val v = f()
-              // per-family completion offset from pool start — the
-              // breakdown that locates the pooled wall's critical path
-              // (stderr only; the bench keeps stdout near-silent)
-              System.err.println(f"[stream-pool] $name done at " +
-                f"${(System.nanoTime() - wall0) / 1e9}%.1f s")
-              v
-            }
-          })
-        }
-        // drain ALL futures before failing: a family that dies must
-        // not leave 17 half-fed queries running behind the exception
-        val errs = futures.flatMap { case (name, fu) =>
-          try { fu.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Some(name -> e.getCause)
-          }
-        }
-        errs.headOption.foreach { case (name, e) =>
-          throw new RuntimeException(
-            s"stream replay pool: family '$name' failed", e)
-        }
-      } finally pool.shutdown()
+        ("upsert", () => upsertStatePath(s, dir))))
       java.lang.Boolean.TRUE
     }
     ()
+  }
+
+  /** Run every `(family, build)` part on its own pool thread and wait
+    * for all of them. A part that throws is logged on stderr and
+    * otherwise ignored: its memo entry stays empty, so the family's
+    * own gate rebuilds it and fails with its own error, while every
+    * other family's output is kept.
+    */
+  private[graft] def runReplayPool(parts: Seq[(String, () => AnyRef)]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(parts.length)
+    val wall0 = System.nanoTime()
+    def at: String = f"${(System.nanoTime() - wall0) / 1e9}%.1f s"
+    try {
+      val futures = parts.map { case (name, f) =>
+        pool.submit(new Runnable {
+          // per-family completion offset from pool start — the
+          // breakdown that locates the pooled wall's critical path
+          // (stderr only; the bench keeps stdout near-silent)
+          override def run(): Unit = {
+            val outcome =
+              try { f(); "done" }
+              catch { case scala.util.control.NonFatal(e) => s"failed ($e)" }
+            System.err.println(s"[stream-pool] $name $outcome at $at")
+          }
+        })
+      }
+      futures.foreach(_.get())
+    } finally pool.shutdown()
   }
 
   /** Gate-harness conf scope shared by every streaming replay gate:
@@ -4022,17 +3541,9 @@ object StreamingOps {
       startFn: => T): T =
     gateConfLock.synchronized { withGateConfs(s, rocksdb)(startFn) }
 
-  /** Replay the fixture through `build` in 2 time-ordered micro-batches
-    * (+ an optional flush row that advances the watermark past every
-    * real window/session end), appending each batch's output to
-    * parquet; returns the accumulated output. Two batches, one seam:
-    * per-micro-batch state machinery is the replay's cost driver (the
-    * join harness measured 2x from the same cut), and one seam already
-    * exercises the cross-batch state path every gate needs; the specs
-    * own the finer-grained seam semantics.
-    */
-  /** Path-returning GateEv replay for the memoized day-folded
-    * single-input gates.
+  /** [[replayTypedPath]] over a day-folded GateEv fixture (+ an
+    * optional flush row that advances the watermark past every real
+    * window/session end) for the single-input DataFrame gates.
     */
   private def replayPath(s: SparkSession, fixture: IndexedSeq[GateEv],
       flush: Option[GateEv], rocksdb: Boolean = true)(
@@ -4042,15 +3553,13 @@ object StreamingOps {
       "append", rocksdb)(ds => build(ds.toDF()))
   }
 
-  /** Two-input twin of [[replayThrough]] for the stream-stream joins:
+  /** Two-input twin of [[replayTypedPath]] for the stream-stream joins:
     * the fixture splits by event type into the two inputs, and BOTH
     * sides advance through the SAME global time boundaries per
     * micro-batch, so neither side's watermark can run ahead and evict
-    * join state the other side still needs.
-    */
-  /** Path-returning join replay (the two-input
-    * stream-stream join replays). Partitions-only start scope: Spark's
-    * symmetric-hash join keeps FOUR stores per partition
+    * join state the other side still needs. Returns the output parquet
+    * dir. Partitions-only start scope: Spark's symmetric-hash join
+    * keeps FOUR stores per partition
     * (keyToNumValues/keyWithIndexToValue × 2 sides), so a per-gate
     * RocksDB instance per store is pure harness cost; the default
     * store is what these gates always ran on.
@@ -4125,7 +3634,7 @@ object StreamingOps {
     * micro-batches — and their driver-side barrier waits, the bulk of
     * a gate-scale lifecycle — overlap on the scheduler instead of
     * running back to back. Each query is EXACTLY the dedicated
-    * [[replayThrough]] lifecycle (same 2 ordered batches, same flush,
+    * [[replayPath]] lifecycle (same 2 ordered batches, same flush,
     * its own watermark), so per-branch outputs are the dedicated
     * replays' outputs, unchanged.
     */
@@ -4588,19 +4097,17 @@ object StreamingOps {
         temporalJoinStream(ds, leftOuter = true).toDF())
     }
 
-  /** Typed twin of [[replayThrough]] shared by the tuple-input
-    * processor gates: replays `fixture` in 2 ordered micro-batches
-    * (+ optional flush rows that advance the watermark) through
-    * `build` under a scoped RocksDB provider (transformWithState
-    * needs the multi-column-family store), appending each batch's
-    * output to parquet. 2 batches by the measured replay-cost cut
-    * (PLANS "2-batch replay harness"): one seam already exercises the
-    * cross-batch state path; the specs own finer seam semantics.
-    */
-  /** Path-returning typed replay core: runs the replay
-    * and returns the output parquet dir (registered for exit cleanup)
-    * — the memoizable unit the pooled warm and the per-family caches
-    * hold. The gate-conf scope covers only the query START (see
+  /** The replay core every single-input gate shares: replays
+    * `fixture` in 2 ordered micro-batches (+ optional flush rows that
+    * advance the watermark) through `build` under a scoped RocksDB
+    * provider (transformWithState needs the multi-column-family
+    * store), appending each batch's output to parquet. 2 batches by the
+    * measured replay-cost cut (PLANS "2-batch replay harness"): one
+    * seam already exercises the cross-batch state path; the specs own
+    * finer seam semantics. Returns the output parquet dir (registered
+    * for exit cleanup) — the memoizable unit the pooled warm and the
+    * per-family caches hold. The gate-conf scope covers only the query
+    * START (see
     * [[startUnderGateConfs]]); the feed/stop lifecycle runs unscoped,
     * which is what lets many replays run concurrently.
     */
@@ -4682,14 +4189,6 @@ object StreamingOps {
   def streamCepReluctantGate(s: SparkSession, dir: String): DataFrame =
     cepGateOf(s, dir, 1)
 
-  /** stream_cep_vshape gate — the STREAMING twin of `cep_vshape`: the
-    * V-pattern (STRT any, DOWN+ value<PREV, UP+ value>PREV) over the
-    * day-folded replay through [[cepStreamValued]] (values ride the
-    * buffer MapState). 1-hour window (above the folded corpus's 36-min
-    * max V span — windowed chunking is cep_backtrack's gate); ascents
-    * resolve at the first non-ascending drained row, the final
-    * unbroken ascent per user stays pending.
-    */
   /** The V-pattern the vshape stream gates run: programmatic form and
     * its 1-hour window (above the folded corpus's 36-min max V span).
     */
@@ -4863,6 +4362,14 @@ object StreamingOps {
       .select(CepMatchCols.map(col): _*)
       .orderBy(col("user_id"), col("start_ts_us"), col("start_event_id"))
 
+  /** stream_cep_vshape gate — the STREAMING twin of `cep_vshape`: the
+    * V-pattern (STRT any, DOWN+ value<PREV, UP+ value>PREV) over the
+    * day-folded replay through [[cepStreamValued]] (values ride the
+    * buffer MapState). 1-hour window (above the folded corpus's 36-min
+    * max V span — windowed chunking is cep_backtrack's gate); ascents
+    * resolve at the first non-ascending drained row, the final
+    * unbroken ascent per user stays pending.
+    */
   def streamCepVshapeGate(s: SparkSession, dir: String): DataFrame =
     cepGateOf(s, dir, 2)
 
@@ -5338,112 +4845,9 @@ object StreamingOps {
     * anomaly count, row count) against the DuckDB list_reduce fold the
     * batch `ts_ewma_anomaly` gate already proves bit-compatible.
     */
-  /** Tagged union row of the EWMA (tag 0) and CUSUM (tag 1) per-row
-    * flags; `a`/`b` carry each machine's numeric channel (EWMA: a =
-    * ewma, b unused; CUSUM: a = sp_raw, b = sn_raw).
-    */
-  final case class EwmaCusumRow(tag: Int, user_id: Long, ts_us: Long,
-    event_id: Long, value: Double, a: Double, b: Double, flag: Boolean)
-
-  /** ONE processor folding BOTH sequential recurrences (EWMA anomaly
-    * flags and CUSUM changepoint flags) over the shared (ts, id)-ordered
-    * value replay (r17 optimization): both machines accept exactly the
-    * same in-order row sequence (identical late-row guards over
-    * identical trajectories), each keeps its own fixed-size ValueState
-    * tuple and runs the LITERAL shared step function — so each tag's
-    * rows are bit-identical to the single-machine processors'. One
-    * state-store lifecycle instead of two.
-    */
-  class EwmaCusumProcessor(alpha: Double, z: Double,
-      mu: Double, kappa: Double, h: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, Double), EwmaCusumRow] {
-    @transient private var est:
-      org.apache.spark.sql.streaming.ValueState[(Double, Double, Long, Long)] = _
-    @transient private var cst:
-      org.apache.spark.sql.streaming.ValueState[(Double, Double, Long, Long)] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      def mk(name: String) = getHandle
-        .getValueState[(Double, Double, Long, Long)](name,
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong),
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
-      est = mk("ewma"); cst = mk("cusum")
-    }
-
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Long, Long, Double)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[EwmaCusumRow] = {
-      var estate = if (est.exists()) Option(est.get()) else None
-      var cstate = if (cst.exists()) Option(cst.get()) else None
-      val out = rows.toSeq.sortBy(r => (r._2, r._3)).flatMap {
-        case (_, ts, id, x) =>
-          val eRow = estate match {
-            case None =>
-              estate = Some((x, 0.0, ts, id))
-              Some(EwmaCusumRow(0, key, ts, id, x, x, 0.0, flag = false))
-            case Some((_, _, lastTs, lastId))
-                if ts < lastTs || (ts == lastTs && id <= lastId) =>
-              None // out-of-order vs the folded prefix: drop
-            case Some((ewma, evar, _, _)) =>
-              val (e2, v2, _, anomaly) =
-                graft.operators.TimeSeries.ewmaStep(ewma, evar, x, alpha, z)
-              estate = Some((e2, v2, ts, id))
-              Some(EwmaCusumRow(0, key, ts, id, x, e2, 0.0, anomaly))
-          }
-          val cRow = cstate match {
-            case Some((_, _, lastTs, lastId))
-                if ts < lastTs || (ts == lastTs && id <= lastId) =>
-              None
-            case prior =>
-              val (sp0, sn0) = prior match {
-                case Some((sp, sn, _, _)) => (sp, sn)
-                case None => (0.0, 0.0)
-              }
-              val (spRaw, snRaw, sp2, sn2, alarmed) = graft.operators
-                .TimeSeries.cusumStep(sp0, sn0, x, mu, kappa, h)
-              cstate = Some((sp2, sn2, ts, id))
-              Some(EwmaCusumRow(1, key, ts, id, x, spRaw, snRaw, alarmed))
-          }
-          eRow.iterator ++ cRow.iterator
-      }
-      estate.foreach(est.update)
-      cstate.foreach(cst.update)
-      out.iterator
-    }
-  }
-
-  /** The one shared EWMA/CUSUM replay per (process, dir), memoized as
-    * a parquet PATH; the two gates slice their tag.
-    */
-  private def ewmaCusumReplayed(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
-    s.read.parquet(ewmaCusumPath(s, dir))
-  }
-
-  private def ewmaCusumPath(s: SparkSession, dir: String): String =
-    memoFixture("ewma_cusum_replay_path", dir) {
-      import s.implicits._
-      replayTypedPath(s, tsValFixture(s, dir), Nil, "update")(ds =>
-        ds.groupByKey(_._1)
-          .transformWithState(
-            new EwmaCusumProcessor(alpha = 0.2, z = 3.0,
-              mu = 50.0, kappa = 10.0, h = 200.0),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF())
-    }
-
   def streamEwmaGate(s: SparkSession, dir: String): DataFrame = {
-    ewmaCusumReplayed(s, dir).filter(col("tag") === 0)
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("value"), col("a").as("ewma"), col("flag").as("is_anomaly"))
+    warmStreamReplays(s, dir)
+    s.read.parquet(ewmaPath(s, dir))
       .groupBy(col("user_id"))
       .agg(round(max_by(col("ewma"),
           struct(col("ts_us"), col("event_id"))), 6).as("ewma_final"),
@@ -5459,10 +4863,8 @@ object StreamingOps {
     * structural and this gate proves it against the driver's engine.
     */
   def streamCusumGate(s: SparkSession, dir: String): DataFrame = {
-    ewmaCusumReplayed(s, dir).filter(col("tag") === 1)
-      .select(col("user_id"), col("ts_us"), col("event_id"),
-        col("value"), col("a").as("sp_raw"), col("b").as("sn_raw"),
-        col("flag").as("alarmed"))
+    warmStreamReplays(s, dir)
+    s.read.parquet(cusumPath(s, dir))
       .groupBy(col("user_id"))
       .agg(sum(when(col("alarmed"), 1L).otherwise(0L)).as("n_alarms"),
         round(max(col("sp_raw")), 6).as("max_sp"),
@@ -5470,6 +4872,20 @@ object StreamingOps {
         count(lit(1)).as("n_points"))
       .orderBy(col("user_id"))
   }
+
+  private def ewmaPath(s: SparkSession, dir: String): String =
+    memoFixture("ewma_replay_path", dir) {
+      import s.implicits._
+      replayTypedPath(s, tsValFixture(s, dir), Nil, "update")(ds =>
+        ewmaStream(ds, alpha = 0.2, z = 3.0).toDF())
+    }
+
+  private def cusumPath(s: SparkSession, dir: String): String =
+    memoFixture("cusum_replay_path", dir) {
+      import s.implicits._
+      replayTypedPath(s, tsValFixture(s, dir), Nil, "update")(ds =>
+        cusumStream(ds, mu = 50.0, kappa = 10.0, h = 200.0).toDF())
+    }
 
   /** stream_attribution gate — [[attributionStream]] (live last-touch
     * credits) replayed in global (ts, id) order: every purchase with a

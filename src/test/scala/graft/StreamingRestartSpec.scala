@@ -1,0 +1,194 @@
+package graft
+
+import graft.streaming.StreamingOps
+import graft.streaming.StreamingOps.{ChangeOp, GroupSnapshot, SideOp}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+/** Restart equivalence for the stateful stream operators the oracle
+  * gates run: a query stopped and restarted from its checkpoint at
+  * every batch boundary must emit the same rows, as a multiset, as the
+  * same query run uninterrupted (Structured Streaming's exactly-once
+  * contract: offset log plus state checkpoint).
+  */
+class StreamingRestartSpec extends SparkSpecBase {
+
+  private val Base = 1700000000000000L // event-time origin, micros
+  private val Minute = 60000000L
+
+  /** Feed `batches` through `build` on one fresh checkpoint and return
+    * every row the query emitted. With `restart`, the query starts
+    * before each batch and stops after it, so every batch boundary is
+    * a restart from the checkpoint; one MemoryStream serves all runs.
+    */
+  private def replay[T: Encoder](batches: Seq[Seq[T]], mode: String,
+      restart: Boolean)(build: Dataset[T] => Dataset[_]): Seq[Row] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-restart-ckpt").toString
+    val out = java.nio.file.Files
+      .createTempDirectory("graft-restart-out").toString
+    val src = MemoryStream[T]
+    def start() = build(src.toDS()).toDF().writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(out); ()
+      }
+      .outputMode(mode)
+      .option("checkpointLocation", ckpt).start()
+    if (restart) batches.foreach { b =>
+      src.addData(b)
+      val q = start()
+      try q.processAllAvailable() finally q.stop()
+    } else {
+      val q = start()
+      try batches.foreach { b => src.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+    spark.read.parquet(out).collect().toSeq
+  }
+
+  private def multiset(rows: Seq[Row]): Map[Row, Int] =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
+
+  /** Runs both forms under the RocksDB store (transformWithState needs
+    * it), asserts they agree, and returns the restarted run's rows.
+    */
+  private def assertRestartEquivalent[T: Encoder](batches: Seq[Seq[T]],
+      mode: String)(build: Dataset[T] => Dataset[_]): Seq[Row] = {
+    assert(batches.length >= 3, "restart equivalence needs >= 3 batches")
+    val pkey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(pkey)
+    spark.conf.set(pkey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val whole = replay(batches, mode, restart = false)(build)
+      val restarted = replay(batches, mode, restart = true)(build)
+      assert(whole.nonEmpty, "fixture emitted nothing")
+      assert(multiset(restarted) == multiset(whole),
+        s"restarted run diverged:\n  uninterrupted ${whole.sortBy(_.toString)}" +
+          s"\n  restarted     ${restarted.sortBy(_.toString)}")
+      restarted
+    } finally prev match {
+      case Some(v) => spark.conf.set(pkey, v)
+      case None => spark.conf.unset(pkey)
+    }
+  }
+
+  private def thirds[T](xs: Seq[T]): Seq[Seq[T]] =
+    xs.grouped((xs.length + 2) / 3).toSeq
+
+  /** (user, ts_us, id, value) rows for 3 users, one a minute, in time
+    * order, with a planted spike per user so anomalies and alarms fire
+    * after the first seam.
+    */
+  private val tsVals: Seq[(Long, Long, Long, Double)] =
+    (0 until 45).map { i =>
+      val spike = if (i % 15 == 11) 400.0 else 0.0
+      (i % 3L, Base + i * Minute, i.toLong,
+        50.0 + (i * 37 % 23) - 11 + spike)
+    }
+
+  /** (key, ts_us, id, value_c) rows for 3 keys over 45 minutes, with two
+    * same-instant ties, then a flush row 10 minutes past the end that
+    * moves the watermark past every real row.
+    */
+  private val overRows: Seq[(Long, Long, Long, Long)] = {
+    val rows = (0 until 45).map(i =>
+      (i % 3L, Base + i * Minute, i.toLong, (i * 13 % 50).toLong)) ++
+      Seq((1L, Base + 10 * Minute, 100L, 7L),
+        (2L, Base + 29 * Minute, 101L, 9L))
+    rows.sortBy(r => (r._2, r._3)) :+ ((0L, Base + 55 * Minute, -1L, 0L))
+  }
+
+  /** A seq-ordered changelog over groups 0-2 (ids 0-4), with the
+    * retract-across-the-seam case planted in group 5: id 1 (100) and
+    * id 2 (40) insert in the first batch, id 1 deletes in the second.
+    * The delete's retraction amount was learned before the restart, so
+    * only a recovered id map gives sum 40.
+    */
+  private val changelogBatches: Seq[Seq[ChangeOp]] = {
+    val ops = (1 to 36).map { seq =>
+      val op = if (seq % 6 == 0) "D" else if (seq % 4 == 0) "U" else "I"
+      ChangeOp(op, seq.toLong, seq % 3L, seq * 7 % 5L, seq * 13 % 50L)
+    }
+    val Seq(b1, b2, b3) = thirds(ops)
+    Seq(b1 ++ Seq(ChangeOp("I", 101L, 5L, 1L, 100L),
+        ChangeOp("I", 102L, 5L, 2L, 40L)),
+      b2 :+ ChangeOp("D", 103L, 5L, 1L, 0L),
+      b3)
+  }
+
+  /** A seq-ordered two-sided changelog: sides alternate, groups 0-2,
+    * ids 0-3, with deletes that empty a side (the padding swaps).
+    */
+  private val sideOps: Seq[SideOp] = (1 to 48).map { seq =>
+    val op = if (seq % 5 == 0) "D" else if (seq % 3 == 0) "U" else "I"
+    SideOp(if (seq % 2 == 0) "L" else "R", op, seq.toLong,
+      seq / 2 % 3L, seq * 7 % 4L, seq * 11 % 30L)
+  }
+
+  test("ewmaStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(tsVals), "update")(ds =>
+      StreamingOps.ewmaStream(ds, alpha = 0.2, z = 3.0))
+    assert(rows.length == tsVals.length)
+  }
+
+  test("cusumStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(tsVals), "update")(ds =>
+      StreamingOps.cusumStream(ds, mu = 50.0, kappa = 10.0, h = 200.0))
+    assert(rows.length == tsVals.length)
+  }
+
+  test("rowsOverStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(overRows), "append")(ds =>
+      StreamingOps.rowsOverStream(ds, n = 3))
+    // every real row drains; the flush row stays above the watermark
+    assert(rows.length == overRows.length - 1)
+  }
+
+  test("overWindowStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val doubles = overRows.map { case (k, ts, id, v) => (k, ts, id, v.toDouble) }
+    val rows = assertRestartEquivalent(thirds(doubles), "append")(ds =>
+      StreamingOps.overWindowStream(ds, windowUs = 10 * Minute))
+    assert(rows.length == overRows.length - 1)
+  }
+
+  test("changelogAggStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(changelogBatches, "update")(ds =>
+      StreamingOps.changelogAggStream(ds))
+    val g5 = rows.map(r => GroupSnapshot(r.getAs[Long]("group"),
+        r.getAs[Long]("ver"), r.getAs[Long]("sum_c"), r.getAs[Long]("cnt")))
+      .filter(_.group == 5L).sortBy(_.ver)
+    // the delete after the seam retracted the amount learned before it,
+    // and the version continued across the restart instead of resetting
+    assert(g5.last == GroupSnapshot(5L, 2L, 40L, 1L),
+      s"restart lost the id map or accumulator: $g5")
+  }
+
+  test("retractTopNStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    assertRestartEquivalent(changelogBatches, "update")(ds =>
+      StreamingOps.retractTopNStream(ds, n = 3))
+  }
+
+  test("changelogLeftJoinStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(sideOps), "append")(ds =>
+      StreamingOps.changelogLeftJoinStream(ds))
+    assert(rows.exists(_.isNullAt(rows.head.fieldIndex("r_id"))),
+      "fixture never padded a left row")
+  }
+
+  test("changelogFullJoinStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(sideOps), "append")(ds =>
+      StreamingOps.changelogFullJoinStream(ds))
+    assert(rows.exists(_.isNullAt(rows.head.fieldIndex("l_id"))),
+      "fixture never padded a right row")
+  }
+}
