@@ -24,6 +24,18 @@ package graft
   * so the per-key monitors can never cycle. Distinct keys still build
   * concurrently.
   *
+  * IMMUTABLE INPUTS PER PROCESS: an entry is keyed by (kind, key) —
+  * the sf dir plus parameters — and never invalidates, so every public
+  * entry point built on it (Dedup.minhashLsh / nearDupClusters /
+  * nearDupCanonical, KMeans.kmeansClusters, TextAnalysis.bpeMerges /
+  * bpeEncode, the Graph co-purchase gates, the streaming replay gates
+  * including the upsert-sink state) assumes the tables under a dir do
+  * not change for the life of the JVM. Rewriting them in-process makes
+  * every later call return the results of the old tables, silently;
+  * write new data under a new dir (or start a new JVM) instead. The
+  * Verify/Bench/spec harnesses start a fresh JVM per run and never
+  * rewrite a dir they read.
+  *
   * CLEANUP (r17, ADVICE): fixture temp directories live for the JVM
   * and were never deleted. [[cleanupOnExit]] registers a path for
   * recursive deletion in one shutdown hook — builders call it on the
@@ -36,6 +48,10 @@ private[graft] object FixtureMemo {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]
 
+  /** The memoized value for (kind, key), built once per process. The
+    * inputs `build` reads must not change for the life of the JVM (see
+    * IMMUTABLE INPUTS PER PROCESS above): nothing invalidates an entry.
+    */
   def of[T <: AnyRef](kind: String, key: String)(build: => T): T = {
     val k = (kind, key)
     val cur = cache.get(k)

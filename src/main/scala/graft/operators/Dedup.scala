@@ -143,6 +143,8 @@ object Dedup {
     * (The cheaper affine-permutation trick, a_p·x + b_p wrapping mod
     * 2⁶⁴, is off the table: Spark 4's default ANSI mode raises on long
     * overflow rather than wrapping.)
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def minhashLsh(s: SparkSession, dir: String, thr: Double = 0.7): DataFrame =
     // read the memoized pair table; re-assert the kernel's (i, j) output
@@ -410,6 +412,8 @@ object Dedup {
     * one join + one aggregation, all key-partitioned — the distributed
     * union-find a dedup pipeline runs to pick one keeper per cluster.
     * Output: (doc_id, cluster_rep) for every doc that has a near-dup.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def nearDupClusters(s: SparkSession, dir: String, thr: Double = 0.7): DataFrame =
     s.read.parquet(clustersPath(s, dir, thr)).orderBy(col("doc_id"))
@@ -423,6 +427,8 @@ object Dedup {
     * argmax ships one candidate struct per group per partition, no group
     * is ever sorted. Keeping the LATEST is exact dedup's job (q25); this
     * is the near-dup twin where "duplicates" are only similar.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def nearDupCanonical(s: SparkSession, dir: String,
       thr: Double = 0.7): DataFrame = {

@@ -67,6 +67,8 @@ object Graph {
     * ~120 at sf0.1 → ~10⁸ wedges), which stresses nothing the orientation
     * bound doesn't already govern — the scoped census keeps the same
     * plan shape at demo cost.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def copurchaseTriangles(s: SparkSession, dir: String): DataFrame =
     triangleStats(scopedEdges(s, dir))
@@ -136,6 +138,8 @@ object Graph {
   /** graph_pagerank — 3-iteration PageRank of the scoped co-purchase
     * graph (same quarter-of-parts scope as the triangle census), top-20
     * most central parts.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def copurchasePageRank(s: SparkSession, dir: String): DataFrame =
     pageRank(scopedEdges(s, dir))
@@ -158,6 +162,8 @@ object Graph {
 
   /** graph_negative_sample gate: k=3 hash-ring negatives per node of
     * the copurchase graph (same edge definition as PageRank/triangles).
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def negativeSample(s: SparkSession, dir: String): DataFrame =
     negativeSampleOf(scopedEdges(s, dir), k = 3, shardBits = 4)

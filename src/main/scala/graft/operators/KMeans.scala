@@ -57,6 +57,8 @@ object KMeans {
     * seeded coin). Output: one row per cluster with its final membership
     * count and quantized inertia (sum of squared distances) — the
     * convergence diagnostics a pipeline actually monitors.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def kmeansClusters(s: SparkSession, dir: String, k: Int = 4,
       iters: Int = 2): DataFrame =

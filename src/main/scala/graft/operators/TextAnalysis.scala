@@ -1927,7 +1927,10 @@ object TextAnalysis {
           r.getString(3), r.getLong(4)))
     }
 
-  /** text_bpe_merges — [[bpeTrainOf]] on `documents`, first 6 merges. */
+  /** text_bpe_merges — [[bpeTrainOf]] on `documents`, first 6 merges.
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
+    */
   def bpeMerges(s: SparkSession, dir: String, n: Int = 6): DataFrame = {
     import s.implicits._
     bpeMergesRows(s, dir, n)
@@ -2075,6 +2078,8 @@ object TextAnalysis {
   /** text_bpe_encode — train 6 merges on `documents`, then encode the
     * same corpus with them (the merge collect is parameter-sized —
     * the model artifact, same class as k-means centroids).
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def bpeEncode(s: SparkSession, dir: String, n: Int = 6): DataFrame = {
     val docs = t(s, dir, "documents")

@@ -278,7 +278,7 @@ object StreamingOps {
       val endMs = (key + windowUs + 999L) / 1000L
       // window already closed and emitted: late rows drop here —
       // COUNTED when the caller asked for observability (same
-      // accumulator contract as CepStreamProcessor's lateCounter:
+      // accumulator contract as CepMultiStreamProcessor's lateCounter:
       // exact on a clean run, may over-count under task retries)
       if (timerValues.getCurrentWatermarkInMs() >= endMs) {
         lateCounter.foreach(c => rows.foreach(_ => c.add(1L)))
@@ -1652,128 +1652,17 @@ object StreamingOps {
   final case class OuterJoinDelta(op: String, group: Long, l_id: Long,
       r_id: Option[Long], l_val: Long, r_val: Option[Long])
 
-  /** LEFT OUTER changelog equi-join — the subtle half of Flink's
-    * retracting streaming join: an unmatched left row is VISIBLE as a
-    * null-padded result row, and that padding is itself retractable
-    * state. Beyond the inner join's delta rules, the right side's
-    * empty↔non-empty transitions drive padding swaps:
-    *
-    *   - right 0 → 1 live rows: every live left row RETRACTS its
-    *     (l, null) padding before the pair deltas emit;
-    *   - right 1 → 0 live rows: after the pair retractions, every
-    *     live left row re-emits its (l, null) padding;
-    *   - left ops emit padded deltas while the right side is empty and
-    *     pair deltas otherwise — same prior/next structure as inner.
-    *
-    * Same fold contract as the inner join (signed count per distinct
-    * row ≡ the net-state LEFT JOIN), same state (two live maps), same
-    * idempotent-update and unknown-delete suppression. Flink's
-    * `StreamingJoinOperator` tracks an association counter per row for
-    * exactly these padding swaps; here the counter is |right live
-    * set| = rmap.size at the transition points, O(1) per op via the
-    * tracked count below (iterating the map to count would be
-    * O(live) per op).
-    */
-  class ChangelogLeftJoinProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, SideOp, OuterJoinDelta] {
-    @transient private var lmap:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rmap:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rcount:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      lmap = getHandle.getMapState[Long, Long]("lmap",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      rmap = getHandle.getMapState[Long, Long]("rmap",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      rcount = getHandle.getValueState[Long]("rcount",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[SideOp],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[OuterJoinDelta] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[OuterJoinDelta]
-      var rc = if (rcount.exists()) rcount.get() else 0L
-      rows.toSeq.sortBy(_.seq).foreach { r =>
-        val isLeft = r.side == "L"
-        require(isLeft || r.side == "R",
-          s"changelogLeftJoinStream: unknown side '${r.side}' (want L/R)")
-        val own = if (isLeft) lmap else rmap
-        val prior = if (own.containsKey(r.id)) Some(own.getValue(r.id))
-                    else None
-        val next = r.op match {
-          case "I" | "U" => Some(r.value_c)
-          case "D"       => None
-          case bad => throw new IllegalArgumentException(
-            s"changelogLeftJoinStream: unknown op '$bad' (want I/U/D)")
-        }
-        if (prior != next) {
-          if (isLeft) {
-            if (rc == 0L) {
-              prior.foreach(v =>
-                out += OuterJoinDelta("D", key, r.id, None, v, None))
-              next.foreach(v =>
-                out += OuterJoinDelta("I", key, r.id, None, v, None))
-            } else {
-              val rights = rmap.iterator().toList
-              prior.foreach(v => rights.foreach { case (rid, rv) =>
-                out += OuterJoinDelta("D", key, r.id, Some(rid), v, Some(rv))
-              })
-              next.foreach(v => rights.foreach { case (rid, rv) =>
-                out += OuterJoinDelta("I", key, r.id, Some(rid), v, Some(rv))
-              })
-            }
-          } else {
-            lazy val lefts = lmap.iterator().toList
-            // 0 -> 1: the padding every left row held retracts first
-            if (rc == 0L && next.isDefined)
-              lefts.foreach { case (lid, lv) =>
-                out += OuterJoinDelta("D", key, lid, None, lv, None)
-              }
-            prior.foreach(v => lefts.foreach { case (lid, lv) =>
-              out += OuterJoinDelta("D", key, lid, Some(r.id), lv, Some(v))
-            })
-            next.foreach(v => lefts.foreach { case (lid, lv) =>
-              out += OuterJoinDelta("I", key, lid, Some(r.id), lv, Some(v))
-            })
-            // 1 -> 0: the padding comes back
-            if (rc == 1L && prior.isDefined && next.isEmpty)
-              lefts.foreach { case (lid, lv) =>
-                out += OuterJoinDelta("I", key, lid, None, lv, None)
-              }
-            if (prior.isEmpty && next.isDefined) rc += 1
-            if (prior.isDefined && next.isEmpty) rc -= 1
-          }
-          next match {
-            case Some(v) => own.updateValue(r.id, v)
-            case None    => own.removeKey(r.id)
-          }
-        }
-      }
-      rcount.update(rc)
-      out.iterator
-    }
-  }
-
-  /** State placement: see the note at [[changelogJoinStream]] — the
-    * live maps are join-key-sharded in any factoring.
+  /** LEFT OUTER changelog equi-join: [[changelogFullJoinStream]]
+    * without its right-only padding rows. The full processor emits, for
+    * every op, exactly the pair and left-padding rows a dedicated
+    * left-outer processor would, in the same order (see
+    * [[ChangelogFullJoinProcessor]]), so dropping the rows with no left
+    * id leaves the left join's changelog.
     */
   def changelogLeftJoinStream(ops: Dataset[SideOp]): Dataset[OuterJoinDelta] = {
     import ops.sparkSession.implicits._
-    ops.groupByKey(_.group)
-      .transformWithState(new ChangelogLeftJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    changelogFullJoinStream(ops).flatMap(d => d.l_id.map(lid =>
+      OuterJoinDelta(d.op, d.group, lid, d.r_id, d.l_val.get, d.r_val)))
   }
 
   /** stream_changelog_join_left gate — the left-outer twin of
@@ -1801,20 +1690,69 @@ object StreamingOps {
       l_id: Option[Long], r_id: Option[Long],
       l_val: Option[Long], r_val: Option[Long])
 
-  /** FULL OUTER changelog equi-join — the symmetric closure of the
-    * left-outer form: BOTH sides surface unmatched rows as null-padded
-    * results, so both sides carry an association counter and every
-    * op's emission follows one symmetric rule:
+  /** CHANGELOG EQUI-JOIN — the join member of the retraction family
+    * (Flink's streaming regular join over two upsert/changelog inputs:
+    * `StreamingJoinOperator` with retraction), completing the chain
+    * changelog source → normalize → JOIN → retract agg → retract
+    * Top-N. Both inputs are keyed I/U/D changelogs in the upsert wire
+    * shape (key + new value or tombstone, no old value); the output is
+    * itself a changelog of joined rows. This one processor is the FULL
+    * OUTER form; the inner and left-outer joins
+    * ([[changelogJoinStream]], [[changelogLeftJoinStream]]) keep the
+    * subset of its rows their join type defines.
+    *
+    * Delta rules, per op in `seq` order:
+    *
+    *   - a new/updated row on one side emits D-deltas against the
+    *     other side's live rows for its PRIOR value (if any) and
+    *     I-deltas for its new value — an update is its own retraction;
+    *   - a delete emits only the D-deltas;
+    *   - an idempotent update (same value re-sent) emits nothing
+    *     (the normalize-stage dedup — without it every no-op U would
+    *     churn |other side| rows downstream);
+    *   - a delete of an unknown id is a silent no-op (at-least-once
+    *     producers re-send tombstones).
+    *
+    * Padding: an unmatched row is VISIBLE as a null-padded result row,
+    * and that padding is itself retractable state. Each side carries
+    * an association counter (its live-row count — Flink's
+    * `StreamingJoinOperator` keeps one per row for exactly these swaps;
+    * here it is O(1) per op), and every op follows one symmetric rule:
     *
     *   - other side empty  → the op swaps its OWN padding (D prior /
     *     I next, other side null);
-    *   - other side live   → pair deltas, as the inner join;
+    *   - other side live   → pair deltas, as above;
     *   - own 0→1 transition → the other side's live rows RETRACT
     *     their padding first; own 1→0 → they take it back after.
     *
-    * Same fold contract (signed count ≡ the net-state FULL JOIN),
-    * state (two live maps + two counters), and idempotent-update /
-    * unknown-delete suppression as the other variants.
+    * The pair rows and the left-padding rows are therefore exactly the
+    * rows, in the same order, that a dedicated inner or left-outer
+    * processor emits: pairs exist only while both sides are live, and
+    * a right op's 0→1 / 1→0 transition is the right side's
+    * empty↔non-empty change the left join's padding swaps key on.
+    *
+    * The fold contract: summing +1 ("I") / −1 ("D") per distinct
+    * (group, l_id, r_id, l_val, r_val) row yields exactly the join of
+    * the two sides' net states, because every delta batch is the exact
+    * symmetric difference of consecutive join states (the specs and the
+    * `stream_changelog_join*` gates pin this against the definitional
+    * net-state joins).
+    *
+    * STATE PLACEMENT: the two live maps — O(live ids) per group per
+    * side, the same irreducible materialization Flink's streaming join
+    * holds — plus the two counters, keyed by `group`, which IS the
+    * equi-join key; per-op emission is O(|other side's live set|), the
+    * inherent changelog-join cost. A hot join key concentrates its two
+    * live maps on one task. Unlike the aggregate family — where the
+    * [[changelogNormalizeStream]] retract split moves the O(live ids)
+    * last-row map to (group, id) sharding and leaves the aggregate
+    * accumulator-only — the split does NOT relieve a join: emitting
+    * pairs inherently requires BOTH sides' live rows co-located by the
+    * join key, so the pair-producing state is join-key-sharded in ANY
+    * factoring. Flink's retract joins carry the same shape; the
+    * mitigations at 100 TB are upstream — key design (compound keys),
+    * pre-aggregation before the join, salting plus re-merge, or a
+    * broadcast side when one input is parameter-sized.
     */
   class ChangelogFullJoinProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -1845,7 +1783,13 @@ object StreamingOps {
         timerValues: org.apache.spark.sql.streaming.TimerValues):
         Iterator[FullJoinDelta] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[FullJoinDelta]
-      var (lc, rc) = if (counts.exists()) counts.get() else (0L, 0L)
+      // no counter: a fresh key (both maps empty), or a checkpoint
+      // written before the inner and left joins ran on this processor
+      // (their state is the same two live maps, no counter) — the map
+      // sizes are the true counts either way
+      var (lc, rc) =
+        if (counts.exists()) counts.get()
+        else (lmap.keys().size.toLong, rmap.keys().size.toLong)
       def pad(isLeft: Boolean, op: String, id: Long, v: Long): FullJoinDelta =
         if (isLeft) FullJoinDelta(op, key, Some(id), None, Some(v), None)
         else FullJoinDelta(op, key, None, Some(id), None, Some(v))
@@ -1907,9 +1851,6 @@ object StreamingOps {
     }
   }
 
-  /** State placement: see the note at [[changelogJoinStream]] — the
-    * live maps are join-key-sharded in any factoring.
-    */
   def changelogFullJoinStream(ops: Dataset[SideOp]): Dataset[FullJoinDelta] = {
     import ops.sparkSession.implicits._
     ops.groupByKey(_.group)
@@ -1931,120 +1872,15 @@ object StreamingOps {
         col("r_id").asc_nulls_last)
   }
 
-  /** CHANGELOG EQUI-JOIN — the join member of the retraction family
-    * (Flink's streaming regular join over two upsert/changelog inputs:
-    * `StreamingJoinOperator` with retraction), completing the chain
-    * changelog source → normalize → JOIN → retract agg → retract
-    * Top-N. Both inputs are keyed I/U/D changelogs in the upsert wire
-    * shape (key + new value or tombstone, no old value); the output is
-    * itself a changelog of joined rows:
-    *
-    *   - a new/updated row on one side emits D-deltas against the
-    *     other side's live rows for its PRIOR value (if any) and
-    *     I-deltas for its new value — an update is its own retraction;
-    *   - a delete emits only the D-deltas;
-    *   - an idempotent update (same value re-sent) emits nothing
-    *     (the normalize-stage dedup — without it every no-op U would
-    *     churn |other side| rows downstream);
-    *   - a delete of an unknown id is a silent no-op (at-least-once
-    *     producers re-send tombstones).
-    *
-    * The fold contract: summing +1 ("I") / −1 ("D") per distinct
-    * (group, l_id, r_id, l_val, r_val) row yields exactly the join of
-    * the two sides' net states, because every delta batch is the exact
-    * symmetric difference of consecutive join states (the spec and the
-    * `stream_changelog_join` gate both pin this against the
-    * definitional net-state join).
-    *
-    * State is the two live maps — O(live ids) per group per side, the
-    * same irreducible materialization Flink's streaming join holds —
-    * and per-op emission is O(|other side's live set|), the inherent
-    * changelog-join cost. The processor keys by `group`, which IS the
-    * equi-join key, so state shards exactly as the join requires; a
-    * hot join key concentrates its two live maps on one task in any
-    * engine (the skew remedy is upstream key salting plus re-merge,
-    * as in the batch salted join — out of scope here).
-    */
-  class ChangelogJoinProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, SideOp, JoinDelta] {
-    @transient private var lmap:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var rmap:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      lmap = getHandle.getMapState[Long, Long]("lmap",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      rmap = getHandle.getMapState[Long, Long]("rmap",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[SideOp],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[JoinDelta] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[JoinDelta]
-      // seq order restores the interleaved changelog's sequence
-      rows.toSeq.sortBy(_.seq).foreach { r =>
-        val isLeft = r.side == "L"
-        require(isLeft || r.side == "R",
-          s"changelogJoinStream: unknown side '${r.side}' (want L/R)")
-        val own = if (isLeft) lmap else rmap
-        val other = if (isLeft) rmap else lmap
-        val prior = if (own.containsKey(r.id)) Some(own.getValue(r.id))
-                    else None
-        val next = r.op match {
-          case "I" | "U" => Some(r.value_c)
-          case "D"       => None
-          case bad => throw new IllegalArgumentException(
-            s"changelogJoinStream: unknown op '$bad' (want I/U/D)")
-        }
-        if (prior != next) {
-          val others = other.iterator().toList
-          def emit(op: String, v: Long): Unit = others.foreach {
-            case (oid, oval) =>
-              out += (if (isLeft) JoinDelta(op, key, r.id, oid, v, oval)
-                      else JoinDelta(op, key, oid, r.id, oval, v))
-          }
-          prior.foreach(emit("D", _))
-          next.foreach(emit("I", _))
-          next match {
-            case Some(v) => own.updateValue(r.id, v)
-            case None    => own.removeKey(r.id)
-          }
-        }
-      }
-      out.iterator
-    }
-  }
-
-  /** STATE PLACEMENT (all three changelog joins): both sides' live
-    * maps key by the EQUI-JOIN key (`group`), so a hot join key
-    * concentrates that key's state on one task. Unlike the aggregate
-    * family — where the [[changelogNormalizeStream]] retract split
-    * moves the O(live ids) last-row map to (group, id) sharding and
-    * leaves the aggregate accumulator-only — the split does NOT
-    * relieve a join: emitting pairs inherently requires BOTH sides'
-    * live rows co-located by the join key, so the pair-producing
-    * state is join-key-sharded in ANY factoring (a normalize stage in
-    * front would dedup upstream but leave these maps exactly where
-    * they are). Flink's retract joins carry the same shape (per-key
-    * association state on each side); the mitigations at 100 TB are
-    * upstream — key design (compound keys), pre-aggregation before the
-    * join, or a broadcast side when one input is parameter-sized —
-    * not a state-placement refactor.
+  /** INNER changelog equi-join: [[changelogFullJoinStream]]'s pair
+    * rows (both ids defined) — see [[ChangelogFullJoinProcessor]] for
+    * the delta rules, fold contract and state placement.
     */
   def changelogJoinStream(ops: Dataset[SideOp]): Dataset[JoinDelta] = {
     import ops.sparkSession.implicits._
-    ops.groupByKey(_.group)
-      .transformWithState(new ChangelogJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    changelogFullJoinStream(ops).flatMap(d =>
+      for (lid <- d.l_id; rid <- d.r_id)
+        yield JoinDelta(d.op, d.group, lid, rid, d.l_val.get, d.r_val.get))
   }
 
   /** Memoized seq-ordered SideOp fixture for the changelog-join gates:
@@ -2153,178 +1989,6 @@ object StreamingOps {
         col("l_val"), col("r_val"))
   }
 
-  /** STREAMING CEP — the live twin of [[graft.operators.Cep.cepMatchOf]]
-    * (Flink's MATCH_RECOGNIZE on an unbounded stream): contiguous
-    * per-key pattern matching needs rows in exact (ts, id) order, which
-    * only the watermark can guarantee, so rows buffer in per-key
-    * MapState keyed by timestamp (the OverWindowProcessor shape) and an
-    * event-time timer DRAINS every ripe instant in order through the
-    * SAME automaton the batch fold runs — its 4-field state carried in
-    * a ValueState across micro-batches, so a pattern spanning batches
-    * (or idle hours) matches exactly as the batch scan would. Rows at
-    * or below the watermark on arrival are dropped (their instant
-    * already drained — the shared late-row contract); Flink CEP buffers
-    * out-of-order rows against the watermark identically. State per key
-    * = O(automaton) + the buffer inside the lateness horizon, never the
-    * stream.
-    */
-  class CepStreamProcessor[O](pattern: IndexedSeq[graft.operators.Cep.Step],
-      windowUs: Long,
-      after: graft.operators.Cep.AfterMatch = graft.operators.Cep.SkipPastLast,
-      contiguous: Boolean = true,
-      lateCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-      grouped: Option[graft.operators.Cep.GPat] = None,
-      // output shape per completed match: the match-only surfaces emit
-      // one CepMatch, the MEASURES surface one CepMeasured per step.
-      // needsAggs must be true iff conv reads the aggregates.
-      conv: (Long, graft.operators.Cep.CepMatch,
-        List[graft.operators.Cep.StepAgg]) => IterableOnce[O],
-      needsAggs: Boolean = true)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, String, Long), O] with MinTimerChain {
-    @transient private var buf:
-      org.apache.spark.sql.streaming.MapState[
-        Long, List[(Long, String, Long)]] = _
-    @transient private var mstate:
-      org.apache.spark.sql.streaming.ValueState[
-        List[(Long, Long, String, Long)]] = _
-    @transient private var drained:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    // patterns whose pendings resolve by TIME (trailing negations,
-    // relaxed quantified runs) need watermark advances + horizon
-    // timers; every other committed pattern class resolves on fed rows
-    // only — its gates pin that contract, so the advance is scoped off
-    private val needsAdvance = pattern.exists(_.neg) ||
-      (!contiguous && pattern.exists(_.bounds != ((1, 1))))
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      // state names carry a FORMAT VERSION suffix: r12 widened both the
-      // buffer entries and the machine snapshot from 3- to 4-tuples
-      // (value_c rides along for DEFINE predicates) with no migration
-      // path — the Kryo payloads are not forward-compatible, so a
-      // checkpoint written before the widening must NOT silently
-      // mis-decode into the new shape. Bumping the store names ("buf2"/
-      // "m2") makes the incompatibility structural: an old checkpoint
-      // fails the transformWithState state-variable validation loudly
-      // instead of replaying garbage. Any future state-shape change
-      // must bump again.
-      buf = getHandle.getMapState[Long, List[(Long, String, Long)]]("buf2",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.kryo[List[(Long, String, Long)]],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      mstate = getHandle.getValueState[List[(Long, Long, String, Long)]]("m2",
-        org.apache.spark.sql.Encoders.kryo[List[(Long, Long, String, Long)]],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      drained = getHandle.getValueState[Long]("drained",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      initTimerChain()
-    }
-
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Long, Long, String, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[O] = {
-      val frontier = if (drained.exists()) drained.get() else Long.MinValue
-      val wmMs = timerValues.getCurrentWatermarkInMs()
-      val lateBelow =
-        if (wmMs > 0L) math.max(frontier, wmMs * 1000L) else frontier
-      var batchMin = Long.MaxValue
-      rows.foreach { case (_, ts, id, tpe, vc) =>
-        if (ts > lateBelow) {
-          val cur = if (buf.containsKey(ts)) buf.getValue(ts) else Nil
-          buf.updateValue(ts, (id, tpe, vc) :: cur)
-          if (ts < batchMin) batchMin = ts
-        } else {
-          // LATE-DATA OBSERVABILITY: the row's instant already drained
-          // (or sits at/below the watermark on arrival) — it is dropped
-          // per the shared late-row contract, and the drop is COUNTED
-          // so operators surface it instead of losing it silently
-          // (Flink's late-data side-output, reduced to the counter).
-          // Accumulator semantics: operational metric — exact on a
-          // clean run, may over-count under task retries, exactly like
-          // Spark's own SQL metrics.
-          lateCounter.foreach(_.add(1L))
-        }
-      }
-      if (batchMin != Long.MaxValue) armChainUs(batchMin)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo):
-        Iterator[O] = {
-      val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-      // `drained` is the watermark of the key's last drain (≥ every
-      // drained instant) — the batch-constant-watermark short-circuit
-      // every processor here carries: without it each of the batch's
-      // per-instant timers re-iterated the whole buffer (O(buffer²)
-      // per key per batch — the sf0.1 gate replay measured 59 s, vs
-      // ~8 s for its harness siblings). The input-side late guard is
-      // max(frontier, initialized watermark), so recording the
-      // watermark instead of the max drained instant admits exactly
-      // the same rows (the OverWindowProcessor argument).
-      chainFired(expiredTimerInfo.getExpiryTimeInMs())
-      val already = if (drained.exists()) drained.get() else Long.MinValue
-      if (wmUs <= already) {
-        // a second chain/horizon fire in the same batch: the first one
-        // drained everything ripe — only the chain re-arm can be owed
-        rearmChainFrom(buf.keys())
-        return Iterator.empty
-      }
-      val (ripeL, unripe) = buf.iterator().toList.partition(_._1 <= wmUs)
-      val ripe = ripeL.sortBy(_._1)
-      val minUnripe =
-        if (unripe.isEmpty) None else Some(unripe.map(_._1).min)
-      // ripe-empty short-circuit: only for machines with no TIME-gated
-      // pendings — an absence/greedy-take machine must still see the
-      // watermark advance (its horizon timer fires exactly here, with
-      // nothing left to drain)
-      if (ripe.isEmpty && !needsAdvance) {
-        rearmChain(minUnripe)
-        drained.update(wmUs); return Iterator.empty
-      }
-      val m = new graft.operators.Cep.Machine(pattern, windowUs, after,
-        contiguous, grouped, needsAggs = needsAggs)
-      if (mstate.exists()) m.restore(mstate.get())
-      val out = scala.collection.mutable.ArrayBuffer.empty[O]
-      ripe.foreach { case (ts, entries) =>
-        entries.sortBy(_._1).foreach { case (id, tpe, vc) =>
-          // feedM: SKIP TO NEXT ROW can close several overlapping
-          // matches on one drained row (SKIP PAST LAST ROW emits <= 1)
-          m.feedM(ts, id, tpe, vc).foreach { case (c, aggs) =>
-            out ++= conv(key, c, aggs)
-          }
-        }
-        buf.removeKey(ts)
-      }
-      // HORIZON-GATED pendings (trailing absences, greedy relaxed
-      // takes — Flink's notFollowedBy timeout semantics): the decision
-      // point is a TIME, not a row, so feeding drained rows is not
-      // enough — advance the machine to the watermark (sound: every
-      // row <= wm was just fed, every future row is > wm) and keep an
-      // event-time timer at the head's window horizon so the emission
-      // fires even if no further row ever arrives for this key. Scoped
-      // to the pattern classes that need it: the committed row-fed
-      // gates (backtrack/vshape pending contracts) are deliberately
-      // untouched.
-      if (needsAdvance) {
-        m.advance(wmUs).foreach { case (c, aggs) =>
-          out ++= conv(key, c, aggs)
-        }
-        m.pendingHorizonUs.foreach(h =>
-          getHandle.registerTimer(h / 1000L + 1L))
-      }
-      rearmChain(minUnripe)
-      mstate.update(m.snapshot)
-      drained.update(wmUs)
-      out.iterator
-    }
-  }
-
   /** (user_id, ts_us, event_id, event_type) stream → completed pattern
     * matches, emitted as the watermark makes their rows final. Symbol
     * patterns only carry a zero value; DEFINE-predicate patterns take
@@ -2354,7 +2018,9 @@ object StreamingOps {
 
   /** (user_id, ts_us, event_id, event_type, value_c) stream — the
     * valued form [[cepStream]] wraps, required when the pattern
-    * carries DEFINE predicates (value vs PREV comparisons).
+    * carries DEFINE predicates (value vs PREV comparisons). One spec
+    * through [[cepStreamMulti]]: see [[CepMultiStreamProcessor]] for the
+    * watermark buffer, the late-row contract and the horizon advance.
     */
   def cepStreamValued(events: Dataset[(Long, Long, Long, String, Long)],
       pattern: Seq[graft.operators.Cep.Step],
@@ -2364,25 +2030,9 @@ object StreamingOps {
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       grouped: Option[graft.operators.Cep.GPat] = None)
       : Dataset[graft.operators.Cep.CepMatch] = {
-    if (grouped.isEmpty) {
-      if (contiguous) graft.operators.Cep.validateCommon(pattern)
-      else graft.operators.Cep.validateSubseq(pattern)
-      graft.operators.Cep.validateAfter(pattern, after)
-    }
     import events.sparkSession.implicits._
-    events
-      .withColumn("ts", timestamp_micros(col("_2")))
-      .withWatermark("ts", "5 seconds")
-      .select(col("_1"), col("_2"), col("_3"), col("_4"), col("_5"))
-      .as[(Long, Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new CepStreamProcessor[graft.operators.Cep.CepMatch](
-          pattern.toIndexedSeq, windowUs, after, contiguous, lateCounter,
-          grouped, (k, c, _) => Iterator.single(c.copy(user_id = k)),
-          needsAggs = false),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    cepStreamMulti(events, Seq(CepSpec(pattern.toIndexedSeq, windowUs, after,
+      contiguous, grouped)), lateCounter).map(_._2)
   }
 
   /** STREAMING MEASURES — the live twin of [[graft.operators.Cep
@@ -2393,9 +2043,10 @@ object StreamingOps {
     * consumed rows in exact cents, FIRST/LAST event ids. The rows are
     * self-contained (no downstream state needed), so the stream stays
     * a plain append stream; pivot per match downstream exactly as the
-    * batch pivot does. Same processor, machine, state shape, and
-    * emission discipline as [[cepStreamValued]] — only the output
-    * conversion differs.
+    * batch pivot does. One `measured` spec through
+    * [[cepStreamMultiMeasured]], keeping its measured channel: same
+    * processor, machine, state shape, and emission discipline as
+    * [[cepStreamValued]] — only the output channel differs.
     */
   def cepStreamMeasures(events: Dataset[(Long, Long, Long, String, Long)],
       pattern: Seq[graft.operators.Cep.Step],
@@ -2403,26 +2054,10 @@ object StreamingOps {
       after: graft.operators.Cep.AfterMatch = graft.operators.Cep.SkipPastLast,
       contiguous: Boolean = true)
       : Dataset[graft.operators.Cep.CepMeasured] = {
-    if (contiguous) graft.operators.Cep.validateCommon(pattern)
-    else graft.operators.Cep.validateSubseq(pattern)
-    graft.operators.Cep.validateAfter(pattern, after)
     import events.sparkSession.implicits._
-    events
-      .withColumn("ts", timestamp_micros(col("_2")))
-      .withWatermark("ts", "5 seconds")
-      .select(col("_1"), col("_2"), col("_3"), col("_4"), col("_5"))
-      .as[(Long, Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new CepStreamProcessor[graft.operators.Cep.CepMeasured](
-          pattern.toIndexedSeq, windowUs, after, contiguous, None, None,
-          (k, c, aggs) => aggs.iterator.map(a =>
-            graft.operators.Cep.CepMeasured(k, c.start_event_id,
-              c.start_ts_us, c.end_event_id, c.end_ts_us, c.n_rows,
-              a.step, a.symbol, a.cnt, a.sum_value_c, a.min_value_c,
-              a.max_value_c, a.first_event_id, a.last_event_id))),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    cepStreamMultiMeasured(events, Seq(CepSpec(pattern.toIndexedSeq,
+        windowUs, after, contiguous, measured = true)))
+      .filter(_._1 == CepMeasuredTag).map(_._2)
   }
 
   /** The SQL-string surface of [[cepStreamMeasures]]: the clause's
@@ -2536,26 +2171,46 @@ object StreamingOps {
     */
   val CepMeasuredTag: Int = 2000
 
-  /** MULTI-PATTERN streaming CEP — N independent machines over ONE
-    * buffered scan of the stream (Flink users register many patterns
-    * on the same source; running N [[cepStreamValued]] queries stores
-    * the watermark buffer N times and pays N state-store lifecycles
-    * for identical row traffic). The row buffer, late-row guard,
-    * drain-frontier short-circuit, and timers are SHARED; only the
-    * per-machine snapshot (`m2_$i`) is per-pattern. Each drain feeds
-    * the ripe rows to every machine in the same order the single-
-    * machine processor would, so per-pattern emissions are identical
-    * to N separate queries (machines are deterministic functions of
-    * the fed row sequence; the watermark advance is the same one) —
-    * the gate layer pins that equality against the single-machine
-    * oracles. Output rows are (pattern index, match).
+  /** STREAMING CEP — the live twin of [[graft.operators.Cep.cepMatchOf]]
+    * (Flink's MATCH_RECOGNIZE on an unbounded stream), for N
+    * independent pattern machines over ONE buffered scan of the stream.
+    * Every streaming CEP surface runs here: the single-pattern forms
+    * ([[cepStreamValued]], [[cepStreamMeasures]] and their wrappers)
+    * are one spec, and Flink users who register many patterns on the
+    * same source get one buffer and one state-store lifecycle instead
+    * of N.
     *
-    * Horizon timers: any machine's pending horizon registers a timer;
-    * at its firing every TIME-GATED machine advances (row-fed machines
-    * skip untouched when nothing drained — their state roundtrip is
-    * elided, not just identity). Late drops count ONCE per row into
+    * Watermark buffer: contiguous per-key pattern matching needs rows
+    * in exact (ts, id) order, which only the watermark can guarantee,
+    * so rows buffer in per-key MapState keyed by timestamp (the
+    * OverWindowProcessor shape) and an event-time timer DRAINS every
+    * ripe instant in order through the SAME automaton the batch fold
+    * runs — each machine's state carried in a ValueState (`m2_$i`)
+    * across micro-batches, so a pattern spanning batches (or idle
+    * hours) matches exactly as the batch scan would. State per key =
+    * O(automata) + the buffer inside the lateness horizon, never the
+    * stream. The buffer, late-row guard, drain-frontier short-circuit
+    * and timers are SHARED; each drain feeds the ripe rows to every
+    * machine in the same order, so per-pattern emissions equal N
+    * separate one-spec queries (machines are deterministic functions of
+    * the fed row sequence; the watermark advance is the same one).
+    * Output rows are (tag, match) — see [[cepStreamMultiMeasured]].
+    *
+    * Late rows: a row at or below the watermark (or the key's last
+    * drain) on arrival is dropped — its instant already drained, the
+    * shared late-row contract; Flink CEP buffers out-of-order rows
+    * against the watermark identically. Each drop counts ONCE into
     * `lateCounter` (the buffer is shared — a late row is lost to all
     * machines together).
+    *
+    * Horizon advance: patterns whose pendings resolve by TIME
+    * (trailing negations, relaxed quantified runs, timeout channels)
+    * advance to the watermark after each drain and keep an event-time
+    * timer at the head's window horizon, so the emission fires even if
+    * no further row ever arrives for the key; at any machine's horizon
+    * firing every TIME-GATED machine advances, while row-fed machines
+    * skip untouched when nothing drained (their state roundtrip is
+    * elided, not just identity).
     */
   class CepMultiStreamProcessor(specs: IndexedSeq[CepSpec],
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None)
@@ -2580,8 +2235,18 @@ object StreamingOps {
 
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
         timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      // same format-versioned names as CepStreamProcessor ("buf2"
-      // entries are identical payloads); machine snapshots are indexed
+      // state names carry a FORMAT VERSION suffix: r12 widened both the
+      // buffer entries and the machine snapshot from 3- to 4-tuples
+      // (value_c rides along for DEFINE predicates), and the Kryo
+      // payloads are not forward-compatible, so the bumped names
+      // ("buf2", "m2_$i") keep an old payload from being read into the
+      // new shape. A renamed variable does NOT fail a restart, though:
+      // Spark 4.1 accepts added and removed column families as schema
+      // evolution, so a checkpoint whose names differ resumes with the
+      // renamed variables EMPTY (checked: a single-pattern checkpoint
+      // with its machine under "m2" resumed here as a fresh machine,
+      // dropping the match in flight). Any state-shape change must bump
+      // again and start fresh checkpoints. Machine snapshots are indexed
       // per spec — the spec LIST is part of the checkpoint contract
       // (reordering specs across a restart mixes machine states; add
       // new patterns at the end or start a fresh checkpoint)
@@ -2625,7 +2290,14 @@ object StreamingOps {
           val cur = if (buf.containsKey(ts)) buf.getValue(ts) else Nil
           buf.updateValue(ts, (id, tpe, vc) :: cur)
           if (ts < batchMin) batchMin = ts
-        } else lateCounter.foreach(_.add(1L))
+        } else {
+          // LATE-DATA OBSERVABILITY: the dropped row is COUNTED so
+          // operators surface it instead of losing it silently (Flink's
+          // late-data side-output, reduced to the counter). Accumulator
+          // semantics: an operational metric — exact on a clean run, may
+          // over-count under task retries, like Spark's own SQL metrics.
+          lateCounter.foreach(_.add(1L))
+        }
       }
       if (batchMin != Long.MaxValue) armChainUs(batchMin)
       Iterator.empty
@@ -2637,6 +2309,14 @@ object StreamingOps {
         Iterator[(Int, graft.operators.Cep.CepMeasured)] = {
       val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
       chainFired(expiredTimerInfo.getExpiryTimeInMs())
+      // `drained` is the watermark of the key's last drain (≥ every
+      // drained instant): a second chain/horizon fire in the same batch
+      // finds everything ripe already drained and only re-arms the
+      // chain — without the short-circuit each of a batch's per-instant
+      // timers re-iterated the whole buffer (O(buffer²) per key per
+      // batch). The input-side late guard is max(frontier, initialized
+      // watermark), so recording the watermark instead of the max
+      // drained instant admits exactly the same rows.
       val already = if (drained.exists()) drained.get() else Long.MinValue
       if (wmUs <= already) {
         rearmChainFrom(buf.keys())
@@ -2651,7 +2331,7 @@ object StreamingOps {
         drained.update(wmUs); return Iterator.empty
       }
       // the drain order every machine sees: instants ascending, ids
-      // ascending within an instant — the single-machine order
+      // ascending within an instant
       val ripeRows = ripe.flatMap { case (ts, entries) =>
         entries.sortBy(_._1).map { case (id, tpe, vc) => (ts, id, tpe, vc) }
       }
@@ -2764,8 +2444,8 @@ object StreamingOps {
 
   /** (user_id, ts_us, event_id, event_type, value_c) stream → tagged
     * matches (spec index, match) from N machines over one shared
-    * buffer — see [[CepMultiStreamProcessor]]. Each spec validates
-    * exactly as its single-machine form would.
+    * buffer — see [[CepMultiStreamProcessor]]. Each spec is validated
+    * by [[cepStreamMultiMeasured]].
     */
   def cepStreamMulti(events: Dataset[(Long, Long, Long, String, Long)],
       specs: Seq[CepSpec],
@@ -3328,6 +3008,8 @@ object StreamingOps {
     * keys absent (their markers stay in the state table to keep winning
     * future races — exactly the sink's contract, which the oracle
     * reproduces as argmax-by-seq then drop-if-deleted).
+    * Memoized per (process, dir, params) in [[graft.FixtureMemo]]: the
+    * tables under `dir` must not change within the process.
     */
   def upsertSinkGate(s: SparkSession, dir: String): DataFrame = {
     warmStreamReplays(s, dir)
@@ -3433,7 +3115,12 @@ object StreamingOps {
   private[graft] def warmStreamReplays(s: SparkSession, dir: String): Unit = {
     memoFixture("stream_replay_pool", dir) {
       runReplayPool(Seq(
-        ("windowagg", () => windowAggPaths(s, dir)),
+        ("tumble", () => tumblePath(s, dir)),
+        ("slide", () => slidePath(s, dir)),
+        ("cumulate", () => cumulatePath(s, dir)),
+        ("session", () => sessionPath(s, dir)),
+        ("dynamic_session", () => dynamicSessionPath(s, dir)),
+        ("drift_psi", () => driftPsiPath(s, dir)),
         ("rows_over", () => rowsOverPath(s, dir)),
         ("range_over", () => rangeOverPath(s, dir)),
         ("cep", () => cepMultiPath(s, dir)),
@@ -3616,136 +3303,61 @@ object StreamingOps {
       "flush", 0.0))
   }
 
-  /** The PSI gate's driver-side baseline histogram (shared by the gate
-    * slice and the multi replay builder — definitionally the corpus's
-    * own global histogram).
+  /** The PSI gate's driver-side baseline histogram — definitionally the
+    * corpus's own global histogram.
     */
   private def psiBaseline(fixture: IndexedSeq[GateEv], n: Int,
       width: Int): Seq[Long] =
     (0 until n).map(i => fixture.count(e => e.value >= 0 &&
       math.floor(e.value / width).toInt == i).toLong)
 
-  /** Run N independent single-input replay lifecycles CONCURRENTLY
-    * over the same fixture and batch protocol (guide §2.6 — overlap
-    * independent jobs: actions are only sequential because the driver
-    * calls them sequentially). Each builder gets its own MemoryStream
-    * and streaming query writing to its own parquet dir; every data
-    * batch is fed to ALL sources before any barrier, so the N queries'
-    * micro-batches — and their driver-side barrier waits, the bulk of
-    * a gate-scale lifecycle — overlap on the scheduler instead of
-    * running back to back. Each query is EXACTLY the dedicated
-    * [[replayPath]] lifecycle (same 2 ordered batches, same flush,
-    * its own watermark), so per-branch outputs are the dedicated
-    * replays' outputs, unchanged.
-    */
-  private def replayGateEvConcurrent(s: SparkSession,
-      fixture: IndexedSeq[GateEv], flush: Option[GateEv],
-      rocksdb: Boolean)(
-      builders: Seq[DataFrame => DataFrame]): Seq[String] = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val outs = builders.map(_ => graft.FixtureMemo.cleanupOnExit(
-      java.nio.file.Files
-        .createTempDirectory("graft-multi-replay").toString))
-    val srcs = builders.map(_ => org.apache.spark.sql.execution
-      .streaming.runtime.MemoryStream[GateEv])
-    val dfs = builders.zip(srcs).map { case (b, src) =>
-      val df = b(src.toDF())
-      df.schema // analyze outside the serialized start scope
-      df
-    }
-    val qs = startUnderGateConfs(s, rocksdb) {
-      dfs.zip(outs).map { case (df, out) =>
-        df.writeStream
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            bdf.write.mode("append").parquet(out); ()
-          }
-          .outputMode("append").start()
-      }
-    }
-    try {
-      val halves = fixture.grouped(math.max(1, (fixture.length + 1) / 2))
-      halves.foreach { chunk =>
-        srcs.foreach(_.addData(chunk.toSeq))
-        qs.foreach(_.processAllAvailable())
-      }
-      flush.foreach { f =>
-        srcs.foreach(_.addData(Seq(f)))
-        qs.foreach(_.processAllAvailable())
-      }
-    } finally qs.foreach(_.stop())
-    outs
-  }
-
-  /** The six windowed-AGGREGATION gates' shared replay (tumble, slide,
+  /** The six windowed-AGGREGATION gates' replays (tumble, slide,
     * cumulate, session, dynamic session, windowed PSI over the SAME
-    * day-folded fixture). r17 ran them as six tagged branches of ONE
-    * streaming query; measured r18, that union lifecycle cost 9.4–16 s
-    * — every micro-batch re-plans and re-runs SIX stateful
-    * aggregations back to back under the min-of-6 watermark policy.
-    * Now the six UNCHANGED operator functions replay as six dedicated
-    * lifecycles run CONCURRENTLY ([[replayGateEvConcurrent]]): each
-    * branch keeps its own watermark (the pre-r17 dedicated-gate form —
-    * the min policy could only DELAY emission to a later micro-batch,
-    * never change what a window contains, so branch outputs are
-    * identical either way; re-dumped bit-identical) and the six
-    * barrier waits overlap instead of summing. Each gate slices its
-    * tag and applies exactly its original post-processing.
+    * day-folded fixture): each operator replays in its own memoized
+    * [[replayPath]] lifecycle — its own watermark, 2 ordered batches
+    * plus the flush row that advances it past every real window/session
+    * end — and is its own pool family, so the six barrier waits overlap
+    * in [[warmStreamReplays]]. Pure windowed aggregations, no
+    * transformWithState, so the replays run on the default state store
+    * provider (RocksDB stays scoped to the TWS gates that require it).
     */
-  private def windowAggMultiReplayed(s: SparkSession,
-      dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
-    s.read.parquet(windowAggPaths(s, dir): _*)
-  }
-
-  private def windowAggPaths(s: SparkSession, dir: String): Seq[String] =
-    memoFixture("windowagg_multi_replay_path", dir) {
+  private def windowAggPath(s: SparkSession, dir: String, kind: String)(
+      agg: DataFrame => DataFrame): String =
+    memoFixture(s"${kind}_replay_path", dir) {
       val fixture = gateEventsDayFolded(s, dir)
-      val (_, flush) = gateFlush(fixture)
-      val baseline = psiBaseline(fixture, n = 10, width = 50)
-      val nullL = lit(null).cast("long")
-      val nullTs = lit(null).cast("timestamp")
-      val nullS = lit(null).cast("string")
-      val nullD = lit(null).cast("double")
-      def norm(tag: Int, b: DataFrame, userId: Column, wStart: Column,
-          wEnd: Column, eventType: Column, cnt: Column, sumValue: Column,
-          nInDomain: Column, psi: Column): DataFrame =
-        b.select(lit(tag).as("tag"), userId.as("user_id"),
-          wStart.as("w_start"), wEnd.as("w_end"),
-          eventType.as("event_type"), cnt.as("cnt"),
-          sumValue.as("sum_value"), nInDomain.as("n_in_domain"),
-          psi.as("psi"))
-      // pure windowed AGGREGATIONS — no transformWithState in any
-      // branch, so the replays run on the default state store provider
-      // (RocksDB stays scoped to the TWS gates that require it)
-      replayGateEvConcurrent(s, fixture, Some(flush), rocksdb = false)(Seq(
-        df => norm(0, tumblingCounts(df), nullL, col("w_start"),
-          nullTs, col("event_type"), col("cnt"), col("sum_value"),
-          nullL, nullD),
-        df => norm(1, slidingCounts(df), nullL, col("w_start"),
-          nullTs, nullS, col("cnt"), nullD, nullL, nullD),
-        df => norm(2, cumulateCounts(df), nullL, col("w_start"),
-          col("w_end"), nullS, col("cnt"), col("sum_value"), nullL, nullD),
-        df => norm(3, sessionCounts(df), col("user_id"),
-          col("w_start"), col("w_end"), nullS, col("cnt"), nullD,
-          nullL, nullD),
-        df => norm(4, dynamicSessionCounts(df), col("user_id"),
-          col("w_start"), col("w_end"), nullS, col("cnt"), nullD,
-          nullL, nullD),
-        df => norm(5, windowedPsiStream(df, baseline, width = 50),
-          nullL, timestamp_micros(col("w_start")), nullTs, nullS,
-          nullL, nullD, col("n_in_domain"), col("psi"))))
+      replayPath(s, fixture, Some(gateFlush(fixture)._2), rocksdb = false)(agg)
     }
+
+  private def tumblePath(s: SparkSession, dir: String): String =
+    windowAggPath(s, dir, "tumble")(tumblingCounts)
+
+  private def slidePath(s: SparkSession, dir: String): String =
+    windowAggPath(s, dir, "slide")(slidingCounts)
+
+  private def cumulatePath(s: SparkSession, dir: String): String =
+    windowAggPath(s, dir, "cumulate")(cumulateCounts)
+
+  private def sessionPath(s: SparkSession, dir: String): String =
+    windowAggPath(s, dir, "session")(sessionCounts)
+
+  private def dynamicSessionPath(s: SparkSession, dir: String): String =
+    windowAggPath(s, dir, "dynamic_session")(dynamicSessionCounts)
+
+  private def driftPsiPath(s: SparkSession, dir: String): String = {
+    val baseline = psiBaseline(gateEventsDayFolded(s, dir), n = 10, width = 50)
+    windowAggPath(s, dir, "drift_psi")(windowedPsiStream(_, baseline, width = 50))
+  }
 
   /** stream_tumble gate — [[tumblingCounts]] replayed over the
     * day-folded fixture; append mode emits each 1-minute window exactly
     * once at watermark close, so the accumulated output must equal the
     * definitional batch GROUP BY (the flush row's own window is cut by
-    * the w_start bound). Slice of the shared window-agg replay.
+    * the w_start bound). Replayed by [[windowAggPath]].
     */
   def streamTumbleGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 0)
+    s.read.parquet(tumblePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("event_type"),
         col("cnt"), col("sum_value"))
       .filter(col("w_start") <= maxUs)
@@ -3757,8 +3369,9 @@ object StreamingOps {
     * close-once-at-watermark contract.
     */
   def streamSlideGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 1)
+    s.read.parquet(slidePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("cnt"))
       .filter(col("w_start") <= maxUs)
       .orderBy(col("w_start"))
@@ -3769,8 +3382,9 @@ object StreamingOps {
     * lead-compensated watermark; each slice emits once at close.
     */
   def streamCumulateGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 2)
+    s.read.parquet(cumulatePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"), col("sum_value"))
       .filter(col("w_start") <= maxUs)
@@ -3782,12 +3396,14 @@ object StreamingOps {
     * binds); the flush row sits on its own user and is cut by the
     * user bound.
     */
-  def streamSessionGate(s: SparkSession, dir: String): DataFrame =
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 3)
+  def streamSessionGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
+    s.read.parquet(sessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"))
       .orderBy(col("user_id"), col("w_start"))
+  }
 
   /** STREAMING drift monitor — the live twin of the batch
     * [[graft.operators.Drift]] PSI stage: per tumbling window, the
@@ -3840,10 +3456,10 @@ object StreamingOps {
     * hourly mixes score high, uniform hours near zero.
     */
   def streamDriftPsiGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 5)
-      .select(unix_micros(col("w_start")).as("w_start"),
-        col("n_in_domain"), col("psi"))
+    s.read.parquet(driftPsiPath(s, dir))
+      .select(col("w_start"), col("n_in_domain"), col("psi"))
       .filter(col("w_start") <= maxUs)
       .orderBy(col("w_start"))
   }
@@ -3853,12 +3469,14 @@ object StreamingOps {
     * through the same replay; purchase-extended merges bind on the
     * folded fixture.
     */
-  def streamDynamicSessionGate(s: SparkSession, dir: String): DataFrame =
-    windowAggMultiReplayed(s, dir).filter(col("tag") === 4)
+  def streamDynamicSessionGate(s: SparkSession, dir: String): DataFrame = {
+    warmStreamReplays(s, dir)
+    s.read.parquet(dynamicSessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"))
       .orderBy(col("user_id"), col("w_start"))
+  }
 
   /** stream_interval_join_left gate — [[intervalJoinLeftOuter]]: the
     * OUTER stream-stream join's defining path is the null-padded row a
@@ -4235,7 +3853,7 @@ object StreamingOps {
     * greedy funnel, SKIP TO NEXT ROW revisit, group quantifier,
     * cross-variable funnel (r15), relaxed cross-variable funnel (r16),
     * grouped cross-variable chain (r17)
-    * — every committed single-machine gate spec verbatim. ONE shared replay
+    * — every committed one-pattern gate spec verbatim. ONE shared replay
     * serves them all ([[cepMultiReplayed]]): the r13 verdict's
     * tier-budget consolidation lever — N gates over identical row
     * traffic paid N state-store lifecycles and stored the watermark
@@ -4355,7 +3973,7 @@ object StreamingOps {
     "start_event_id", "start_ts_us", "end_event_id", "end_ts_us", "n_rows")
 
   /** One gate's slice of the shared replay: filter its tag, restore
-    * the single-machine gates' exact output shape and order.
+    * the one-pattern gates' exact output shape and order.
     */
   private def cepGateOf(s: SparkSession, dir: String, tag: Int): DataFrame =
     cepMultiReplayed(s, dir).filter(col("pat") === tag)

@@ -37,7 +37,7 @@ class Round14Spec extends SparkSpecBase {
       // abandoned cart: click with no purchase within 10 minutes,
       // relaxed contiguity — the emission point is a TIME (the
       // horizon), carried by a registered event-time timer that must
-      // survive the restart along with the buf2/m2 state
+      // survive the restart along with the buf2/m2_0 state
       val pattern = Seq(Cep.Step("click"), Cep.Step("purchase", neg = true))
       val ckpt = tmp("graft-cep-ckpt")
       val src = org.apache.spark.sql.execution.streaming.runtime
@@ -81,7 +81,7 @@ class Round14Spec extends SparkSpecBase {
       q2.stop()
       val run2 = spark.read.parquet(out2).as[Cep.CepMatch].collect()
         .map(m => (m.user_id, m.start_event_id)).toSet
-      // key 1 emitted = buf2/m2 + timers recovered; key 9 absent =
+      // key 1 emitted = buf2/m2_0 + timers recovered; key 9 absent =
       // run 1's committed batches were NOT replayed
       assert(run2 == Set((1L, 1L)),
         s"run 2 must emit exactly key 1's recovered absence: $run2")
@@ -124,7 +124,7 @@ class Round14Spec extends SparkSpecBase {
     import graft.operators.Cep
     withRocks {
       // (click view)+ purchase: run 1 drains iteration 1 (click view)
-      // into the m2 machine snapshot; run 2 feeds iteration 2 and the
+      // into the m2_0 machine snapshot; run 2 feeds iteration 2 and the
       // closing purchase — the 5-row match proves the mid-pattern
       // split-program state crossed the kill
       val g = Cep.GCat(Seq(

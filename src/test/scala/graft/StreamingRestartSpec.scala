@@ -127,6 +127,18 @@ class StreamingRestartSpec extends SparkSpecBase {
       seq / 2 % 3L, seq * 7 % 4L, seq * 11 % 30L)
   }
 
+  /** (user, ts_us, id, event_type, value_c) rows for 3 users, one a
+    * minute: each user's own rows cycle click, view, view, purchase, so
+    * every user completes three funnels (the second across the first
+    * seam) and leaves a fourth open, then a flush row moves the
+    * watermark past every window.
+    */
+  private val funnelRows: Seq[(Long, Long, Long, String, Long)] =
+    (0 until 45).map { i =>
+      (i % 3L, Base + i * Minute, i.toLong,
+        Seq("click", "view", "view", "purchase")(i / 3 % 4), i * 13 % 50L)
+    } :+ ((0L, Base + 55 * Minute, -1L, "flush", 0L))
+
   test("ewmaStream: restart at every batch boundary equals the uninterrupted run") {
     import spark.implicits._
     val rows = assertRestartEquivalent(thirds(tsVals), "update")(ds =>
@@ -174,6 +186,25 @@ class StreamingRestartSpec extends SparkSpecBase {
     import spark.implicits._
     assertRestartEquivalent(changelogBatches, "update")(ds =>
       StreamingOps.retractTopNStream(ds, n = 3))
+  }
+
+  test("cepStreamMeasures: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    import graft.operators.Cep
+    val rows = assertRestartEquivalent(thirds(funnelRows), "append")(ds =>
+      StreamingOps.cepStreamMeasures(ds, Seq(Cep.Step("click"),
+        Cep.Step("view", plus = true), Cep.Step("purchase")),
+        windowUs = 10 * Minute))
+    // 3 users x 3 complete funnels x 3 steps
+    assert(rows.length == 27)
+  }
+
+  test("changelogJoinStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(sideOps), "append")(ds =>
+      StreamingOps.changelogJoinStream(ds))
+    assert(rows.exists(_.getAs[String]("op") == "D"),
+      "fixture never retracted a joined row")
   }
 
   test("changelogLeftJoinStream: restart at every batch boundary equals the uninterrupted run") {
