@@ -15,20 +15,15 @@ import org.apache.spark.sql.functions._
   * (matches never overlap); the optional window bounds last-row ts −
   * first-row ts, checked at completion.
   *
-  * PATTERN CLASSES (r12: the full regex-greedy class is supported):
-  * patterns whose adjacent step symbols are distinct (the collapse-
-  * closure class, where greedy consumption is deterministic — a row
-  * can never extend the current step AND open the next one) run the
-  * O(buffer) greedy walk; patterns OUTSIDE the class (A A, A+ B? A,
-  * intersecting adjacent alternation sets) automatically take the
-  * memoized BACKTRACKING walk with identical regex-greedy semantics
-  * (see [[closureHolds]] and `walkBack` — which also carries DEFINE
-  * predicates, wildcard steps and TRAILING quantified steps, whose
-  * greedy runs resolve at the first bounding row, a window-stale
-  * feed, or — batch only — the end-of-input flush). One requirement
-  * remains for every contiguous pattern: a
-  * required predicate-free first step (candidate starts key on it).
-  * The automaton is a shared-buffer
+  * PATTERN CLASSES: the full regex-greedy class. Every contiguous
+  * pattern — flat or grouped, repeated adjacent symbols (A A, A+ B? A)
+  * included — compiles to one split-program and runs one memoized
+  * BACKTRACKING walk, which also carries DEFINE predicates, wildcard
+  * steps and TRAILING quantified steps, whose greedy runs resolve at
+  * the first bounding row, a window-stale feed, or — batch only — the
+  * end-of-input flush. One requirement remains for every contiguous
+  * pattern: a required predicate-free first step (candidate starts
+  * key on it). The automaton is a shared-buffer
   * matcher — it holds the current partial's rows and, on a mismatch or
   * a window-killed completion, falls back to the next candidate start
   * INSIDE the buffer (the leftmost-start preference MATCH_RECOGNIZE
@@ -82,11 +77,10 @@ object Cep {
     * referenced step consumed ZERO rows (an optional that took
     * nothing), the navigation is NULL and the row does not match —
     * SQL NULL-comparison semantics, exactly like PREV off the buffer
-    * head. Cross-referencing steps run on the backtracking walk, and
-    * because the referenced span depends on the PATH (the referenced
-    * step's take), (step, position) memoization is disabled from the
-    * first position a later step's reference can reach back across
-    * (see walkBack's memoOkFrom) — the walk degrades to plain
+    * head. Because the referenced span depends on the PATH (the
+    * referenced step's take), (step, position) memoization is disabled
+    * from the first position a later step's reference can reach back
+    * across (see the Machine's memoOk) — the walk degrades to plain
     * backtracking there, still window-bounded per feed.
     */
   final case class CrossRef(step: Int, first: Boolean, cmp: PrevCmp)
@@ -122,9 +116,7 @@ object Cep {
     * window horizon, must not match), in relaxed mode `notFollowedBy`
     * (no matching row between the previous step's last consumed row
     * and the next step's first — or, trailing, anywhere inside the
-    * window horizon, with emission at horizon expiry). Steps with
-    * `cmp`, `any`, `reluctant`, `neg` or `sumCap`,
-    * like all non-closure shapes, run on the backtracking walk.
+    * window horizon, with emission at horizon expiry).
     */
   final case class Step(symbol: String, plus: Boolean = false,
       opt: Boolean = false, alt: Set[String] = Set.empty,
@@ -171,10 +163,10 @@ object Cep {
     * sub-pattern `{lo, hi}` with greedy (default) or reluctant bias —
     * `(…)+` is GRep(_, 1, Int.MaxValue), `(…)?` GRep(_, 0, 1), `(…)*`
     * GRep(_, 0, Int.MaxValue). The tree compiles to a tiny
-    * Thompson-style program (RunM / SplitI / JumpI / AcceptI) the
-    * machine walks with the SAME memoized backtracking discipline as
-    * the flat class: split branches try the preferred arm first
-    * (greedy = loop-continue, reluctant = exit), the first
+    * Thompson-style program (RunM / SplitI / JumpI / AcceptI) — the
+    * same program a flat step list compiles to — and the machine walks
+    * it with memoized backtracking: split branches try the preferred
+    * arm first (greedy = loop-continue, reluctant = exit), the first
     * non-Mismatch outcome decides, a leaf run reaching the buffer end
     * below its cap waits (Partial) while the window still admits
     * future rows, and the window check lives at Accept so shorter
@@ -218,6 +210,10 @@ object Cep {
     * iterations (grouped MEASURES / ALL ROWS output).
     */
   private[graft] final case class RunM(step: Step, leaf: Int) extends GInstr
+  /** A flat pattern's zero-width negation step (contiguous `notNext`);
+    * validateGrouped keeps negation out of grouped trees.
+    */
+  private[graft] final case class NotNextI(step: Step) extends GInstr
   private[graft] final case class SplitI(var a: Int, var b: Int)
     extends GInstr
   private[graft] final case class JumpI(k: Int) extends GInstr
@@ -331,19 +327,21 @@ object Cep {
     }
   }
 
-  /** Compile the tree to the split-program. Greedy GRep loops prefer
+  /** Compile a tree to the split-program. Greedy GRep loops prefer
     * another body iteration, reluctant ones the exit; GAlt arms are
-    * tried leftmost-first (regex alternation's bias).
+    * tried leftmost-first (regex alternation's bias). A flat step list
+    * compiles as a GCat of its leaves: one instruction per step, so pc
+    * equals the step index.
     */
-  private[graft] def compileGrouped(p: GPat): Vector[GInstr] = {
-    validateGrouped(p)
+  private[graft] def compile(p: GPat): Vector[GInstr] = {
     val prog = scala.collection.mutable.ArrayBuffer.empty[GInstr]
     // `base` threads each sub-pattern's first-leaf index through the
     // generator so every RunM copy knows its source leaf (gLeaves
     // preorder: GCat items in order, GAlt arms in order, GRep = body)
     def leafCount(n: GPat): Int = gLeaves(n).length
     def gen(n: GPat, base: Int): Unit = n match {
-      case GLf(st)     => prog += RunM(st, base)
+      case GLf(st) =>
+        prog += (if (st.neg) NotNextI(st) else RunM(st, base))
       case GCat(items) =>
         var b = base
         items.foreach { it => gen(it, b); b += leafCount(it) }
@@ -501,9 +499,9 @@ object Cep {
       }
     }
     // r16: cross-variable DEFINE references run in relaxed mode too —
-    // the GENERALIZED subsequence walk tracks per-step consumed
+    // the relaxed subsequence walk tracks per-step consumed
     // positions (`taken`), so FIRST/LAST navigation reads the current
-    // path's takes exactly as the backtracking walk's span arrays do.
+    // path's takes exactly as the contiguous walk's leaf pools do.
     // Same structural rules as the contiguous class: strictly-earlier
     // target, never a zero-width negation.
     pattern.toIndexedSeq.zipWithIndex.foreach { case (st, i) =>
@@ -536,11 +534,10 @@ object Cep {
     * (The rule also stops a OneOrMore from overshooting into a
     * same-symbol step behind a vanishing optional.)
     *
-    * Patterns INSIDE the class run the O(buffer) greedy walk; patterns
-    * outside it (A A, A+ B? A, intersecting adjacent sets) fall back
-    * to the memoized BACKTRACKING walk — same semantics class as
-    * regex/Flink-NFA greedy matching (since r12 the class is a fast
-    * path, not a boundary).
+    * Every contiguous pattern runs the same backtracking walk inside
+    * or outside the class; the class bounds only the timed-out-partial
+    * surface ([[validateTimeoutScope]]), where it makes "the" partial
+    * of a stale head well-defined.
     */
   private[graft] def closureHolds(pattern: IndexedSeq[Step]): Boolean = {
     // an `any` step's symbol set is universal — it intersects every
@@ -560,11 +557,10 @@ object Cep {
     }
   }
 
-  /** The checks every contiguous pattern needs regardless of walk
-    * strategy: non-empty, sane rep bounds, required first step
-    * (candidate starts and pruning key on it), One last step (a
-    * trailing repeat or optional has no greedy completion point even
-    * with backtracking — the walk could never commit).
+  /** The checks every contiguous pattern needs: non-empty, sane rep
+    * bounds, sane PREV offsets and cross references, a required
+    * predicate-free first step (candidate starts and pruning key on
+    * it), and the negation rules.
     */
   private[graft] def validateCommon(pattern: Seq[Step]): Unit = {
     require(pattern.nonEmpty, "cep: empty pattern")
@@ -604,16 +600,14 @@ object Cep {
         "outside the machine's buffer (MATCH_RECOGNIZE patterns open " +
         "with a predicate-free variable for the same reason)")
     validateNeg(pat, relaxed = false)
-    // a trailing quantified/optional step is allowed since r12: it
-    // routes the pattern to the BACKTRACKING walk, whose run-resolution
-    // rules (bounding row / window staleness) give the greedy trailing
-    // run a sound completion point on a stream
+    // a trailing quantified/optional step is allowed: the walk's
+    // run-resolution rules (bounding row / window staleness) give the
+    // greedy trailing run a sound completion point on a stream
   }
 
   /** The strict collapse-closure class check — [[validateCommon]] plus
-    * the closure rule. Retained for callers that want to ASSERT a
-    * pattern takes the O(buffer) greedy fast path rather than the
-    * backtracking walk.
+    * the closure rule, for callers that want to ASSERT a pattern lies
+    * in the class where greedy consumption is deterministic.
     */
   private[graft] def validate(pattern: Seq[Step]): Unit = {
     validateCommon(pattern)
@@ -623,29 +617,6 @@ object Cep {
         "ambiguous — fold A A into A+ or A)")
   }
 
-  /** The exact automaton both the batch fold and the streaming
-    * processor run: a SHARED-BUFFER matcher. State is the current
-    * partial match's rows; each fed row appends and the buffer is
-    * greedily re-walked against the pattern:
-    *
-    *   - PARTIAL (all rows consumed, pattern unfinished) → wait;
-    *   - COMPLETE → window check from the buffer head; if the window
-    *     kills it, fall back to the next candidate start inside the
-    *     buffer and re-walk (leftmost-start preference — every
-    *     pattern[0]-symbol row is a candidate, tried left to right);
-    *   - MISMATCH → same fallback.
-    *
-    * The walk is deterministic because adjacent step symbols are
-    * distinct (validate): a row can never both extend a OneOrMore step
-    * and open the next step, so greed never needs backtracking WITHIN
-    * a start — all backtracking is the start fallback, and each
-    * fallback strictly shrinks the buffer, so feed() terminates in
-    * O(|buffer|²) worst case per row (Flink's NFA pays the same shape
-    * on its shared buffer). The window bounds the buffer: a head older
-    * than ts − w can never start a completing match (completion ends
-    * at ts or later), and rows before the first viable start can never
-    * join a future match, so they prune eagerly.
-    */
   /** Per-step MEASURES of one match: rows the step consumed, their
     * cents-value sum and min/max, and the step's first/last event ids
     * (None when an optional step matched zero rows) — COUNT/SUM/MIN/
@@ -657,6 +628,32 @@ object Cep {
     max_value_c: Option[Long], first_event_id: Option[Long],
     last_event_id: Option[Long])
 
+  /** The exact automaton both the batch fold and the streaming
+    * processor run: a SHARED-BUFFER matcher. State is the buffered
+    * rows from the current candidate start on; each fed row appends
+    * and the buffer is re-walked from its head:
+    *
+    *   - PARTIAL (a more-preferred parse still waits on future rows)
+    *     → wait;
+    *   - COMPLETE → emit, resume per the after-match strategy;
+    *   - MISMATCH (no parse from this start, window included) → fall
+    *     back to the next candidate start inside the buffer and re-walk
+    *     (leftmost-start preference — every first-set row is a
+    *     candidate, tried left to right).
+    *
+    * Two walks, one per contiguity mode: every contiguous pattern —
+    * flat or grouped — compiles to the split-program and runs
+    * [[walkProg]]; every relaxed (followedBy) pattern runs
+    * [[walkRelaxedQ]]. Both are memoized backtracking in the
+    * quantifiers' preference order with the window checked at Accept,
+    * O(pattern · buffer²) per feed worst case — Flink's shared-buffer
+    * NFA pays the same order per event. Both resolve WINDOW-STALE heads
+    * themselves: a head older than fedTs − window can take no future
+    * row, so its pending branches are forced to Complete or Mismatch
+    * at the feed that makes it stale, which keeps the buffer bounded
+    * by the window span without a separate prune (timed-out-partial
+    * machines still prune, to surface a stale head's partial first).
+    */
   private[graft] final class Machine(pattern: IndexedSeq[Step],
       windowUs: Long, after: AfterMatch = SkipPastLast,
       contiguous: Boolean = true, grouped: Option[GPat] = None,
@@ -667,94 +664,86 @@ object Cep {
       // aggs list is the timeout sentinel, real matches must differ.
       needsAggs: Boolean = true)
       extends Serializable {
-    // GROUP-QUANTIFIER mode: the compiled split-program replaces the
-    // linear walks entirely (pattern then only feeds the alphabet);
-    // after-match is restricted to the two whole-match strategies —
-    // FIRST/LAST target FLAT step indices, which a repeated group's
-    // leaves don't have
+    // GROUP-QUANTIFIER mode: the compiled tree is the program (pattern
+    // then only lists its leaves); after-match is restricted to the two
+    // whole-match strategies — FIRST/LAST target FLAT step indices,
+    // which a repeated group's leaves don't have
     private val program: Vector[GInstr] = grouped match {
       case Some(g) =>
         require(contiguous, "cep: grouped patterns are contiguous-mode")
         require(after == SkipPastLast || after == SkipToNextRow,
           "cep: grouped patterns support AFTER MATCH SKIP PAST LAST " +
             "ROW / TO NEXT ROW (FIRST/LAST name flat steps)")
-        compileGrouped(g)
-      case None => null
+        validateGrouped(g)
+        compile(g)
+      case None =>
+        validateAfter(pattern, after)
+        // relaxed contiguity (Flink CEP's followedBy): rows between
+        // step matches are skipped (alternation sets and repeated
+        // symbols allowed: A B A and even A A are unambiguous under
+        // subsequence semantics)
+        if (contiguous) {
+          validateCommon(pattern)
+          // a flat step list is a GCat of leaves: leaf index == step
+          // index == pc, so the per-step rules below index by pc
+          compile(GCat(pattern.map(GLf(_))))
+        } else {
+          validateSubseq(pattern)
+          null
+        }
     }
     private val firstPred: String => Boolean = grouped match {
       case Some(g) =>
         val fs = gFirstSteps(g).toIndexedSeq
         tpe => fs.exists(_.matches(tpe))
-      case None => null
-    }
-    if (grouped.isEmpty) validateAfter(pattern, after)
-    // relaxed contiguity (Flink CEP's followedBy): rows between step
-    // matches are skipped (alternation sets allowed, repeated symbols
-    // allowed: A B A and even A A are unambiguous under earliest-next
-    // subsequence semantics; quantified/negation steps take the
-    // generalized walk — see `relaxedQ`)
-    if (grouped.isEmpty) {
-      if (contiguous) validateCommon(pattern) else validateSubseq(pattern)
+      case None => pattern(0).matches
     }
     // rows outside the alphabet can never join a match in relaxed
-    // mode — they are dropped at the door (they still advance pruning)
+    // mode — they are dropped at the door (they still advance time)
     private val alphabet: Set[String] = pattern.flatMap(_.syms).toSet
-    // patterns outside the collapse-closure class (A A, A+ B? A,
-    // intersecting adjacent symbol sets) take the memoized BACKTRACKING
-    // walk — regex-greedy semantics; closure patterns keep the O(n)
-    // greedy walk (behavior identical on that class, where exactly one
-    // parse per start exists)
-    private val backtrack = contiguous && (!closureHolds(pattern) ||
-      pattern.exists(st => st.cmp.isDefined || st.any || st.reluctant ||
-        st.neg || st.sumCap.isDefined || st.cross.nonEmpty) ||
-      pattern.last.bounds != ((1, 1)))
-    // (step, position) memoization is sound at step s only if no step
-    // t >= s references back across s (a cross ref to a step < s makes
-    // go(s, p)'s outcome depend on the PATH's earlier takes, not just
-    // (s, p)); from the last such back-reference onward memo re-enables
-    private val memoOkFrom: Array[Boolean] =
-      Array.tabulate(pattern.length)(s =>
+    // (pc, position) memoization gate, by pc (= step in flat and
+    // relaxed patterns). A cross reference to a step < s makes go(s, p)'s
+    // outcome depend on the PATH's earlier takes, not just (s, p), so
+    // memo is sound at s only if no step t >= s references back across
+    // s; from the last such back-reference onward it re-enables. A
+    // grouped program loops, which makes any per-pc gating circular:
+    // cross references there disable the memo wholesale, and the walk
+    // degrades to plain backtracking (window-bounded per feed,
+    // worst-case exponential on adversarial same-symbol runs).
+    private val memoOk: Array[Boolean] =
+      if (grouped.isDefined)
+        Array.fill(program.length)(!pattern.exists(_.cross.nonEmpty))
+      else Array.tabulate(pattern.length)(s =>
         (s until pattern.length).forall(t =>
           pattern(t).cross.forall(_.step >= s)))
-    // per-step flag: some later step's cross reference targets step s.
-    // Only those steps must record their take BEFORE each recursion
-    // (the predicate reads the current path); the rest record on the
-    // Complete unwind as before — recording eagerly for every step
-    // would allocate an O(take) list per backtracking attempt on
-    // cross-free patterns (O(c²) transient garbage per forced walk of
-    // a shrinking greedy run)
+    // per-step (per-LEAF for grouped) flag: some later step's cross
+    // reference targets it. Only those steps must record their take
+    // BEFORE each recursion (the predicate reads the current path); the
+    // rest record on the Complete unwind — recording eagerly for every
+    // step would allocate an O(take) list per backtracking attempt on
+    // cross-free patterns (O(c²) transient garbage per forced walk of a
+    // shrinking greedy run)
     private val crossTargeted: Array[Boolean] =
       Array.tabulate(pattern.length)(s =>
         pattern.exists(_.cross.exists(_.step == s)))
-    // grouped machines: `pattern` is the leaf list, so crossTargeted
-    // doubles as the per-LEAF eager-recording flag; this gate disables
-    // walkProg's (pc, position) memo when any leaf carries cross refs
-    private val groupedCross: Boolean =
-      program != null && pattern.exists(_.cross.nonEmpty)
-    // relaxed patterns with quantified, negation, or cross-referencing
-    // steps run the GENERALIZED subsequence walk (memoized backtracking
-    // over subsequence takes — its `taken` arrays are what cross
-    // navigation reads); plain One-step relaxed patterns keep the
-    // O(buffer) earliest-next walk
-    private val relaxedQ = !contiguous &&
-      pattern.exists(st => st.bounds != ((1, 1)) || st.neg ||
-        st.cross.nonEmpty)
     // TIMED-OUT PARTIAL MATCHES (Flink CEP's TimedOutPartialMatchHandler
     // — the abandoned-transaction surface) are implemented for the
     // contiguous collapse-closure class with a required-One tail under
     // SKIP PAST LAST ROW, where partial death is fully localized: the
     // post-emit buffer invariantly walks Partial from its head with
     // EVERY buffered row consumed, so a window-pruned head's partial
-    // match IS the buffer. The backtracking / relaxed / grouped walks
-    // resolve stale heads inside their own search where a single
-    // "the" partial is ambiguous — rejected rather than guessed.
-    if (withTimeouts) require(grouped.isEmpty && contiguous &&
-      !backtrack && after == SkipPastLast,
-      "cep: timed-out partials need a contiguous collapse-closure " +
-        "pattern with a required one-row tail under AFTER MATCH SKIP " +
-        "PAST LAST ROW (elsewhere the partial to surface is ambiguous)")
+    // match IS the buffer. Elsewhere a stale head is resolved inside
+    // the search, where a single "the" partial is ambiguous — rejected
+    // rather than guessed.
+    if (withTimeouts) {
+      require(grouped.isEmpty && contiguous && after == SkipPastLast,
+        "cep: timed-out partials need a contiguous collapse-closure " +
+          "pattern with a required one-row tail under AFTER MATCH SKIP " +
+          "PAST LAST ROW (elsewhere the partial to surface is ambiguous)")
+      validateTimeoutScope(pattern)
+    }
     // (ts, id, tpe, value_c) — value_c rides along untouched by the
-    // walk; MEASURES folds it per step span at completion
+    // walk; MEASURES folds it per step at completion
     private var buf = Vector.empty[(Long, Long, String, Long)]
 
     /** Checkpointable automaton state — the streaming processor carries
@@ -776,54 +765,26 @@ object Cep {
     private final val Complete = 1
     private final val Mismatch = 2
 
-    // per-step (offset, take) in buf of the LAST walk — valid only
-    // when that walk returned Complete (the MEASURES spans)
-    private val spanOff = new Array[Int](pattern.length)
-    private val spanLen = new Array[Int](pattern.length)
-    // per-step CONSUMED BUFFER POSITIONS of the last COMPLETE walk —
-    // non-null only when that walk was the generalized relaxed walk,
-    // whose quantified runs are SUBSEQUENCES the (off, len) spans
-    // cannot represent (Nil for a zero-width negation step)
+    // Of the last COMPLETE walk: per-step (per-LEAF for grouped)
+    // consumed buffer positions, ascending (Nil for a zero-width
+    // negation or an optional that took nothing), and the exclusive end
+    // of the last consumed row. Every match opens at the buffer head:
+    // the contiguous walk starts there and the relaxed walk first
+    // prunes up to its first candidate start.
     private var spanPos: Array[List[Int]] = null
+    private var matchEnd = -1
 
-    /** Greedy deterministic walk of the whole buffer from its head.
-      * Optional steps skip when the row does not match; when it does,
-      * consuming is the unique viable choice (validate's
-      * collapse-closure rule — see there for the argument).
-      */
-    /** Relaxed-contiguity walk: each One step consumes the EARLIEST
-      * matching row at or after the previous step's row, skipping
-      * non-matching rows (which stay in the buffer for later starts).
-      * Deterministic without any symbol-distinctness rule — earliest-
-      * next is a unique choice, and parse existence is MONOTONE in the
-      * start (a later start's step rows are never earlier), which is
-      * what makes the leftmost-preference fold complete: a later
-      * start's match can never be ready while an earlier start's parse
-      * is still pending.
-      */
-    private def walkSubseq(): Int = {
-      var p = 0
-      var s = 0
-      while (s < pattern.length) {
-        while (p < buf.length && !pattern(s).matches(buf(p)._3)) p += 1
-        if (p >= buf.length) return Partial
-        spanOff(s) = p
-        spanLen(s) = 1
-        p += 1
-        s += 1
-      }
-      Complete
-    }
-
-    /** GENERALIZED relaxed-contiguity walk — Flink CEP's looping
+    /** RELAXED-contiguity walk — Flink CEP's followedBy with looping
       * relaxed states and negative patterns: memoized backtracking
-      * over SUBSEQUENCE takes. A quantified step's run is a
-      * subsequence of matching rows (each additional loop row may skip
-      * non-matching rows); greedy prefers the LONGEST take — and since
-      * a subsequence run is never bounded by a non-matching row, a
+      * over SUBSEQUENCE takes. A step's run is a subsequence of
+      * matching rows (each additional loop row may skip non-matching
+      * rows); greedy prefers the LONGEST take — and since a
+      * subsequence run is never bounded by a non-matching row, a
       * below-cap run stays extendable by ANY future row, so greedy
       * commits only when the window closes over the start (futureOk
-      * false) or at the end-of-input flush. A negation step watches
+      * false) or at the end-of-input flush. A One step (bounds (1, 1))
+      * takes the EARLIEST matching row, so an all-One pattern gets
+      * earliest-next subsequence semantics. A negation step watches
       * the GAP to the next step's first consumed row (notFollowedBy —
       * a matching row there kills the branch); a TRAILING negation
       * watches the whole window horizon after the last consumed row
@@ -831,11 +792,7 @@ object Cep {
       * abandoned-cart pattern its emission point. The walk starts by
       * pruning rows before the first step-0 candidate (they can never
       * be consumed by this or any later start — keeps state
-      * window-bounded), and resolves WINDOW-STALE starts itself
-      * (futureOk false forces every take), so [[feedM]] skips the
-      * head prune exactly as it does for the contiguous backtracking
-      * walk. Same memo bound: O(|pattern| · |buffer|²) per feed with a
-      * window-bounded buffer.
+      * window-bounded).
       */
     private def walkRelaxedQ(fedTs: Long): Int = {
       // prune dead weight before the first candidate start
@@ -849,11 +806,12 @@ object Cep {
       val futureOk = fedTs <= horizon
       val memo = Array.ofDim[Byte](pattern.length, n + 1)
       val taken = new Array[List[Int]](pattern.length)
+      def accept(p: Int): Int = { matchEnd = p; Complete }
       // negWatch: symbol set of the negation step immediately before
       // step s (empty otherwise) — the gap to s's first consumed row
       def go(s: Int, p: Int, negWatch: Set[String]): Int = {
         if (s == pattern.length)
-          return if (buf(p - 1)._1 - startTs <= windowUs) Complete
+          return if (buf(p - 1)._1 - startTs <= windowUs) accept(p)
             else Mismatch
         val st = pattern(s)
         if (st.neg) {
@@ -864,13 +822,13 @@ object Cep {
             while (q < n) {
               // a buffered row past the horizon proves no in-horizon
               // row can still arrive (rows are fed in ts order)
-              if (buf(q)._1 > horizon) { taken(s) = Nil; return Complete }
+              if (buf(q)._1 > horizon) { taken(s) = Nil; return accept(p) }
               if (st.matches(buf(q)._3)) return Mismatch
               q += 1
             }
             if (futureOk) return Partial
             taken(s) = Nil
-            Complete
+            accept(p)
           } else {
             // middle absence: delegate the gap watch to the next
             // (required — validateNeg) consuming step's scan. Zero
@@ -881,12 +839,10 @@ object Cep {
             go(s + 1, p, st.syms)
           }
         } else {
-          // memo reads AND writes are gated on memoOkFrom, exactly as
-          // walkBack's: a position a later step's cross-variable
-          // reference reaches back across is path-dependent (go(s, p)'s
-          // outcome depends on the referenced step's take, not just
-          // (s, p)) and must not be cached
-          val mOk = memoOkFrom(s)
+          // memo reads AND writes are gated on memoOk: a position a
+          // later step's cross-variable reference reaches back across is
+          // path-dependent and must not be cached
+          val mOk = memoOk(s)
           if (mOk && memo(s)(p) != 0)
             return if (memo(s)(p) == 3) Partial else Mismatch
           val (lo, hi) = st.bounds
@@ -894,7 +850,7 @@ object Cep {
           // (set before each recursion): FIRST/LAST of the referenced
           // step's consumed positions — a zero-take referenced span is
           // NULL, the row never matches (NULL-comparison semantics,
-          // same as walkBack's span navigation)
+          // same as the contiguous walk's pool navigation)
           def crossOk(q: Int): Boolean =
             st.cross.forall { cr =>
               val tk = taken(cr.step)
@@ -978,197 +934,36 @@ object Cep {
       r
     }
 
-    /** Memoized backtracking walk — regex-greedy semantics for
-      * patterns OUTSIDE the collapse-closure class. At each step,
-      * takes are tried LONGEST FIRST (greedy); on a dead end the walk
-      * backs off to a shorter take (the choice closure-class patterns
-      * never face). Two stream-correctness rules the batch-regex view
-      * doesn't have:
+    /** CONTIGUOUS walk: interpret the split-program with regex-greedy
+      * backtracking — split arms in preference order, each leaf's takes
+      * over the run of rows it matches in its quantifier's preference
+      * order (greedy longest first, reluctant shortest first), the
+      * first non-Mismatch outcome deciding. Two stream-correctness
+      * rules the batch-regex view doesn't have:
       *
-      *   - A step whose run reaches the buffer end below its cap may
-      *     still grow with FUTURE rows; greedy must prefer that longer
+      *   - A leaf whose run reaches the buffer end below its cap may
+      *     still grow with FUTURE rows. Greedy must prefer that longer
       *     take over any shorter-take completion available now, so the
       *     walk returns Partial (wait) — UNLESS the window already
-      *     excludes future ends (fedTs > start + window), in which
-      *     case the decision is forced now.
-      *   - The window check lives INSIDE the walk (a parse ending
-      *     beyond the window is a dead branch, and a SHORTER take may
-      *     still fit — Flink's within() prunes NFA branches the same
-      *     way). Completions may therefore land MID-buffer: the
-      *     longest window-valid end can precede rows that arrived
-      *     after it. This is also why [[feedM]] skips the head ts
-      *     prune in backtrack mode: a stale head may still own a
-      *     window-valid mid-buffer completion, and this walk resolves
-      *     every stale head to Complete or Mismatch at the next feed,
-      *     which keeps state window-bounded without the prune.
+      *     excludes future ends (fedTs > start + window: futureOk
+      *     false), in which case the decision is forced now. A blocked
+      *     completion is not lost: when the preferred branch resolves
+      *     to Mismatch at a later feed, or futureOk turns false, the
+      *     take loop reaches it then.
+      *   - The window check lives at Accept (a parse ending beyond the
+      *     window is a dead branch, and a SHORTER take may still fit —
+      *     Flink's within() prunes NFA branches the same way).
+      *     Completions may therefore land MID-buffer: the longest
+      *     window-valid end can precede rows that arrived after it. A
+      *     stale head may own such a completion, which is why no feed
+      *     prunes heads by time before walking.
       *
-      * Memoizing failed (step, pos) states bounds the walk at
-      * O(|pattern| · |buffer|²) — Flink's shared-buffer NFA pays the
-      * same order per event.
-      */
-    private def walkBack(fedTs: Long): Int = {
-      val n = buf.length
-      if (n == 0) return Partial
-      val startTs = buf(0)._1
-      val futureOk = fedTs <= startTs + windowUs
-      val memo = Array.ofDim[Byte](pattern.length, n + 1)
-      def go(s: Int, p: Int): Int = {
-        if (s == pattern.length) {
-          // p >= 1: the first step is required (validateCommon)
-          return if (buf(p - 1)._1 - startTs <= windowUs) Complete
-            else Mismatch
-        }
-        // memo codes are DISTINCT from the status constants: 3 =
-        // Partial, 2 = Mismatch (1 is never stored — Complete returns
-        // carry span state and short-circuit the walk). Partial today
-        // unwinds the whole walk immediately, so the 3-branch is never
-        // re-read in practice, but encoding it distinctly keeps any
-        // future keep-exploring refactor from reading a memoized
-        // Partial back as Complete with stale span arrays. Reads AND
-        // writes are gated on memoOkFrom: a position a later step's
-        // cross-variable reference reaches back across is path-
-        // dependent and must not be cached.
-        val mOk = memoOkFrom(s)
-        if (mOk && memo(s)(p) != 0)
-          return if (memo(s)(p) == 3) Partial else Mismatch
-        val st = pattern(s)
-        if (st.neg) {
-          // ZERO-WIDTH notNext: the physically next row — if one exists
-          // inside the window horizon — must not match the neg symbol
-          // set; a next row BEYOND the horizon is outside the
-          // assertion's scope (pass), and no-next-row stays Partial
-          // until the window closes (then the assertion is vacuously
-          // confirmed: any future row lands past the horizon).
-          // span set BEFORE the recursion: later steps' cross-variable
-          // references read the current path's spans (a zero-width
-          // step's span is (p, 0); cross refs to negs are rejected)
-          spanOff(s) = p; spanLen(s) = 0
-          val r =
-            if (p < n) {
-              if (buf(p)._1 > startTs + windowUs) go(s + 1, p)
-              else if (st.matches(buf(p)._3)) Mismatch
-              else go(s + 1, p)
-            } else if (futureOk) Partial
-            else go(s + 1, p)
-          if (r != Complete && mOk) memo(s)(p) = if (r == Partial) 3 else 2
-          return r
-        }
-        val (lo, hi) = st.bounds
-        // DEFINE predicates compare against the row cmpOff back —
-        // buf(q - cmpOff), PREV(X.value, k) over PHYSICAL input rows
-        // (contiguous-mode buffers append every fed row and drop
-        // prefixes only). q < cmpOff has no such row (None — a cmp
-        // step never matches there; validateCommon keeps cmp off
-        // step 0 so q >= 1 in practice). CROSS-VARIABLE references
-        // read the current path's spans (set before each recursion):
-        // FIRST/LAST of the referenced step's consumed run — a
-        // zero-take referenced span is NULL, the row never matches.
-        def rowOk(q: Int): Boolean =
-          st.matchesRow(buf(q)._3, buf(q)._4,
-            if (q >= st.cmpOff) Some(buf(q - st.cmpOff)._4) else None) &&
-          st.cross.forall { cr =>
-            spanLen(cr.step) > 0 && cmpHolds(cr.cmp, buf(q)._4,
-              buf(if (cr.first) spanOff(cr.step)
-                  else spanOff(cr.step) + spanLen(cr.step) - 1)._4)
-          }
-        var c = 0
-        // the running-aggregate DEFINE (SUM <= cap): per-row
-        // evaluation — the first row that would push the run's sum
-        // past the cap fails its predicate and BOUNDS the run exactly
-        // like a non-matching row (so it also closes canExtend)
-        var runSum = 0L
-        var capped = false
-        while (p + c < n && c < hi && !capped && rowOk(p + c)) {
-          st.sumCap match {
-            case Some(cap) =>
-              if (runSum + buf(p + c)._4 > cap) capped = true
-              else { runSum += buf(p + c)._4; c += 1 }
-            case None => c += 1
-          }
-        }
-        // Takes are tried in the step's PREFERENCE order and the first
-        // non-Mismatch outcome decides: Complete commits; Partial
-        // means a MORE-PREFERRED branch is still undecidable, and
-        // committing to a less-preferred take now would violate the
-        // quantifier's bias — wait instead (the blocked completion is
-        // not lost: when the preferred branch resolves to Mismatch at
-        // a later feed, or the window forces futureOk false and
-        // eliminates every Partial source, the loop reaches it then).
-        //   GREEDY preference:    [future extension?, c, c-1, …, lo]
-        //   RELUCTANT preference: [lo, lo+1, …, c, future extension?]
-        // "future extension?" — the run reaching the buffer end below
-        // its cap might still grow; it is the MOST preferred branch
-        // for greedy and the LEAST for reluctant, hence the asymmetric
-        // placement of the canExtend check.
-        val canExtend = p + c >= n && c < hi
-        // spans are set BEFORE each recursion (not on the Complete
-        // unwind): later steps' cross-variable references read the
-        // current path's takes; Complete short-circuits, so the
-        // accepted path's values are exactly what remains
-        if (!st.reluctant) {
-          if (canExtend && futureOk) {
-            if (mOk) memo(s)(p) = 3
-            return Partial
-          }
-          var take = c
-          while (take >= lo) {
-            spanOff(s) = p; spanLen(s) = take
-            go(s + 1, p + take) match {
-              case Complete =>
-                return Complete
-              case Partial =>
-                if (mOk) memo(s)(p) = 3
-                return Partial
-              case _ => take -= 1
-            }
-          }
-        } else {
-          var take = lo
-          while (take <= c) {
-            spanOff(s) = p; spanLen(s) = take
-            go(s + 1, p + take) match {
-              case Complete =>
-                return Complete
-              case Partial =>
-                if (mOk) memo(s)(p) = 3
-                return Partial
-              case _ => take += 1
-            }
-          }
-          if (canExtend && futureOk) {
-            if (mOk) memo(s)(p) = 3
-            return Partial
-          }
-        }
-        if (mOk) memo(s)(p) = 2
-        Mismatch
-      }
-      go(0, 0)
-    }
-
-    // end-of-input flush in progress: force the backtracking walk (its
-    // futureOk gate is the only place run-extension pending lives, and
-    // it is semantically identical to the greedy walk on the closure
-    // class), with a fedTs past every window so greed resolves NOW
-    private var flushing = false
-
-    // exclusive end position (in buf) of the last COMPLETE program
-    // walk — the grouped machine's whole-match span (consumption is
-    // contiguous from the buffer head, so [0, progEnd) IS the match)
-    private var progEnd = -1
-
-    /** GROUP-PROGRAM walk: interpret the compiled split-program with
-      * the shared backtracking discipline — split arms in preference
-      * order (first non-Mismatch decides, Partial short-circuits), a
-      * leaf run take-loop identical to walkBack's (sum caps, PREV
-      * offsets, reluctant bias, the futureOk pending gate), and the
-      * window check at Accept so shorter parses survive a
-      * window-killed longest one. Memo on (pc, position) — the
-      * continuation is fixed by pc, which is what makes the program
-      * form memoizable where a tree walk with continuations is not.
-      * Same bound as walkBack: O(program · buffer²) per feed.
+      * Memo on (pc, position) — the continuation is fixed by pc, which
+      * is what makes the program form memoizable where a tree walk with
+      * continuations is not; codes 3 = Partial, 2 = Mismatch (Complete
+      * short-circuits and is never stored).
       *
-      * CROSS-VARIABLE DEFINE (r17): a leaf's cross references read the
+      * CROSS-VARIABLE DEFINE: a leaf's cross references read the
       * referenced LEAF's consumed-position pool as of the current path
       * — accumulated ACROSS group iterations. Cross-targeted leaves
       * record their take BEFORE the recursion (append in execution
@@ -1176,15 +971,7 @@ object Cep {
       * earlier body leaf sees the CURRENT iteration's rows too —
       * Flink's IterativeCondition reading. An empty pool (alternation
       * arm not taken, optional that consumed nothing, a first-set leaf
-      * opening the match) is NULL: the row does not match. With cross
-      * references present the (pc, position) memo is UNSOUND (the
-      * outcome depends on the path's takes, not just (pc, p) — and
-      * loop back-jumps make any per-pc gating circular), so it is
-      * disabled wholesale for such patterns: the walk degrades to
-      * plain backtracking, window-bounded per feed, worst-case
-      * exponential on adversarial same-symbol runs — the same
-      * documented acceptance as the relaxed cross walk. Cross-free
-      * grouped patterns keep the memo and the exact r16 behavior.
+      * opening the match) is NULL: the row does not match.
       */
     private def walkProg(fedTs: Long): Int = {
       val n = buf.length
@@ -1200,200 +987,154 @@ object Cep {
       // return Mismatch before recording; memo hits can't lose spans
       // because Complete is never memoized (it short-circuits).
       val taken = Array.fill(pattern.length)(List.empty[Int])
+      // ZERO-WIDTH notNext: the physically next row — if one exists
+      // inside the window horizon — must not match the neg symbol set;
+      // a next row BEYOND the horizon is outside the assertion's scope
+      // (pass), and no-next-row stays Partial until the window closes
+      // (then the assertion is vacuously confirmed: any future row
+      // lands past the horizon)
+      def notNext(st: Step, pc: Int, p: Int): Int =
+        if (p < n) {
+          if (buf(p)._1 <= startTs + windowUs && st.matches(buf(p)._3))
+            Mismatch
+          else go(pc + 1, p)
+        } else if (futureOk) Partial
+        else go(pc + 1, p)
+      def run(st: Step, leaf: Int, pc: Int, p: Int): Int = {
+        val (lo, hi) = st.bounds
+        // DEFINE predicates compare against the row cmpOff back —
+        // buf(q - cmpOff), PREV(X.value, k) over PHYSICAL input rows
+        // (contiguous buffers append every fed row and drop prefixes
+        // only); q < cmpOff has no such row (None — a cmp step never
+        // matches there). Cross navigation: FIRST/LAST over the
+        // referenced leaf's current-path pool; empty pool = NULL = no
+        // match, and a row failing it BOUNDS the run (contiguous
+        // semantics: kill, not skip).
+        def crossOk(q: Int): Boolean =
+          st.cross.forall { cr =>
+            val tk = taken(cr.step)
+            tk.nonEmpty && cmpHolds(cr.cmp, buf(q)._4,
+              buf(if (cr.first) tk.head else tk.last)._4)
+          }
+        def rowOk(q: Int): Boolean =
+          st.matchesRow(buf(q)._3, buf(q)._4,
+            if (q >= st.cmpOff) Some(buf(q - st.cmpOff)._4) else None) &&
+            (st.cross.isEmpty || crossOk(q))
+        var c = 0
+        // the running-aggregate DEFINE (SUM <= cap): the first row that
+        // would push the run's sum past the cap fails its predicate and
+        // BOUNDS the run exactly like a non-matching row
+        var runSum = 0L
+        var capped = false
+        while (p + c < n && c < hi && !capped && rowOk(p + c)) {
+          st.sumCap match {
+            case Some(cap) =>
+              if (runSum + buf(p + c)._4 > cap) capped = true
+              else { runSum += buf(p + c)._4; c += 1 }
+            case None => c += 1
+          }
+        }
+        // Preference order, first non-Mismatch outcome decides:
+        //   GREEDY:    [future extension?, c, c-1, …, lo]
+        //   RELUCTANT: [lo, lo+1, …, c, future extension?]
+        // "future extension?" — the run reaching the buffer end below
+        // its cap might still grow: the MOST preferred branch for
+        // greedy and the LEAST for reluctant.
+        val canExtend = p + c >= n && c < hi
+        // cross-TARGETED leaves record their take BEFORE the recursion
+        // (execution-order append, restored on backtrack) so later
+        // leaves' cross references read the current path; the rest
+        // record on the Complete unwind (reverse-order prepend)
+        def attempt(take: Int): Int =
+          if (crossTargeted(leaf)) {
+            val saved = taken(leaf)
+            taken(leaf) = saved ::: (p until p + take).toList
+            val r = go(pc + 1, p + take)
+            if (r != Complete) taken(leaf) = saved
+            r
+          } else {
+            val r = go(pc + 1, p + take)
+            if (r == Complete)
+              taken(leaf) = (p until p + take).toList ::: taken(leaf)
+            r
+          }
+        if (!st.reluctant) {
+          if (canExtend && futureOk) return Partial
+          var take = c
+          while (take >= lo) {
+            val r = attempt(take)
+            if (r != Mismatch) return r
+            take -= 1
+          }
+        } else {
+          var take = lo
+          while (take <= c) {
+            val r = attempt(take)
+            if (r != Mismatch) return r
+            take += 1
+          }
+          if (canExtend && futureOk) return Partial
+        }
+        Mismatch
+      }
       def go(pc: Int, p: Int): Int = program(pc) match {
         case AcceptI =>
-          if (p == 0) Mismatch // gMinLen >= 1 makes this unreachable
-          else if (buf(p - 1)._1 - startTs <= windowUs) {
-            progEnd = p
+          // p >= 1: every program consumes a row (validateCommon's
+          // required first step, validateGrouped's gMinLen >= 1)
+          if (buf(p - 1)._1 - startTs <= windowUs) {
+            matchEnd = p
             Complete
           } else Mismatch
         case JumpI(k) => go(k, p)
         case SplitI(a, b) =>
           val r = go(a, p)
           if (r != Mismatch) r else go(b, p)
-        case RunM(st, leaf) =>
-          // memo disabled wholesale for cross-carrying patterns (see
-          // the walk's scaladoc); cross-free patterns keep it exactly
-          val mOk = !groupedCross
-          if (mOk && memo(pc)(p) != 0)
-            return if (memo(pc)(p) == 3) Partial else Mismatch
-          val (lo, hi) = st.bounds
-          // cross navigation: FIRST/LAST over the referenced leaf's
-          // current-path pool; empty pool = NULL = no match (a row
-          // failing it BOUNDS the run — contiguous semantics, exactly
-          // walkBack's kill-not-skip reading)
-          def crossOk(q: Int): Boolean =
-            st.cross.forall { cr =>
-              val tk = taken(cr.step)
-              tk.nonEmpty && cmpHolds(cr.cmp, buf(q)._4,
-                buf(if (cr.first) tk.head else tk.last)._4)
-            }
-          def rowOk(q: Int): Boolean =
-            st.matchesRow(buf(q)._3, buf(q)._4,
-              if (q >= st.cmpOff) Some(buf(q - st.cmpOff)._4) else None) &&
-              (st.cross.isEmpty || crossOk(q))
-          var c = 0
-          var runSum = 0L
-          var capped = false
-          while (p + c < n && c < hi && !capped && rowOk(p + c)) {
-            st.sumCap match {
-              case Some(cap) =>
-                if (runSum + buf(p + c)._4 > cap) capped = true
-                else { runSum += buf(p + c)._4; c += 1 }
-              case None => c += 1
-            }
-          }
-          val canExtend = p + c >= n && c < hi && !capped
-          // cross-TARGETED leaves record their take BEFORE the
-          // recursion (execution-order append, restored on backtrack)
-          // so later leaves' cross references read the current path;
-          // the rest record on the Complete unwind (reverse-order
-          // prepend) as before — no per-attempt allocation for them
-          def attempt(take: Int): Int =
-            if (crossTargeted(leaf)) {
-              val saved = taken(leaf)
-              taken(leaf) = saved ::: (p until p + take).toList
-              val r = go(pc + 1, p + take)
-              if (r != Complete) taken(leaf) = saved
-              r
-            } else {
-              val r = go(pc + 1, p + take)
-              if (r == Complete)
-                taken(leaf) = (p until p + take).toList ::: taken(leaf)
-              r
-            }
-          if (!st.reluctant) {
-            if (canExtend && futureOk) {
-              if (mOk) memo(pc)(p) = 3
-              return Partial
-            }
-            var take = c
-            while (take >= lo) {
-              attempt(take) match {
-                case Complete => return Complete
-                case Partial  =>
-                  if (mOk) memo(pc)(p) = 3
-                  return Partial
-                case _        => take -= 1
-              }
-            }
-          } else {
-            var take = lo
-            while (take <= c) {
-              attempt(take) match {
-                case Complete => return Complete
-                case Partial  =>
-                  if (mOk) memo(pc)(p) = 3
-                  return Partial
-                case _        => take += 1
-              }
-            }
-            if (canExtend && futureOk) {
-              if (mOk) memo(pc)(p) = 3
-              return Partial
-            }
-          }
-          if (mOk) memo(pc)(p) = 2
-          Mismatch
+        case NotNextI(st)   => memoized(pc, p)(notNext(st, pc, p))
+        case RunM(st, leaf) => memoized(pc, p)(run(st, leaf, pc, p))
+      }
+      def memoized(pc: Int, p: Int)(body: => Int): Int = {
+        val mOk = memoOk(pc)
+        if (mOk && memo(pc)(p) != 0)
+          return if (memo(pc)(p) == 3) Partial else Mismatch
+        val r = body
+        if (mOk && r != Complete) memo(pc)(p) = if (r == Partial) 3 else 2
+        r
       }
       val r = go(0, 0)
       if (r == Complete) spanPos = taken
       r
     }
 
-    private def walk(fedTs: Long): Int = {
-      spanPos = null
-      progEnd = -1
-      if (program != null) return walkProg(fedTs)
-      if (!contiguous)
-        return if (relaxedQ) walkRelaxedQ(fedTs) else walkSubseq()
-      if (backtrack || flushing) return walkBack(fedTs)
-      var p = 0
-      var s = 0
-      while (s < pattern.length) {
-        if (p >= buf.length) return Partial
-        val st = pattern(s)
-        val (lo, hi) = st.bounds
-        var c = 0
-        spanOff(s) = p
-        while (p < buf.length && c < hi && st.matches(buf(p)._3)) {
-          p += 1; c += 1
-        }
-        // buffer exhausted below the cap: the run may still extend (or
-        // later steps need rows either way) — wait for more input
-        if (p >= buf.length && c < hi) return Partial
-        // here the run ended naturally (next row doesn't match) or hit
-        // the cap; a leftover same-symbol row can never match the next
-        // step (collapse-closure disjointness), so c is THE run take
-        if (c >= lo) { spanLen(s) = c; s += 1 }
-        else return Mismatch
-      }
-      // Complete even if rows trail (p < buf.length). In the plain
-      // feed flow completion lands on the fed row (the buffer held a
-      // strict partial before it arrived), but a buffer RETAINED by an
-      // overlap after-match resume, or re-walked after a fallback, is
-      // an incremental REPLAY of already-seen rows — a parse ending
-      // mid-buffer is one that a fresh machine fed those rows one at a
-      // time would have emitted at its own completing feed, so it must
-      // count here too (the going-loop then continues on the rest).
-      Complete
-    }
-
-    /** Drop through the next candidate start (a pattern[0]-symbol row
-      * after the current head); false when none remains (buffer
-      * emptied).
+    /** Drop through the next candidate start (a first-set row after the
+      * current head); false when none remains (buffer emptied).
       */
     private def dropToNextStart(): Boolean = {
-      val i =
-        if (program != null) buf.indexWhere(r => firstPred(r._3), 1)
-        else buf.indexWhere(r => pattern(0).matches(r._3), 1)
+      val i = buf.indexWhere(r => firstPred(r._3), 1)
       if (i < 0) { buf = Vector.empty; false }
       else { buf = buf.drop(i); true }
     }
 
-    /** MEASURES fold over the just-completed walk's spans (or, for the
-      * generalized relaxed walk, its per-step consumed positions).
+    /** MEASURES fold over the just-completed walk's per-step consumed
+      * positions.
       */
     private def stepAggs(): List[StepAgg] =
       pattern.indices.map { s =>
-        if (spanPos != null) {
-          val ps = spanPos(s)
-          if (ps.isEmpty)
-            StepAgg(s, pattern(s).symbol, 0L, 0L, None, None, None, None)
-          else {
-            var sum = 0L
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            ps.foreach { i =>
-              val v = buf(i)._4
-              sum += v
-              if (v < mn) mn = v
-              if (v > mx) mx = v
-            }
-            StepAgg(s, pattern(s).symbol, ps.length.toLong, sum,
-              Some(mn), Some(mx), Some(buf(ps.head)._2),
-              Some(buf(ps.last)._2))
-          }
-        } else {
-        val off = spanOff(s)
-        val len = spanLen(s)
-        if (len == 0)
+        val ps = spanPos(s)
+        if (ps.isEmpty)
           StepAgg(s, pattern(s).symbol, 0L, 0L, None, None, None, None)
         else {
           var sum = 0L
           var mn = Long.MaxValue
           var mx = Long.MinValue
-          var i = off
-          while (i < off + len) {
+          ps.foreach { i =>
             val v = buf(i)._4
             sum += v
             if (v < mn) mn = v
             if (v > mx) mx = v
-            i += 1
           }
-          StepAgg(s, pattern(s).symbol, len.toLong, sum, Some(mn), Some(mx),
-            Some(buf(off)._2), Some(buf(off + len - 1)._2))
-        }
+          StepAgg(s, pattern(s).symbol, ps.length.toLong, sum,
+            Some(mn), Some(mx), Some(buf(ps.head)._2),
+            Some(buf(ps.last)._2))
         }
       }.toList
 
@@ -1406,37 +1147,17 @@ object Cep {
       */
     def feedM(ts: Long, id: Long, tpe: String,
         valueC: Long): List[(CepMatch, List[StepAgg])] = {
-      // window prune: heads that can no longer start a completing
-      // match. Sound because in the greedy/subseq walks completions
-      // always land on the fed row (end ts >= ts, so a stale head's
-      // parse is window-dead). NOT sound in backtrack mode — a stale
-      // head may still own a window-valid MID-buffer completion — so
-      // there walkBack resolves stale heads itself (Complete or
-      // Mismatch at this very feed; see its scaladoc). The generalized
-      // relaxed walk and the group program resolve their own stale
-      // heads the same way.
-      if (!backtrack && !relaxedQ && program == null)
-        pruneStaleHeads(ts)
+      if (withTimeouts) pruneStaleHeads(ts)
       // relaxed mode: a row outside the alphabet can never join a
-      // match — skip it after the prune. For the One-step subsequence
-      // walk no re-walk is needed (parse existence is monotone in the
-      // start — walkSubseq's doc); the GENERALIZED relaxed walk's
-      // pendings also resolve by TIME (window expiry over a greedy run
-      // or a trailing absence), so there the row's timestamp still
-      // advances the machine even though the row itself is dropped.
-      if (!contiguous && !alphabet.contains(tpe))
-        return if (relaxedQ) advance(ts) else Nil
+      // match, but pendings also resolve by TIME (window expiry over a
+      // greedy run or a trailing absence), so its timestamp still
+      // advances the machine even though the row itself is dropped
+      if (!contiguous && !alphabet.contains(tpe)) return advance(ts)
       buf = buf :+ ((ts, id, tpe, valueC))
       val out = scala.collection.mutable.ListBuffer
         .empty[(CepMatch, List[StepAgg])]
       emitLoop(ts, out)
-      if (timeoutsQ.isEmpty) out.toList
-      else {
-        // timeouts chronologically precede the fed row's own matches
-        val t = timeoutsQ.toList
-        timeoutsQ.clear()
-        t ++ out.toList
-      }
+      timeoutsThen(out)
     }
 
     // window-pruned partials awaiting this feed's return (withTimeouts
@@ -1444,21 +1165,40 @@ object Cep {
     private val timeoutsQ = scala.collection.mutable.ListBuffer
       .empty[(CepMatch, List[StepAgg])]
 
-    /** Drop heads whose window closed at `ts` (simple-walk classes
-      * only — the backtracking/relaxed/grouped walks resolve their own
-      * stale heads). With timeouts on, a dropped head still walking
-      * Partial surfaces first: its buffered rows ARE the partial match
-      * (post-emit invariant — every buffered row is consumed by the
-      * prefix parse), queued through the completion channel with the
-      * EMPTY-aggs sentinel the timeout surfaces key on (a real match
-      * always carries one StepAgg per step).
+    // timeouts chronologically precede the same call's matches
+    private def timeoutsThen(out: scala.collection.mutable.ListBuffer[
+        (CepMatch, List[StepAgg])]): List[(CepMatch, List[StepAgg])] =
+      if (timeoutsQ.isEmpty) out.toList
+      else {
+        val t = timeoutsQ.toList
+        timeoutsQ.clear()
+        t ++ out.toList
+      }
+
+    /** The head's partial match as a timeout record: with the post-emit
+      * invariant every buffered row is consumed by the head's prefix
+      * parse, so the partial IS the buffer. It carries the EMPTY-aggs
+      * sentinel the timeout surfaces key on (a real match always
+      * carries one StepAgg per step).
+      */
+    private def headPartial: (CepMatch, List[StepAgg]) =
+      (CepMatch(-1L, buf.head._2, buf.head._1, buf.last._2, buf.last._1,
+        buf.length.toLong), Nil)
+
+    /** Whether the head still walks Partial — its parse consumed every
+      * buffered row and waits on more. The walk runs with futureOk held
+      * true (a fedTs before every horizon): only running out of rows
+      * makes it wait, never the time.
+      */
+    private def headPending: Boolean = walkProg(Long.MinValue) == Partial
+
+    /** withTimeouts only: drop the heads whose window closed at `ts`, a
+      * head still waiting on rows surfacing first as a timed-out partial.
       */
     private def pruneStaleHeads(ts: Long): Unit =
       while (buf.nonEmpty && ts - buf.head._1 > windowUs) {
-        if (withTimeouts && walk(ts) == Partial)
-          timeoutsQ += ((CepMatch(-1L, buf.head._2, buf.head._1,
-            buf.last._2, buf.last._1, buf.length.toLong), Nil))
-        if (!dropToNextStart()) ()
+        if (headPending) timeoutsQ += headPartial
+        dropToNextStart()
       }
 
     /** TIME-ADVANCE without a row: resolve every pending decision
@@ -1467,8 +1207,7 @@ object Cep {
       * passes the start's horizon. The streaming processor calls this
       * from its event-time timers (absence emission must not wait for
       * a next row); the batch fold gets the same effect from fed-row
-      * timestamps plus the end-of-input [[flush]]. A no-op for walks
-      * whose pendings only wait for rows.
+      * timestamps plus the end-of-input [[flush]].
       */
     def advance(ts: Long): List[(CepMatch, List[StepAgg])] = {
       // with timeouts on, a watermark advance expires stale heads the
@@ -1479,12 +1218,7 @@ object Cep {
       val out = scala.collection.mutable.ListBuffer
         .empty[(CepMatch, List[StepAgg])]
       emitLoop(ts, out)
-      if (timeoutsQ.isEmpty) out.toList
-      else {
-        val t = timeoutsQ.toList
-        timeoutsQ.clear()
-        t ++ out.toList
-      }
+      timeoutsThen(out)
     }
 
     /** The earliest instant a pending decision could still be waiting
@@ -1495,86 +1229,46 @@ object Cep {
       */
     def pendingHorizonUs: Option[Long] = buf.headOption.map(_._1 + windowUs)
 
-    /** The walk-emit-fallback loop shared by [[feedM]] and [[flush]]:
-      * walk the buffer, emit completions (resuming per the after-match
-      * strategy), fall back through candidate starts on mismatches and
-      * window kills, stop on Partial.
+    /** The walk-emit-fallback loop shared by [[feedM]], [[advance]] and
+      * [[flush]]: walk the buffer, emit completions (resuming per the
+      * after-match strategy), fall back through candidate starts on
+      * mismatches, stop on Partial. A Complete walk has already passed
+      * its window check at Accept.
       */
     private def emitLoop(fedTs: Long,
         out: scala.collection.mutable.ListBuffer[(CepMatch, List[StepAgg])])
         : Unit = {
       var going = buf.nonEmpty
       while (going) {
-        walk(fedTs) match {
+        val r = if (program != null) walkProg(fedTs) else walkRelaxedQ(fedTs)
+        r match {
           case Partial => going = false
           case Complete =>
-            // match boundaries from the walk's spans: start = step 0's
-            // first row; end = the LAST CONSUMING step's last row (a
-            // trailing zero-width negation consumes nothing). The
-            // generalized relaxed walk reports non-contiguous
-            // consumption via spanPos, the GROUP PROGRAM its exclusive
-            // end (consumption contiguous from the head); the others
-            // via (off, len).
-            val startIdx =
-              if (progEnd >= 0) 0
-              else if (spanPos != null) spanPos(0).head else spanOff(0)
-            // contiguous walks: a trailing zero-width/empty step has
-            // spanOff = p and spanLen = 0, so off + len - 1 is still
-            // the last CONSUMED row's index
-            val endIdx =
-              if (progEnd >= 0) progEnd - 1
-              else if (spanPos != null)
-                spanPos.reverseIterator.collectFirst {
-                  case l if l.nonEmpty => l.last
-                }.get
-              else spanOff(pattern.length - 1) +
-                spanLen(pattern.length - 1) - 1
-            val (sTs, sId, _, _) = buf(startIdx)
-            val (eTs, eId, _, _) = buf(endIdx)
-            if (eTs - sTs <= windowUs) {
-              var n = 0L
-              if (progEnd >= 0) n = progEnd.toLong
-              else {
-                var s = 0
-                while (s < pattern.length) {
-                  n += (if (spanPos != null) spanPos(s).length.toLong
-                    else spanLen(s).toLong)
-                  s += 1
-                }
+            val (sTs, sId, _, _) = buf(0)
+            val (eTs, eId, _, _) = buf(matchEnd - 1)
+            val n = spanPos.iterator.map(_.length.toLong).sum
+            val aggs = if (needsAggs) stepAggs() else Nil
+            if (withRows) rowsQ += pattern.indices.iterator.flatMap { s =>
+              spanPos(s).iterator.map { i =>
+                val (ts, id, tpe, vc) = buf(i)
+                (s, ts, id, tpe, vc)
               }
-              // the group program populates spanPos too (per-LEAF
-              // positions across iterations), so grouped matches carry
-              // real MEASURES since r14
-              val aggs = if (needsAggs) stepAggs() else Nil
-              if (withRows) rowsQ += pattern.indices.iterator.flatMap {
-                s =>
-                  val ps =
-                    if (spanPos != null) spanPos(s)
-                    else (spanOff(s) until spanOff(s) + spanLen(s)).toList
-                  ps.iterator.map { i =>
-                    val (ts, id, tpe, vc) = buf(i)
-                    (s, ts, id, tpe, vc)
-                  }
-              }.toList
-              out += ((CepMatch(-1L, sId, sTs, eId, eTs, n), aggs))
-              // resume point per strategy; every case drops >= 1 row
-              // (validateAfter), so the loop strictly progresses —
-              // the retained suffix may close further matches at this
-              // same fed row, keep walking
-              val resume = after match {
-                case SkipPastLast   => endIdx + 1
-                case SkipToNextRow  => startIdx + 1
-                case SkipToFirst(k) =>
-                  if (spanPos != null) spanPos(k).head else spanOff(k)
-                case SkipToLast(k)  =>
-                  if (spanPos != null) spanPos(k).last
-                  else spanOff(k) + spanLen(k) - 1
-              }
-              buf = buf.drop(resume)
-              going = buf.nonEmpty
-            } else if (!dropToNextStart()) going = false
+            }.toList
+            out += ((CepMatch(-1L, sId, sTs, eId, eTs, n), aggs))
+            // resume point per strategy; every case drops >= 1 row
+            // (validateAfter), so the loop strictly progresses — the
+            // retained suffix may close further matches at this same
+            // fed row, keep walking
+            val resume = after match {
+              case SkipPastLast   => matchEnd
+              case SkipToNextRow  => 1
+              case SkipToFirst(k) => spanPos(k).head
+              case SkipToLast(k)  => spanPos(k).last
+            }
+            buf = buf.drop(resume)
+            going = buf.nonEmpty
           case _ =>
-            if (!dropToNextStart()) going = false
+            going = dropToNextStart()
         }
       }
     }
@@ -1584,18 +1278,13 @@ object Cep {
       * trailing quantified step whose take could still grow with future
       * rows) commits its current take because no future row exists; the
       * walk runs with a fedTs past every window, so the futureOk gate —
-      * the only source of run-extension pending — is closed and every
-      * buffered candidate resolves to Complete or Mismatch. The batch
-      * folds call this at each key boundary and at partition end; the
-      * STREAMING processor never does (a stream has no end — pending
-      * runs stay pending, the documented streaming contract, which is
-      * why the stream twins of trailing-quantified gates emit strict
-      * subsets of their batch twins). One-step relaxed (followedBy)
-      * machines have no greedy pending (their subsequence parses wait
-      * only for missing rows, which end-of-input cannot supply) —
-      * flush clears state and emits nothing; the GENERALIZED relaxed
-      * walk's pendings (greedy takes, trailing absences) resolve here
-      * exactly like the contiguous ones.
+      * the only source of pending — is closed and every buffered
+      * candidate resolves to Complete or Mismatch. The batch folds call
+      * this at each key boundary and at partition end; the STREAMING
+      * processor never does (a stream has no end — pending runs stay
+      * pending, the documented streaming contract, which is why the
+      * stream twins of trailing-quantified gates emit strict subsets of
+      * their batch twins).
       */
     def flush(): List[(CepMatch, List[StepAgg])] = {
       val out = scala.collection.mutable.ListBuffer
@@ -1603,28 +1292,15 @@ object Cep {
       if (withTimeouts) {
         // end-of-input under watermark → ∞ (Flink CEP's reading): the
         // required-One tail means flush can complete nothing — the
-        // walk is row-pure and the post-emit buffer walks Partial — so
-        // every head surviving to here either TIMES OUT (Partial: its
-        // rows are the partial match) or already died to a mismatch
-        // fallback. Walk with the plain (non-flushing) dispatch: there
-        // is no trailing greed to resolve in this class.
+        // post-emit buffer walks Partial — so every head surviving to
+        // here either TIMES OUT (its rows are the partial match) or
+        // already died to a mismatch fallback
         var going = buf.nonEmpty
         while (going) {
-          walk(Long.MaxValue) match {
-            case Partial =>
-              out += ((CepMatch(-1L, buf.head._2, buf.head._1,
-                buf.last._2, buf.last._1, buf.length.toLong), Nil))
-              going = dropToNextStart()
-            case _ => going = dropToNextStart()
-          }
+          if (headPending) out += headPartial
+          going = dropToNextStart()
         }
-        buf = Vector.empty
-        return out.toList
-      }
-      if (contiguous || relaxedQ) {
-        flushing = true
-        try emitLoop(Long.MaxValue, out) finally flushing = false
-      }
+      } else emitLoop(Long.MaxValue, out)
       buf = Vector.empty
       out.toList
     }
@@ -1651,12 +1327,12 @@ object Cep {
     * subset of this operator's on the same finite prefix whenever the
     * pattern ends in a quantified/optional step.
     *
-    * COST MODEL: patterns inside the collapse-closure class (adjacent
-    * step symbols distinct — see [[closureHolds]]) run the O(buffer)
-    * greedy walk per fed row; patterns outside it take the memoized
-    * backtracking walk at O(pattern · buffer²) worst case per feed —
-    * the same complexity class as Flink's shared-buffer NFA. In both
-    * cases the buffer is WINDOW-BOUNDED (a head older than the window
+    * COST MODEL: every pattern runs the memoized backtracking walk at
+    * O(pattern · buffer²) worst case per feed — the same complexity
+    * class as Flink's shared-buffer NFA; inside the collapse-closure
+    * class (see [[closureHolds]]) a shorter take dies at its first
+    * row, so a feed costs O(pattern · buffer) there. The buffer is
+    * WINDOW-BOUNDED (a head older than the window
     * can never complete), so per-key state and per-feed work scale
     * with the window span's row count, never the series length. A
     * pathological key (single-symbol stream under a wide window) pays
@@ -1692,10 +1368,10 @@ object Cep {
     *     expiry (the abandoned-cart pattern). In streaming, horizon
     *     expiry rides event-time timers (`StreamingOps.cepStream`).
     *
-    * One-step patterns keep the O(buffer) earliest-next walk;
-    * quantified/negation patterns run the generalized memoized
-    * backtracking walk over subsequence takes (same cost class as the
-    * contiguous one — see [[cepMatchOf]]'s cost model). Same scale
+    * Every relaxed pattern runs one memoized backtracking walk over
+    * subsequence takes (a One step takes the earliest matching row;
+    * same cost class as the contiguous walk — see [[cepMatchOf]]'s
+    * cost model). Same scale
     * shape: one key shuffle + segmented scan; per-key state is bounded
     * by the window span of ALPHABET rows only — rows outside the
     * pattern's symbols are dropped at the door, never buffered (their

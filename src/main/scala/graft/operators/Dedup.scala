@@ -539,7 +539,7 @@ object Dedup {
     * Batch keeps the agg form: higher-order-function lambdas evaluate
     * INTERPRETED per element (60-counter zip_with per token), measured
     * ~1.8x slower than the codegen'd explode+groupBy at sf0.1 (0.8 s vs
-    * 1.5 s warm, tools.SigBench) — and the agg form's shuffle is already
+    * 1.5 s warm, a one-off timing) — and the agg form's shuffle is already
     * tiny (one 60-column partial-agg row per doc, combined map-side).
     * This form's value is streaming statelessness, not batch speed.
     */

@@ -453,6 +453,98 @@ object CepMachineProps extends Properties("CepMachine") {
       }
     }
 
+  /** Reference for CONTIGUOUS patterns outside the closure class,
+    * written from the matcher's documented rule alone: candidate
+    * starts left to right; at a start, parses in preference order —
+    * each step's takes over the maximal run of rows it matches,
+    * longest first when greedy, shortest first when reluctant; the
+    * first parse whose span fits the window wins (the window binds
+    * inside the search, so a window-killed parse backs off to a
+    * shorter one); SKIP PAST LAST ROW. Parse ends are enumerated
+    * lazily, so no state is shared with the Machine's walk.
+    */
+  private def bruteContig(rows: IndexedSeq[(Long, Long, String)],
+      pat: IndexedSeq[Cep.Step], win: Long): List[(Long, Long, Long)] = {
+    def ends(s: Int, p: Int): Iterator[Int] =
+      if (s == pat.length) Iterator.single(p)
+      else {
+        val st = pat(s)
+        val (lo, hi) = st.bounds
+        val run = rows.drop(p).take(hi).takeWhile(r => st.matches(r._3))
+          .length
+        val takes =
+          if (st.reluctant) (lo to run).iterator
+          else (lo to run).reverseIterator
+        takes.flatMap(t => ends(s + 1, p + t))
+      }
+    val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
+    var i = 0
+    while (i < rows.length) {
+      ends(0, i).find(e => rows(e - 1)._1 - rows(i)._1 <= win) match {
+        case Some(e) =>
+          out += ((rows(i)._2, rows(e - 1)._2, (e - i).toLong))
+          i = e
+        case None => i += 1
+      }
+    }
+    out.toList
+  }
+
+  /** Symbol-only contiguous patterns that the closure class excludes:
+    * a two-symbol alphabet with one forced adjacent duplicate (A A,
+    * A+ A, A? A+), quantifiers on any step including the last, and
+    * reluctant steps.
+    */
+  private val genDupPattern: Gen[IndexedSeq[Cep.Step]] = for {
+    n <- Gen.chooseNum(1, 4)
+    syms0 <- Gen.listOfN(n, Gen.oneOf("a", "b"))
+    dupAt <- Gen.chooseNum(1, 3)
+    plusFlags <- Gen.listOfN(n, Gen.prob(0.5))
+    optFlags <- Gen.listOfN(n, Gen.prob(0.3))
+    relFlags <- Gen.listOfN(n, Gen.prob(0.35))
+    repFlags <- Gen.listOfN(n, Gen.prob(0.2))
+    repLos <- Gen.listOfN(n, Gen.chooseNum(0, 2))
+    repSpans <- Gen.listOfN(n, Gen.chooseNum(0, 2))
+  } yield {
+    val syms =
+      if (dupAt < n) syms0.updated(dupAt, syms0(dupAt - 1)) else syms0
+    (0 until n).map { i =>
+      val withRep = repFlags(i)
+      val lo = if (i == 0) math.max(1, repLos(i)) else repLos(i)
+      Cep.Step(syms(i),
+        plus = !withRep && plusFlags(i),
+        opt = !withRep && optFlags(i) && i > 0,
+        rep = if (withRep) Some((lo, math.max(1, lo + repSpans(i))))
+          else None,
+        reluctant = relFlags(i))
+    }.toIndexedSeq
+  }
+
+  private val genDupRows: Gen[IndexedSeq[(Long, Long, String)]] = for {
+    n <- Gen.chooseNum(0, 40)
+    syms <- Gen.listOfN(n, Gen.frequency(3 -> "a", 2 -> "b", 1 -> "x"))
+    gaps <- Gen.listOfN(n, Gen.chooseNum(1L, 50L))
+  } yield gaps.scanLeft(0L)(_ + _).tail.zip(syms).zipWithIndex.map {
+    case ((t, s), i) => (t, i.toLong, s)
+  }.toIndexedSeq
+
+  property("contiguous non-closure patterns: feed+flush == preference-order brute") =
+    forAll(genDupPattern, genDupRows, Gen.chooseNum(5L, 2000L)) {
+      (pat, rows, win) =>
+      // shrink guard: the machine's own structural requires
+      val ok = pat.nonEmpty && pat.head.bounds._1 >= 1 &&
+        pat.forall(st => st.rep.forall { case (lo, hi) =>
+          !st.plus && !st.opt && 0 <= lo && lo <= hi && hi >= 1 })
+      !ok || {
+        val m = new Cep.Machine(pat, win)
+        val got = (rows.flatMap { case (ts, id, tpe) =>
+          m.feedM(ts, id, tpe, 0L) } ++ m.flush())
+          .map { case (c, _) => (c.start_event_id, c.end_event_id, c.n_rows) }
+          .toList
+        got == bruteContig(rows, pat, win)
+      }
+    }
+
   /** Brute twin with MEASURES and all four after-match strategies: at
     * each start, the same maximal-greed walk, but recording each
     * step's (cnt, value sum, first/last id); on success the next start
@@ -1133,8 +1225,8 @@ object CepMachineProps extends Properties("CepMachine") {
     * consuming, one optional negation at an interior-before-required
     * or trailing position, and (r16) one optional cross-variable
     * FIRST/LAST reference from a later step to an earlier consuming
-    * one — the path-dependent navigation the generalized walk's
-    * memoOkFrom gate and before-recursion take recording exist for.
+    * one — the path-dependent navigation the relaxed walk's
+    * memoOk gate and before-recursion take recording exist for.
     */
   private val genRelaxedQPattern: Gen[IndexedSeq[Cep.Step]] = for {
     n <- Gen.chooseNum(1, 4)

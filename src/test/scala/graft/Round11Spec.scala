@@ -135,8 +135,8 @@ class Round11Spec extends SparkSpecBase {
     }
     // a leading optional stays rejected in every class (candidate
     // starts key on a required first step); a trailing quantifier is
-    // LEGAL since the r12 last-step lift (it routes the pattern to
-    // the backtracking walk)
+    // LEGAL since the r12 last-step lift (the backtracking walk
+    // resolves its run)
     intercept[IllegalArgumentException] {
       Cep.validateCommon(Seq(Cep.Step("a", false, opt = true),
         Cep.Step("b", false)))

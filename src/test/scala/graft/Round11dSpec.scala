@@ -315,8 +315,8 @@ class Round11dSpec extends SparkSpecBase {
       Cep.cepMatchOf(rows, Seq(Cep.Step("view", plus = false, opt = true),
         Cep.Step("click", plus = false)), windowUs = M)
     }
-    // a TRAILING optional is legal since the r12 last-step lift: it
-    // routes to the backtracking walk, which resolves the optional
+    // a TRAILING optional is legal since the r12 last-step lift: the
+    // backtracking walk resolves the optional
     // greedily when the next row bounds it — view (click?) takes the
     // zero-click branch at user 3's view (purchase bounds it)
     val trailingOpt = Cep.cepMatchOf(rows, Seq(Cep.Step("view", plus = false),
@@ -346,8 +346,8 @@ class Round11dSpec extends SparkSpecBase {
     val got = Cep.cepMatchOf(rows, pat, windowUs = 10 * M)
       .collect().map(m => m.user_id -> m.n_rows).toSeq.sorted
     assert(got == Seq(1L -> 5L, 2L -> 3L), s"$got")
-    // intersecting collapse-adjacent symbol sets take the r12
-    // backtracking walk: click → (view|click) binds on user 1 only
+    // intersecting collapse-adjacent symbol sets need the walk's
+    // backtracking: click → (view|click) binds on user 1 only
     // (click10 view11); users 2/3 have no (view|click) row after a
     // click contiguously
     val overlap = Cep.cepMatchOf(rows, Seq(Cep.Step("click", plus = false),
@@ -398,7 +398,7 @@ class Round11dSpec extends SparkSpecBase {
         Cep.Step("purchase", plus = false)), windowUs = M)
     }
     // a rep (0, n) step chains A to A through a vanishing repeat —
-    // outside the closure class, so the r12 backtracking walk runs it:
+    // outside the closure class, so the walk must backtrack:
     // view click{0,2} view finds every adjacent view pair (the repeat
     // takes zero) — users 2/3 one pair each, user 4 two disjoint pairs
     val chained = Cep.cepMatchOf(rows, Seq(Cep.Step("view", plus = false),

@@ -77,7 +77,7 @@ class Round16Spec extends SparkSpecBase {
     // matches — RELAXED skips the second 'a' at b's position, the
     // exact shape Round15Spec pins as a kill under contiguity. The
     // referenced span differs per path, so (step, pos) memoization is
-    // disabled below the back-reference (memoOkFrom) — a cached kill
+    // disabled below the back-reference (memoOk) — a cached kill
     // from the long take must not leak into the short one.
     val pat = IndexedSeq(Cep.Step("a", plus = true),
       Cep.Step("b", cross = List(Cep.CrossRef(0, first = false,

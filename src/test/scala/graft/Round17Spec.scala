@@ -164,7 +164,7 @@ class Round17Spec extends SparkSpecBase {
     src.addData((8L, 2 * M, 50L, "x", 0L))
     q1.processAllAvailable()
     q1.stop()
-    // run 2: a second iteration + a purchase(50). The greedy walk's
+    // run 2: a second iteration + a purchase(50). The greedy repeat's
     // first attempt takes BOTH iterations: FIRST = the recovered
     // click(100), 50 > 100 FAILS — proving the pre-kill pool value
     // survived; the fallback start at click(10) then matches (pool

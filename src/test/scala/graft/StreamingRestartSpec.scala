@@ -199,6 +199,40 @@ class StreamingRestartSpec extends SparkSpecBase {
     assert(rows.length == 27)
   }
 
+  test("cepStreamTimedOut: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    import graft.operators.Cep
+    val rows = assertRestartEquivalent(thirds(funnelRows), "append")(ds =>
+      StreamingOps.cepStreamTimedOut(ds, Seq(Cep.Step("click"),
+        Cep.Step("view", plus = true), Cep.Step("purchase")),
+        windowUs = 10 * Minute))
+    // 3 complete funnels per user, and each user's open fourth funnel
+    // times out at its horizon timer
+    val timedOut = rows.map(_.getAs[Boolean]("timed_out"))
+    assert(timedOut.count(!_) == 9 && timedOut.count(identity) == 3)
+  }
+
+  test("cepStreamMulti: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    import graft.operators.Cep
+    // spec 0: contiguous view+ view (a repeated symbol); spec 1: relaxed
+    // click with a trailing negated purchase, which emits at its window
+    // horizon's event-time timer
+    val specs = Seq(
+      StreamingOps.CepSpec(IndexedSeq(Cep.Step("view", plus = true),
+        Cep.Step("view")), 10 * Minute),
+      StreamingOps.CepSpec(IndexedSeq(Cep.Step("click"),
+        Cep.Step("purchase", neg = true)), 10 * Minute, contiguous = false))
+    val rows = assertRestartEquivalent(thirds(funnelRows), "append")(ds =>
+      StreamingOps.cepStreamMulti(ds, specs))
+    val tags = rows.map(_.getInt(0))
+    // every view pair matches except each user's last, whose greedy run
+    // stays pending (no later row drains: the flush row only moves the
+    // watermark); only the fourth click per user goes without a
+    // purchase inside its window
+    assert(tags.count(_ == 0) == 9 && tags.count(_ == 1) == 3)
+  }
+
   test("changelogJoinStream: restart at every batch boundary equals the uninterrupted run") {
     import spark.implicits._
     val rows = assertRestartEquivalent(thirds(sideOps), "append")(ds =>
