@@ -1,8 +1,13 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{CurrentTimestamp, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.DataType
 
 /** The reference pipeline (O1–O13, SURVEY.md §2.1), Spark-native: Kafka
   * source with Confluent-Avro values → filter(status <> 'CANCELLED') →
@@ -54,8 +59,10 @@ object TransactionPipeline {
       .otherwise(amount)
 
   /** O3–O8: watermark + filter + projection. One straight pipe — no
-    * shuffle, fused by WholeStageCodegen, identical plan batch or
-    * per-micro-batch.
+    * shuffle. Filter and projection run in one WholeStageCodegen stage
+    * whose generated source is the same for every query, batch or
+    * micro-batch: `processingTimestamp` enters it as a parameter
+    * ([[ProcessingTime]]), so the stage compiles once per JVM.
     */
   def transform(transactions: DataFrame): DataFrame =
     transactions
@@ -69,7 +76,36 @@ object TransactionPipeline {
         col("merchant"),
         col("userId"),
         fxToUsd(col("amount"), col("currency")).as("amountInUsd"),
-        current_timestamp().as("processingTimestamp"))
+        GraftSqlShim.column(ProcessingTime(CurrentTimestamp())).as("processingTimestamp"))
+
+  /** The query's timestamp (its `current_timestamp()`, or a micro-batch's
+    * batch timestamp) as a parameter of the generated code. Once Spark
+    * has fixed it, the child is a literal, and a `Literal` writes its
+    * value into the Java source: each query's source would differ, miss
+    * the codegen cache, compile new classes and run its loop cold in the
+    * JIT. Here the value goes into the class's `references` instead, so
+    * every query reuses one class. Not foldable, so constant folding
+    * leaves it in place. Not `CodegenFallback`: an interpreted non-leaf
+    * expression takes its whole projection out of the fused stage.
+    */
+  case class ProcessingTime(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = child.dataType
+    override def foldable: Boolean = false
+    override def prettyName: String = "processing_time"
+
+    override def eval(input: InternalRow): Any = child.eval(input)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      if (!child.foldable || child.nullable) child.genCode(ctx)
+      else {
+        val v = ctx.addReferenceObj("processingTime", child.eval(),
+          CodeGenerator.boxedType(dataType))
+        ev.copy(code = code"${CodeGenerator.javaType(dataType)} ${ev.value} = $v;",
+          isNull = FalseLiteral)
+      }
+
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
 
   /** O2 — the Confluent-Avro decode stage, shared by the streaming (O1)
     * and bounded-batch (O11) sources: kafka-shaped rows (binary `value`

@@ -87,6 +87,79 @@ class PipelineSpec extends SparkSpecBase {
     assert(results.forall(_.processingTimestamp != null))
   }
 
+  /** Classes compiled so far in this JVM: each codegen cache miss is one. */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Runs `query` three times; each run returns the `processingTimestamp`
+    * millis of its rows and the wall-clock millis it was taken between.
+    * Only the first run may compile code, and each run sees one value,
+    * later than the last run's, inside its own bounds.
+    */
+  private def assertCompiledOnce(query: () => (Seq[Long], Long, Long)): Unit = {
+    var last = Long.MinValue
+    var compiled = 0L
+    (1 to 3).foreach { run =>
+      val (ts, from, to) = query()
+      if (run == 1) compiled = compiles
+      assert(ts.nonEmpty && ts.distinct.length == 1, s"run $run: $ts")
+      assert(ts.head >= from && ts.head <= to && ts.head > last,
+        s"run $run: ${ts.head} not in [$from, $to] or not after $last")
+      last = ts.head
+    }
+    assert(compiles == compiled, "a later run compiled code again")
+  }
+
+  /** `transform` output → the Kafka record shape `toKafka` writes. */
+  private def encode(out: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{call_udf, col, lit, struct}
+    out.select(call_udf("encode_approved", struct(out.columns.map(col).toIndexedSeq: _*),
+      lit(TransactionAvro.ApprovedSchemaId)).as("value"))
+  }
+
+  /** A fresh query per run: one DataFrame is one query execution, which
+    * fixes its timestamp once.
+    */
+  private def processedAt(encoded: => org.apache.spark.sql.DataFrame): () => (Seq[Long], Long, Long) =
+    () => {
+      val from = System.currentTimeMillis()
+      val ts = encoded.collect().toSeq.map(r =>
+        TransactionAvro.decodeApproved(r.getAs[Array[Byte]](0)).processingTimestamp.getTime)
+      (ts, from, System.currentTimeMillis())
+    }
+
+  test("the fused stage compiles once across batch queries of the pipeline") {
+    import spark.implicits._
+    val frames = fixture.map(t => TransactionAvro.encodeTransaction(t)).toDF("value")
+    assertCompiledOnce(processedAt(encode(TransactionPipeline.transform(
+      TransactionPipeline.decodeValues(frames)))))
+    assertCompiledOnce(processedAt(encode(TransactionPipeline.transform(
+      TransactionPipeline.goodRows(TransactionPipeline.decodeValuesPermissive(frames))))))
+  }
+
+  test("the fused stage compiles once across micro-batches; each batch keeps its timestamp") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val src = MemoryStream[Transaction]
+    // each batch's (timestamps, end of the last batch, start of this one):
+    // a micro-batch fixes its timestamp between the two
+    val batches = new java.util.concurrent.LinkedBlockingQueue[(Seq[Long], Long, Long)]()
+    @volatile var lastEnd = System.currentTimeMillis()
+    val q = TransactionPipeline.transform(src.toDF()).writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val start = System.currentTimeMillis()
+        val ts = b.collect().toSeq.map(_.getAs[java.sql.Timestamp]("processingTimestamp").getTime)
+        if (ts.nonEmpty) batches.put((ts, lastEnd, start))
+        lastEnd = System.currentTimeMillis()
+        ()
+      }.start()
+    try assertCompiledOnce { () =>
+      src.addData(fixture: _*)
+      q.processAllAvailable()
+      batches.take()
+    } finally q.stop()
+  }
+
   test("Confluent-framed Avro round-trips every fixture row") {
     fixture.foreach { t =>
       val bytes = TransactionAvro.encodeTransaction(t)

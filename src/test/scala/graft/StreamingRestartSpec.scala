@@ -139,6 +139,20 @@ class StreamingRestartSpec extends SparkSpecBase {
         Seq("click", "view", "view", "purchase")(i / 3 % 4), i * 13 % 50L)
     } :+ ((0L, Base + 55 * Minute, -1L, "flush", 0L))
 
+  /** (event_id, ts, user_id, event_type, value) rows for 3 users, one a
+    * minute; every fifth row repeats the previous row's event_id a minute
+    * later, so two repeats straddle the batch seams (rows 15 and 30).
+    */
+  private val events: Seq[(Long, java.sql.Timestamp, Long, String, Double)] =
+    (0 until 45).map { i =>
+      (if (i % 5 == 0 && i > 0) i - 1L else i.toLong,
+        new java.sql.Timestamp((Base + i * Minute) / 1000), i % 3L,
+        Seq("click", "view", "purchase")(i % 3), i * 13 % 50.0)
+    }
+
+  private def eventsDf(ds: Dataset[(Long, java.sql.Timestamp, Long, String, Double)]) =
+    ds.toDF("event_id", "ts", "user_id", "event_type", "value")
+
   test("ewmaStream: restart at every batch boundary equals the uninterrupted run") {
     import spark.implicits._
     val rows = assertRestartEquivalent(thirds(tsVals), "update")(ds =>
@@ -255,5 +269,43 @@ class StreamingRestartSpec extends SparkSpecBase {
       StreamingOps.changelogFullJoinStream(ds))
     assert(rows.exists(_.isNullAt(rows.head.fieldIndex("l_id"))),
       "fixture never padded a right row")
+  }
+
+  test("dedupStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(events), "append")(ds =>
+      StreamingOps.dedupStream(eventsDf(ds), horizon = "2 minutes"))
+    // the 8 repeats drop, the two across a seam through restored state
+    assert(rows.length == 37)
+    assert(rows.map(_.getAs[Long]("event_id")).distinct.length == 37)
+  }
+
+  test("windowDedupStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(events), "append")(ds =>
+      StreamingOps.windowDedupStream(eventsDf(ds), "10 minutes"))
+    // the first row per (user, 10-minute window): 3 users x 5 windows,
+    // two of them straddling a seam
+    val batch = events.groupBy { case (_, ts, user, _, _) => (user, ts.getTime / 600000) }
+      .values.map(_.minBy(_._2.getTime)).map(e => (e._3, e._1)).toSet
+    assert(rows.length == 15)
+    assert(rows.map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("first_event_id"))).toSet == batch)
+  }
+
+  test("topNStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val input = events.map { case (id, _, user, _, v) => (user, id, v) }
+    val rows = assertRestartEquivalent(thirds(input), "update")(ds =>
+      StreamingOps.topNStream(ds, n = 3))
+    // the latest snapshot per group equals the batch top 3 over all rows
+    val latest = rows.map(r => StreamingOps.RankedEntry(r.getAs[Long]("group"),
+        r.getAs[Long]("ver"), r.getAs[Long]("rk"), r.getAs[Long]("id"), r.getAs[Double]("value")))
+      .groupBy(_.group).view.mapValues { es =>
+        val v = es.map(_.ver).max
+        es.filter(_.ver == v).sortBy(_.rk).map(e => (e.id, e.value))
+      }.toMap
+    val batch = input.groupBy(_._1).view.mapValues(
+      _.sortBy { case (_, id, v) => (-v, id) }.take(3).map { case (_, id, v) => (id, v) }).toMap
+    assert(latest == batch)
   }
 }
