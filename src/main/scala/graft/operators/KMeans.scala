@@ -30,6 +30,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * shuffle-order-independent and reproducible bit-for-bit against any
   * engine doing the same quantized arithmetic. Centroid means are
   * 6dp-quantized decimal sums over exact float→double casts.
+  *
+  * [[lloyd]] is the same seeding and iteration on the driver, for the
+  * ANN quantizers, which train on a few hundred collected vectors.
   */
 object KMeans {
 
@@ -148,6 +151,64 @@ object KMeans {
           count(lit(1)), 6).as("c"))
     }
     assign(vecs, cent)
+  }
+
+  /** Driver-side Lloyd's for point sets that fit in driver memory: the
+    * trainer of the ANN quantizers (IVF coarse cells, PQ subspace
+    * codebooks), which are parameter-sized driver state anyway.
+    * `points` must be in ascending vec_id order; the seeds are the first
+    * `k` of them, the same lowest-id rule as [[assignmentsOf]] (fewer
+    * points than `k` give that many centroids). Each of `iters` passes
+    * assigns every point to its [[nearest]] centroid and moves each
+    * centroid to its members' mean; a cell left empty keeps its previous
+    * centroid. No randomness and a fixed summation order, so the result
+    * depends on the points alone.
+    *
+    * Why not [[assignmentsOf]] here: each of its iterations is a join
+    * plus two shuffles, so eight PQ codebooks at five iterations each
+    * would still be dozens of jobs for a few hundred points. The
+    * relational form stays because the emb_kmeans and emb_semdedup*
+    * DuckDB oracles replay its decimal arithmetic.
+    */
+  def lloyd(points: Array[Array[Double]], k: Int,
+      iters: Int): Array[Array[Double]] = {
+    require(k > 0 && points.nonEmpty)
+    val dim = points.head.length
+    val cent = points.take(k).map(_.clone)
+    for (_ <- 1 to iters) {
+      val sums = Array.ofDim[Double](cent.length, dim)
+      val counts = new Array[Int](cent.length)
+      points.foreach { p =>
+        val c = nearest(p, cent)
+        counts(c) += 1
+        var i = 0
+        while (i < dim) { sums(c)(i) += p(i); i += 1 }
+      }
+      for (c <- cent.indices if counts(c) > 0; i <- 0 until dim)
+        cent(c)(i) = sums(c)(i) / counts(c)
+    }
+    cent
+  }
+
+  /** Index of the centroid nearest `p` in squared L2, ties to the lowest
+    * index — [[lloyd]]'s assignment rule, and the cell rule of every
+    * quantizer it trains.
+    */
+  def nearest(p: Array[Double], cent: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cent.length) {
+      val d = sqDist(p, cent(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Squared L2 distance, summed in index order. */
+  def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < a.length) { val x = a(i) - b(i); d += x * x; i += 1 }
+    d
   }
 
   /** One GROUPED assignment pass: nearest SUB-centroid per vector within

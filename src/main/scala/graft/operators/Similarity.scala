@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables.t
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -213,146 +213,289 @@ object Similarity {
 
   def annLsh(s: SparkSession, dir: String): DataFrame = annLshTopK(s, dir)
 
-  /** IVF ANN: k-means coarse quantizer (seeded, deterministic) partitions
-    * the corpus into nlist cells; a probe scans only the nprobe cells
-    * whose centroids are nearest, then exact-reranks with the codegen'd
-    * cosine. This is the production shape for 100 TB: train the quantizer
-    * on a sample, write the corpus partitioned by cell id, and each query
-    * touches nprobe/nlist of the data. Same approximation contract as the
-    * LSH variant (scores exact, candidate set a subset).
+  // ---- IVF, PQ and IVF-PQ: quantized candidates, exact top-k by bound ----
+  //
+  // Each family trains its quantizer with KMeans.lloyd on vectors
+  // collected once, then answers in two steps: a cheap pass over the
+  // quantized candidates finds an exact k-th best score s_k, and one more
+  // pass scores exactly every row (or cell) whose upper bound on the
+  // cosine reaches s_k − 1e-6. The top-k is therefore the brute-force
+  // top-k, ids and 6-dp scores alike; the index decides only how much is
+  // scored. The slack of 1e-6 keeps a row within half a unit of the 6th
+  // place below s_k, which rounds to s_k and can win on the vec_id
+  // tiebreak.
+
+  /** (vec_id, vector) rows of `emb` in vec_id order: a quantizer's one
+    * training collect.
     */
-  def annIvfTopK(s: SparkSession, dir: String, probeId: Long = 0, k: Int = 5,
-      nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    VectorFunctions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .withColumn("features", array_to_vector(col("embedding")))
-      .cache()
-    val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
-      .fit(emb.select(col("features")))
-    val assigned = model.transform(emb).withColumnRenamed("prediction", "cell")
-    // nprobe nearest cells to the probe vector (tiny: nlist centroids on
-    // the driver — the quantizer IS driver-side state, like a real index)
-    val probeVec = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
-    def cos(c: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < c.length) {
-        d += c(i) * probeVec(i); na += c(i) * c(i)
-        nb += probeVec(i).toDouble * probeVec(i); i += 1
-      }
-      if (na == 0 || nb == 0) -2 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val cells = model.clusterCenters.zipWithIndex
-      .sortBy { case (c, _) => -cos(c.toArray) }
-      .take(nprobe).map(_._2)
-    val probe = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_emb"))
-    assigned
-      .filter(col("cell").isin(cells.toIndexedSeq: _*) && col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSim(col("embedding"), col("probe_emb")), 6)
+  private def collectVecs(emb: DataFrame): Array[(Long, Array[Double])] =
+    emb.select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> toDoubles(r.getSeq[Float](1)))
+      .sortBy(_._1)
+
+  private def toDoubles(e: Seq[Float]): Array[Double] = e.map(_.toDouble).toArray
+
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < a.length) { d += a(i) * b(i); i += 1 }
+    d
+  }
+
+  private def norm(a: Array[Double]): Double = math.sqrt(dot(a, a))
+
+  /** Exact cosine top-k of `rows` (vec_id, embedding) against `q`: the
+    * brute-force kernel, rounding and tiebreak of [[q26CosineTopK]].
+    */
+  private def exactTopK(rows: DataFrame, q: Array[Float], k: Int): DataFrame =
+    rows.select(col("vec_id"),
+        round(VectorFunctions.cosineSim(col("embedding"), typedLit(q)), 6)
           .as("score"))
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(k)
+
+  /** The least bound that can still reach the top-k: s_k − 1e-6 for the
+    * k-th best score of `top`, or −∞ while it holds fewer than k scores.
+    */
+  private def boundFloor(top: DataFrame, k: Int): Double = {
+    val scores = top.collect().filterNot(_.isNullAt(1)).map(_.getDouble(1))
+    if (scores.length < k) Double.NegativeInfinity else scores.min - 1e-6
+  }
+
+  /** An IVF coarse quantizer: the cell centroids and, per cell, the radius
+    * ρ_c = max ‖v/‖v‖ − c‖ over its members (−∞ while a cell is empty;
+    * zero vectors have no cosine and are not counted). For a unit probe
+    * q̂ each member v has cos(q, v) = q̂·c + q̂·(v/‖v‖ − c) ≤ q̂·c + ρ_c
+    * (Cauchy–Schwarz): the bound that makes the IVF top-k exact. A vector
+    * belongs to its [[KMeans.nearest]] centroid.
+    */
+  case class IvfQuantizer(centroids: Array[Array[Double]], radii: Array[Double]) {
+    def cellOf(v: Array[Double]): Int = KMeans.nearest(v, centroids)
+
+    private[Similarity] def cover(acc: Array[Double], v: Array[Double]): Unit = {
+      val n = norm(v)
+      if (n > 0) {
+        val c = cellOf(v)
+        acc(c) = math.max(acc(c), math.sqrt(KMeans.sqDist(v.map(_ / n), centroids(c))))
+      }
+    }
+
+    /** This quantizer with its radii widened to cover the (vec_id,
+      * embedding) `rows`: one aggregate pass, no shuffle.
+      */
+    def covering(rows: DataFrame): IvfQuantizer = {
+      val widened = rows.select(col("embedding")).rdd.aggregate(radii.clone)(
+        (acc, r) => { cover(acc, toDoubles(r.getSeq[Float](0))); acc },
+        (a, b) => a.indices.map(i => math.max(a(i), b(i))).toArray)
+      copy(radii = widened)
+    }
+  }
+
+  object IvfQuantizer {
+    /** Coarse training, 10 Lloyd's iterations over `points` (vec_id
+      * order), with the radii of the points themselves.
+      */
+    def train(points: Array[Array[Double]], nlist: Int): IvfQuantizer = {
+      val cents = KMeans.lloyd(points, nlist, iters = 10)
+      val quant = IvfQuantizer(cents, Array.fill(cents.length)(Double.NegativeInfinity))
+      points.foreach(quant.cover(quant.radii, _))
+      quant
+    }
+  }
+
+  private def withCell(rows: DataFrame, quant: IvfQuantizer): DataFrame =
+    rows.withColumn("cell",
+      udf((e: Seq[Float]) => quant.cellOf(toDoubles(e))).apply(col("embedding")))
+
+  /** The `nprobe` cells whose centroids are nearest `q` by cosine. */
+  private def nearestCells(cents: Array[Array[Double]], q: Array[Double],
+      nprobe: Int): Seq[Int] = {
+    val qn = norm(q)
+    def cos(c: Array[Double]): Double = {
+      val cn = norm(c)
+      if (cn == 0 || qn == 0) -2 else dot(q, c) / (cn * qn)
+    }
+    cents.indices.sortBy(c => -cos(cents(c))).take(nprobe)
+  }
+
+  /** IVF top-k over `rows` (vec_id, embedding, cell): score the `nprobe`
+    * cells nearest `q`, then every other cell whose bound q̂·c + ρ_c
+    * reaches the floor. Returns the top-k and the rows it scores.
+    */
+  private def ivfExact(rows: DataFrame, quant: IvfQuantizer, q: Array[Float],
+      k: Int, nprobe: Int): (DataFrame, DataFrame) = {
+    val qd = q.map(_.toDouble); val qn = norm(qd)
+    val cents = quant.centroids
+    val probed = nearestCells(cents, qd, nprobe)
+    def inCells(cs: Seq[Int]) = rows.filter(col("cell").isin(cs: _*))
+    val floor = boundFloor(exactTopK(inCells(probed), q, k), k)
+    val more = cents.indices.filter(c => !probed.contains(c) &&
+      (qn == 0 || dot(qd, cents(c)) / qn + quant.radii(c) >= floor))
+    val scored = inCells(probed ++ more)
+    (exactTopK(scored, q, k), scored)
+  }
+
+  /** IVF ANN: a k-means coarse quantizer ([[IvfQuantizer]], trained by
+    * [[KMeans.lloyd]] on the collected corpus) partitions the corpus
+    * into `nlist` cells. A probe scores the `nprobe` cells whose
+    * centroids are nearest, which gives an exact k-th best score s_k;
+    * then it scores every other cell whose radius bound q̂·c + ρ_c
+    * reaches s_k − 1e-6, since only those can hold a better row. The
+    * result is the exact top-k (ids and scores of [[q26CosineTopK]]);
+    * `nprobe` sets how good s_k is after the first pass, and the bound
+    * how many cells follow. This is the production shape for 100 TB:
+    * train on a sample, write the corpus partitioned by cell
+    * ([[writeIvfIndex]]), and a query reads the cells it scores.
+    */
+  def annIvfTopK(s: SparkSession, dir: String, probeId: Long = 0, k: Int = 5,
+      nlist: Int = 16, nprobe: Int = 4): DataFrame =
+    annIvfScan(s, dir, probeId, k, nlist, nprobe)._1
+
+  /** [[annIvfTopK]] and the (vec_id, embedding, cell) rows it scores. */
+  private[graft] def annIvfScan(s: SparkSession, dir: String, probeId: Long,
+      k: Int, nlist: Int, nprobe: Int): (DataFrame, DataFrame) = {
+    VectorFunctions.register(s)
+    val emb = t(s, dir, "embeddings")
+    val vecs = collectVecs(emb)
+    val quant = IvfQuantizer.train(vecs.map(_._2), nlist)
+    val rows = emb.filter(col("vec_id") =!= probeId)
+    withProbe(vecs, probeId, rows)(ivfExact(withCell(rows, quant), quant, _, k, nprobe))
   }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = annIvfTopK(s, dir)
 
+  /** `run` on the probe's vector, found among the collected `vecs`; a
+    * probe missing from the corpus gets no rows, as from brute force.
+    */
+  private def withProbe(vecs: Array[(Long, Array[Double])], probeId: Long,
+      rows: DataFrame)(run: Array[Float] => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    vecs.collectFirst { case (id, v) if id == probeId => run(v.map(_.toFloat)) }
+      .getOrElse((exactTopK(rows.limit(0), Array.emptyFloatArray, 1), rows.limit(0)))
+
+  /** A product quantizer: `cb(mi)` holds subspace mi's centroids. A
+    * vector's code is its [[KMeans.nearest]] centroid per subspace, and
+    * its reconstruction v̂ the concatenation of those centroids.
+    */
+  private case class Pq(cb: Array[Array[Array[Double]]]) {
+    private val dsub = cb(0)(0).length
+
+    private def sub(v: Array[Double], mi: Int) = v.slice(mi * dsub, (mi + 1) * dsub)
+
+    /** v's codes and its reconstruction error ‖v − v̂‖. */
+    def encode(v: Array[Double]): (Array[Int], Double) = {
+      var e2 = 0.0
+      val codes = cb.indices.map { mi =>
+        val c = KMeans.nearest(sub(v, mi), cb(mi))
+        e2 += KMeans.sqDist(sub(v, mi), cb(mi)(c))
+        c
+      }.toArray
+      (codes, math.sqrt(e2))
+    }
+
+    /** ADC table: dot(u_mi, cb(mi)(c)) per (subspace, code). */
+    def dots(u: Array[Double]): Array[Array[Double]] =
+      cb.indices.map(mi => cb(mi).map(dot(sub(u, mi), _))).toArray
+
+    /** Σ_mi tbl(mi)(codes(mi)). */
+    def lookup(tbl: Array[Array[Double]], codes: Array[Int]): Double = {
+      var d = 0.0; var mi = 0
+      while (mi < codes.length) { d += tbl(mi)(codes(mi)); mi += 1 }
+      d
+    }
+  }
+
+  private object Pq {
+    /** m codebooks of `ksub` centroids, 5 Lloyd's iterations each, over
+      * `points` in vec_id order.
+      */
+    def train(points: Array[Array[Double]], m: Int, ksub: Int): Pq = {
+      require(points.head.length % m == 0)
+      val dsub = points.head.length / m
+      Pq(Array.tabulate(m)(mi =>
+        KMeans.lloyd(points.map(_.slice(mi * dsub, (mi + 1) * dsub)), ksub, iters = 5)))
+    }
+  }
+
+  /** The PQ bound on cos(q, v) from v's codes: (q·v̂ + ‖q‖·e_v)/(‖q‖·‖v‖),
+    * as q·v = q·v̂ + q·(v − v̂) ≤ q·v̂ + ‖q‖·‖v − v̂‖. +∞ (always scored)
+    * where either norm is 0.
+    */
+  private def pqBound(qDotRecon: Double, qn: Double, err: Double, vn: Double): Double =
+    if (qn == 0 || vn == 0) Double.PositiveInfinity
+    else (qDotRecon + qn * err) / (qn * vn)
+
+  /** PQ top-k: re-rank exactly the `rerank` rows of `adcRows` best by
+    * `adc` to get the floor, then score every row of `rows` whose `bound`
+    * reaches it. Returns the top-k and the rows it scores.
+    */
+  private def pqExact(adcRows: DataFrame, adc: Column, rows: DataFrame,
+      bound: Column, q: Array[Float], k: Int, rerank: Int): (DataFrame, DataFrame) = {
+    val floor = boundFloor(exactTopK(
+      adcRows.orderBy(adc.desc, col("vec_id").asc).limit(rerank), q, k), k)
+    val scored = rows.filter(bound >= floor)
+    (exactTopK(scored, q, k), scored)
+  }
+
   /** Product-quantization ANN (the third index family after LSH and IVF,
     * completing the vector-search set: brute / LSH / IVF / int8 / PQ):
     * the 64-dim space splits into `m` subspaces, each with its own
-    * `ksub`-centroid codebook (seeded per-subspace k-means), so every
-    * corpus vector compresses to m small codes — 8 bytes here, a 32×
-    * shrink, the RAM-resident scan form real vector stores use.
+    * `ksub`-centroid codebook, so every corpus vector compresses to m
+    * small codes — 8 bytes here, a 32× shrink, the RAM-resident scan form
+    * real vector stores use. All m codebooks train by [[KMeans.lloyd]]
+    * from one collected quarter sample (quantizer training is the offline
+    * step of an index build, and subspace centroids converge on far less
+    * data than the corpus).
+    *
     * Query-time ADC (asymmetric distance computation): the probe
-    * precomputes dot/norm lookup tables per (subspace, code) — driver
-    * state the size of the codebook, like IVF's quantizer — the coarse
-    * scan is table lookups over the codes column (no float vectors
-    * touched), TakeOrdered keeps `rerank` candidates, and the exact
-    * codegen'd cosine re-ranks the survivors. Same approximation
-    * contract as LSH/IVF: returned scores exact, candidate set a subset.
+    * precomputes dot/norm lookup tables per (subspace, code), driver
+    * state the size of the codebook. The `rerank` best rows by ADC score
+    * re-rank exactly to give an exact k-th best score s_k; then every
+    * row whose bound (q·v̂ + ‖q‖·e_v)/(‖q‖·‖v‖) reaches s_k − 1e-6 is
+    * scored exactly, where q·v̂ comes from the ADC tables and e_v = ‖v −
+    * v̂‖ is the row's reconstruction error. The result is the exact top-k
+    * of [[q26CosineTopK]]; `rerank` sets only how tight s_k is.
     *
     * At 100 TB the codes column is what you materialize (cf.
-    * writeIvfIndex): the fleet scans 8-byte codes, and only `rerank`
-    * full vectors per query are ever read.
+    * writeIvfIndex), with ‖v‖ and e_v next to it: the fleet scans codes
+    * and two doubles per row, and reads full vectors only for the rows
+    * the bound cannot rule out.
     */
   def annPqTopK(s: SparkSession, dir: String, probeId: Long = 0, k: Int = 5,
-      m: Int = 8, ksub: Int = 16, rerank: Int = 32): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+      m: Int = 8, ksub: Int = 16, rerank: Int = 32): DataFrame =
+    annPqScan(s, dir, probeId, k, m, ksub, rerank)._1
+
+  /** [[annPqTopK]] and the (vec_id, embedding) rows it scores. */
+  private[graft] def annPqScan(s: SparkSession, dir: String, probeId: Long,
+      k: Int, m: Int, ksub: Int, rerank: Int): (DataFrame, DataFrame) = {
     VectorFunctions.register(s)
-    val emb = t(s, dir, "embeddings").cache()
-    val dim = 64
-    require(dim % m == 0); val dsub = dim / m
-    // codebooks train on a deterministic quarter sample, few iterations:
-    // quantizer training is the offline step of a real index build, and
-    // subspace centroids converge on far less data than the corpus
-    val train = emb.filter(pmod(col("vec_id"), lit(4)) === 0).cache()
-    // the m fits are independent seeded jobs — submit them concurrently
-    // (per-fit driver/job overhead otherwise serializes m× for nothing)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val codebook: Array[Array[Array[Double]]] = Await.result(
-      Future.sequence((0 until m).map { mi => Future {
-        val sub = train.select(array_to_vector(
-          slice(col("embedding"), mi * dsub + 1, dsub)).as("features"))
-        new KMeans().setK(ksub).setSeed(42L + mi).setMaxIter(5)
-          .fit(sub).clusterCenters.map(_.toArray)
-      }}), Duration.Inf).toArray
-    val bcCb = s.sparkContext.broadcast(codebook)
-    val encode = udf { (e: Seq[Float]) =>
-      val cb = bcCb.value
-      (0 until m).map { mi =>
-        var best = 0; var bestD = Double.MaxValue; var kk = 0
-        while (kk < ksub) {
-          var d = 0.0; var i = 0
-          while (i < dsub) {
-            val diff = e(mi * dsub + i) - cb(mi)(kk)(i); d += diff * diff
-            i += 1
-          }
-          if (d < bestD) { bestD = d; best = kk }
-          kk += 1
-        }
-        best
+    val emb = t(s, dir, "embeddings")
+    // the quarter sample and the probe in one collect
+    val vecs = collectVecs(
+      emb.filter(pmod(col("vec_id"), lit(4)) === 0 || col("vec_id") === probeId))
+    val pq = Pq.train(quarter(vecs), m, ksub)
+    val rows = emb.filter(col("vec_id") =!= probeId)
+    withProbe(vecs, probeId, rows) { q =>
+      val qd = q.map(_.toDouble); val qn = norm(qd)
+      val dots = pq.dots(qd)
+      val nrm2 = pq.cb.map(_.map(c => dot(c, c)))
+      val adc = udf { (e: Seq[Float]) =>
+        val codes = pq.encode(toDoubles(e))._1
+        val n2 = pq.lookup(nrm2, codes)
+        if (n2 == 0 || qn == 0) -2.0 else pq.lookup(dots, codes) / (qn * math.sqrt(n2))
       }
+      val bound = udf { (e: Seq[Float]) =>
+        val v = toDoubles(e)
+        val (codes, err) = pq.encode(v)
+        pqBound(pq.lookup(dots, codes), qn, err, norm(v))
+      }
+      pqExact(rows, adc(col("embedding")), rows, bound(col("embedding")), q, k, rerank)
     }
-    val probeVec = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
-    // ADC tables: dot(q_mi, c) and ||c||² per (subspace, code) — tiny
-    val dots = Array.tabulate(m, ksub) { (mi, kk) =>
-      var d = 0.0; var i = 0
-      while (i < dsub) { d += probeVec(mi * dsub + i) * codebook(mi)(kk)(i); i += 1 }
-      d
-    }
-    val nrm2 = Array.tabulate(m, ksub) { (mi, kk) =>
-      var n = 0.0; var i = 0
-      while (i < dsub) { n += codebook(mi)(kk)(i) * codebook(mi)(kk)(i); i += 1 }
-      n
-    }
-    val qn = math.sqrt(probeVec.map(x => x.toDouble * x).sum)
-    val adcScore = udf { (codes: Seq[Int]) =>
-      var d = 0.0; var n2 = 0.0; var mi = 0
-      while (mi < m) { d += dots(mi)(codes(mi)); n2 += nrm2(mi)(codes(mi)); mi += 1 }
-      if (n2 == 0 || qn == 0) -2.0 else d / (qn * math.sqrt(n2))
-    }
-    val probe = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_emb"))
-    emb.filter(col("vec_id") =!= probeId)
-      .withColumn("codes", encode(col("embedding")))
-      .withColumn("adc", adcScore(col("codes")))
-      .orderBy(col("adc").desc, col("vec_id").asc).limit(rerank)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSim(col("embedding"), col("probe_emb")), 6)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
   }
+
+  /** The deterministic quarter sample (vec_id ≡ 0 mod 4) PQ codebooks
+    * train on.
+    */
+  private def quarter(vecs: Array[(Long, Array[Double])]): Array[Array[Double]] =
+    vecs.collect { case (id, v) if Math.floorMod(id, 4L) == 0 => v }
 
   def annPq(s: SparkSession, dir: String): DataFrame = annPqTopK(s, dir)
 
@@ -364,7 +507,9 @@ object Similarity {
     * the composition better than either part: after subtracting the
     * centroid the residual distribution is centered and much tighter
     * than the raw vectors, so the same 8-byte code budget quantizes far
-    * more precisely than PQ over raw vectors.
+    * more precisely than PQ over raw vectors. The coarse quantizer trains
+    * by [[KMeans.lloyd]] on the collected corpus, and the m residual
+    * codebooks on the quarter sample of the same collect.
     *
     * Query-time ADC reconstructs cosine against v̂ = c_cell + r̂ from
     * driver-resident tables only (all parameter-sized, like IVF's
@@ -372,120 +517,62 @@ object Similarity {
     *   dot(q, v̂)  = dot(q, c_cell) + Σ_mi dot(q_mi, cb[mi][code])
     *   ‖v̂‖²       = ‖c_cell‖² + 2·Σ_mi dot(c_cell,mi, cb[mi][code])
     *                 + Σ_mi ‖cb[mi][code]‖²
-    * The cell×subspace×code cross-table (nlist·m·ksub doubles) is the
-    * only IVFPQ-specific state. The scan touches nprobe/nlist of the
-    * corpus and reads only cell + codes (8 bytes + an int per row, no
-    * float vectors); `rerank` survivors re-rank with the exact codegen'd
-    * cosine. Approximation contract unchanged: returned scores exact,
-    * candidate set a subset of the corpus.
+    * The `rerank` best rows by ADC in the `nprobe` nearest cells
+    * re-rank exactly to give s_k; then every row, in any cell, whose
+    * bound (q·v̂ + ‖q‖·e_v)/(‖q‖·‖v‖) reaches s_k − 1e-6 is scored
+    * exactly (e_v = ‖v − v̂‖ = ‖r − r̂‖). The result is the exact top-k
+    * of [[q26CosineTopK]].
     *
     * At 100 TB this is exactly the shape to materialize (cf.
-    * writeIvfIndex): corpus partitioned by cell, codes column resident,
-    * full vectors fetched only for the rerank handful per query.
+    * writeIvfIndex): corpus partitioned by cell, codes, ‖v‖ and e_v
+    * resident, full vectors fetched only for the rows the bound cannot
+    * rule out.
     */
   def annIvfPqTopK(s: SparkSession, dir: String, probeId: Long = 0,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 6, m: Int = 8,
-      ksub: Int = 16, rerank: Int = 64): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+      ksub: Int = 16, rerank: Int = 64): DataFrame =
+    annIvfPqScan(s, dir, probeId, k, nlist, nprobe, m, ksub, rerank)._1
+
+  /** [[annIvfPqTopK]] and the (vec_id, embedding) rows it scores. */
+  private[graft] def annIvfPqScan(s: SparkSession, dir: String, probeId: Long,
+      k: Int, nlist: Int, nprobe: Int, m: Int, ksub: Int,
+      rerank: Int): (DataFrame, DataFrame) = {
     VectorFunctions.register(s)
-    val dim = 64
-    require(dim % m == 0); val dsub = dim / m
     val emb = t(s, dir, "embeddings")
-      .withColumn("features", array_to_vector(col("embedding")))
-      .cache()
-    val coarse = new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
-      .fit(emb.select(col("features")))
-    val centers: Array[Array[Double]] = coarse.clusterCenters.map(_.toArray)
-    val bcCenters = s.sparkContext.broadcast(centers)
-    val residOf = udf { (e: Seq[Float], cell: Int) =>
-      val c = bcCenters.value(cell)
-      Array.tabulate(dim)(i => e(i) - c(i))
+    val vecs = collectVecs(emb)
+    val centers = KMeans.lloyd(vecs.map(_._2), nlist, iters = 10)
+    def residOf(v: Array[Double]): (Int, Array[Double]) = {
+      val cell = KMeans.nearest(v, centers)
+      (cell, v.indices.map(i => v(i) - centers(cell)(i)).toArray)
     }
-    val assigned = coarse.transform(emb)
-      .withColumnRenamed("prediction", "cell")
-      .withColumn("resid", residOf(col("embedding"), col("cell")))
-      .cache() // feeds codebook training AND encoding
-    // per-subspace codebooks on the quarter-sample RESIDUALS; the m
-    // seeded fits are independent — submit concurrently (cf. annPqTopK)
-    val train = assigned.filter(pmod(col("vec_id"), lit(4)) === 0)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val codebook: Array[Array[Array[Double]]] = Await.result(
-      Future.sequence((0 until m).map { mi => Future {
-        val sub = train.select(array_to_vector(
-          slice(col("resid"), mi * dsub + 1, dsub)).as("features"))
-        new KMeans().setK(ksub).setSeed(42L + mi).setMaxIter(5)
-          .fit(sub).clusterCenters.map(_.toArray)
-      }}), Duration.Inf).toArray
-    val bcCb = s.sparkContext.broadcast(codebook)
-    val encode = udf { (r: Seq[Double]) =>
-      val cb = bcCb.value
-      (0 until m).map { mi =>
-        var best = 0; var bestD = Double.MaxValue; var kk = 0
-        while (kk < ksub) {
-          var d = 0.0; var i = 0
-          while (i < dsub) {
-            val diff = r(mi * dsub + i) - cb(mi)(kk)(i); d += diff * diff
-            i += 1
-          }
-          if (d < bestD) { bestD = d; best = kk }
-          kk += 1
-        }
-        best
+    val pq = Pq.train(quarter(vecs).map(residOf(_)._2), m, ksub)
+    val rows = emb.filter(col("vec_id") =!= probeId)
+    withProbe(vecs, probeId, rows) { q =>
+      val qd = q.map(_.toDouble); val qn = norm(qd)
+      // driver-side ADC state, all parameter-sized
+      val qdotc = centers.map(dot(qd, _))
+      val cn2 = centers.map(c => dot(c, c))
+      val dotsR = pq.dots(qd)
+      val rn2 = pq.cb.map(_.map(c => dot(c, c)))
+      val cdotr = centers.map(pq.dots)
+      val adc = udf { (e: Seq[Float]) =>
+        val (cell, r) = residOf(toDoubles(e))
+        val codes = pq.encode(r)._1
+        val d = qdotc(cell) + pq.lookup(dotsR, codes)
+        val n2 = cn2(cell) + 2.0 * pq.lookup(cdotr(cell), codes) + pq.lookup(rn2, codes)
+        if (n2 <= 0 || qn == 0) -2.0 else d / (qn * math.sqrt(n2))
       }
-    }
-    val probeVec = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
-    val qn = math.sqrt(probeVec.map(x => x.toDouble * x).sum)
-    // driver-side ADC state, all parameter-sized
-    def dotRange(a: Array[Double], off: Int, b: Array[Double]): Double = {
-      var d = 0.0; var i = 0
-      while (i < b.length) { d += a(off + i) * b(i); i += 1 }; d
-    }
-    val qdotc = centers.map(c => (0 until dim).map(i => probeVec(i) * c(i)).sum)
-    val cn2 = centers.map(c => c.map(x => x * x).sum)
-    val dotsR = Array.tabulate(m, ksub) { (mi, kk) =>
-      dotRange(probeVec.map(_.toDouble), mi * dsub, codebook(mi)(kk))
-    }
-    val rn2 = Array.tabulate(m, ksub)((mi, kk) =>
-      codebook(mi)(kk).map(x => x * x).sum)
-    val cdotr = Array.tabulate(nlist, m, ksub) { (c, mi, kk) =>
-      dotRange(centers(c), mi * dsub, codebook(mi)(kk))
-    }
-    val adcScore = udf { (cell: Int, codes: Seq[Int]) =>
-      var d = qdotc(cell); var n2 = cn2(cell); var mi = 0
-      while (mi < m) {
-        val code = codes(mi)
-        d += dotsR(mi)(code)
-        n2 += 2.0 * cdotr(cell)(mi)(code) + rn2(mi)(code)
-        mi += 1
+      val bound = udf { (e: Seq[Float]) =>
+        val v = toDoubles(e)
+        val (cell, r) = residOf(v)
+        val (codes, err) = pq.encode(r)
+        pqBound(qdotc(cell) + pq.lookup(dotsR, codes), qn, err, norm(v))
       }
-      if (n2 <= 0 || qn == 0) -2.0 else d / (qn * math.sqrt(n2))
+      val cellOf = udf((e: Seq[Float]) => residOf(toDoubles(e))._1)
+      val probed = nearestCells(centers, qd, nprobe)
+      pqExact(rows.filter(cellOf(col("embedding")).isin(probed: _*)),
+        adc(col("embedding")), rows, bound(col("embedding")), q, k, rerank)
     }
-    // nprobe cells nearest the probe, by centroid cosine (driver state)
-    def cosC(c: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var i = 0
-      while (i < dim) { d += c(i) * probeVec(i); na += c(i) * c(i); i += 1 }
-      if (na == 0 || qn == 0) -2 else d / (math.sqrt(na) * qn)
-    }
-    val cells = centers.zipWithIndex.sortBy { case (c, _) => -cosC(c) }
-      .take(nprobe).map(_._2)
-    val probe = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_emb"))
-    assigned
-      .filter(col("cell").isin(cells.toIndexedSeq: _*) &&
-        col("vec_id") =!= probeId)
-      .withColumn("codes", encode(col("resid")))
-      .withColumn("adc", adcScore(col("cell"), col("codes")))
-      .orderBy(col("adc").desc, col("vec_id").asc).limit(rerank)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSim(col("embedding"), col("probe_emb")), 6)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
   }
 
   def annIvfPq(s: SparkSession, dir: String): DataFrame = annIvfPqTopK(s, dir)
@@ -498,11 +585,14 @@ object Similarity {
     * returned, `scores_exact` of them carrying the true cosine of their
     * id (re-derived here with the same kernel — ANN may prune
     * candidates but must never fabricate scores), and `bounded` of them
-    * at or below the global best score (the subset property). Per-family
-    * recall addenda (`top1_found`, `recall_at5 ≥ 3`) are only claimed
-    * where the family deterministically achieves them on this corpus —
-    * LSH multiprobe has recall ≈ 0 here (near-orthogonal vectors, no
-    * planted neighbors) and claims none, exactly as its scaladoc states.
+    * at or below the global best score (the subset property). The recall
+    * addenda (`top1_found`, `recall_at5 ≥ 3`) are claimed by IVF, PQ and
+    * IVF-PQ on every corpus, by a bound: each scores exactly every cell
+    * or row whose upper bound on the cosine reaches the k-th best exact
+    * score it has found, so it returns the exact top-5 (see the section
+    * comment above [[annIvfTopK]]). LSH multiprobe has no such bound and
+    * recall ≈ 0 here (near-orthogonal vectors, no planted neighbors), so
+    * it claims none, exactly as its scaladoc states.
     */
   private def annCheckedStats(s: SparkSession, dir: String,
       ann: DataFrame): DataFrame = {
@@ -1053,51 +1143,33 @@ object Similarity {
       .write.partitionBy("bucket").mode("overwrite").parquet(outDir)
   }
 
-  /** Materialized IVF index: train the k-means coarse quantizer (on a
-    * sample at scale), write the corpus parquet-PARTITIONED by cell id,
-    * and return the centroids — the driver-side quantizer state a real
-    * index keeps. Every probe afterwards reads nprobe/nlist of the data
-    * via directory pruning.
+  /** Materialized IVF index: train the coarse quantizer on the collected
+    * `emb` ([[IvfQuantizer.train]]; a sample at scale, widened over the
+    * rest with [[IvfQuantizer.covering]]), write the corpus
+    * parquet-PARTITIONED by cell id, and return the quantizer — the
+    * centroids and cell radii, the driver-side state a real index keeps.
+    * A probe ([[probeIvfIndex]]) reads only the cell directories it
+    * scores.
     */
   def writeIvfIndex(s: SparkSession, emb: DataFrame, outDir: String,
-      nlist: Int = 16): Array[Array[Double]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feats = emb.withColumn("features", array_to_vector(col("embedding")))
-    val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
-      .fit(feats.select(col("features")))
-    model.transform(feats)
-      .withColumnRenamed("prediction", "cell")
-      .drop("features")
-      .write.partitionBy("cell").mode("overwrite").parquet(outDir)
-    model.clusterCenters.map(_.toArray)
+      nlist: Int = 16): IvfQuantizer = {
+    val quant = IvfQuantizer.train(collectVecs(emb).map(_._2), nlist)
+    withCell(emb, quant).write.partitionBy("cell").mode("overwrite").parquet(outDir)
+    quant
   }
 
-  /** Probe a [[writeIvfIndex]] index: rank the stored centroids against
-    * the probe vector driver-side, read only the nprobe nearest cell
-    * directories, exact-rerank with the codegen'd cosine.
+  /** Probe a [[writeIvfIndex]] index for the exact top-k of `probeVec`:
+    * rank the centroids against it driver-side, read the `nprobe`
+    * nearest cell directories for an exact k-th best score, then read
+    * every other cell whose radius bound reaches it (the rule of
+    * [[annIvfTopK]]). Exact as long as `quant`'s radii cover the index's
+    * rows, which holds for the value [[writeIvfIndex]],
+    * [[appendToIvfIndex]] or [[writeIvfIndexAssigned]] returned for it.
     */
-  def probeIvfIndex(s: SparkSession, indexDir: String,
-      centroids: Array[Array[Double]], probeVec: Array[Float],
-      k: Int = 5, nprobe: Int = 4): DataFrame = {
+  def probeIvfIndex(s: SparkSession, indexDir: String, quant: IvfQuantizer,
+      probeVec: Array[Float], k: Int = 5, nprobe: Int = 4): DataFrame = {
     VectorFunctions.register(s)
-    def cos(c: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(c.length, probeVec.length)) {
-        d += c(i) * probeVec(i); na += c(i) * c(i)
-        nb += probeVec(i).toDouble * probeVec(i); i += 1
-      }
-      if (na == 0 || nb == 0) -2 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val cells = centroids.zipWithIndex.sortBy { case (c, _) => -cos(c) }
-      .take(nprobe).map(_._2)
-    s.read.parquet(indexDir)
-      .filter(col("cell").isin(cells.toIndexedSeq: _*))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSim(col("embedding"),
-          typedLit(probeVec)), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
+    ivfExact(s.read.parquet(indexDir), quant, probeVec, k, nprobe)._1
   }
 
   /** Incremental LSH index maintenance: hash NEW vectors into the
@@ -1119,47 +1191,30 @@ object Similarity {
       .write.partitionBy("bucket").mode("append").parquet(indexDir)
   }
 
-  /** Assign vectors to their nearest EXISTING centroid (squared-L2, the
-    * quantizer's own training metric): broadcast of the parameter-sized
-    * centroid table, per-row distance via array HOFs, one keyed argmin —
-    * the batch never joins the corpus, so the cost is |batch|·nlist
-    * kernel evals plus one shuffle of the batch.
-    */
-  private def assignCells(newEmb: DataFrame,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val s = newEmb.sparkSession
-    import s.implicits._
-    val cdf = centroids.zipWithIndex.toSeq.toDF("centroid", "cell")
-    val cells = newEmb.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cdf))
-      .withColumn("d2", aggregate(
-        zip_with(col("embedding"), col("centroid"), (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cell"), col("d2")).as("cell"))
-    newEmb.join(cells, "vec_id")
-  }
-
   /** Incremental IVF index maintenance: assign NEW vectors to the
     * nearest existing centroid (the quantizer is NOT retrained — exactly
     * how a production IVF index absorbs deltas) and append them to the
     * existing cell partitions. Probes read both generations via the one
     * directory tree; directory pruning still holds because the cell
-    * domain is unchanged.
+    * domain is unchanged. Returns the quantizer with its radii widened
+    * to cover the appended rows, which keeps probes exact.
     */
   def appendToIvfIndex(s: SparkSession, newEmb: DataFrame, indexDir: String,
-      centroids: Array[Array[Double]]): Unit =
-    assignCells(newEmb, centroids)
-      .write.partitionBy("cell").mode("append").parquet(indexDir)
+      quant: IvfQuantizer): IvfQuantizer = {
+    withCell(newEmb, quant).write.partitionBy("cell").mode("append").parquet(indexDir)
+    quant.covering(newEmb)
+  }
 
   /** Full write of an IVF layout under a FIXED quantizer (no retrain) —
     * the reference point incremental append must reproduce: append(B) on
     * an index of A is file-for-row equivalent to this over A ∪ B.
+    * Returns the quantizer with radii over exactly the written rows.
     */
   def writeIvfIndexAssigned(s: SparkSession, emb: DataFrame, outDir: String,
-      centroids: Array[Array[Double]]): Unit =
-    assignCells(emb, centroids)
-      .write.partitionBy("cell").mode("overwrite").parquet(outDir)
+      quant: IvfQuantizer): IvfQuantizer = {
+    withCell(emb, quant).write.partitionBy("cell").mode("overwrite").parquet(outDir)
+    quant.copy(radii = quant.radii.map(_ => Double.NegativeInfinity)).covering(emb)
+  }
 
   /** Probe a [[writeLshIndex]] index: multiprobe buckets are computed
     * driver-side from the probe vector (the quantizer is driver state,

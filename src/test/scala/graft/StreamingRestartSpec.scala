@@ -308,4 +308,67 @@ class StreamingRestartSpec extends SparkSpecBase {
       _.sortBy { case (_, id, v) => (-v, id) }.take(3).map { case (_, id, v) => (id, v) }).toMap
     assert(latest == batch)
   }
+
+  test("windowTopNStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val windowUs = 10 * Minute
+    val rows = assertRestartEquivalent(thirds(events), "append")(ds =>
+      StreamingOps.windowTopNStream(eventsDf(ds), n = 2, windowUs = windowUs))
+    // every window the watermark (last ts - 5 s) has closed emits the
+    // batch top 2 event types by count, ties on the type name
+    val watermark = events.map(_._2.getTime).max * 1000 - 5000000L
+    val batch = events.map { case (_, ts, _, tpe, _) => (ts.getTime * 1000, tpe) }
+      .groupBy { case (us, _) => us - Math.floorMod(us, windowUs) }
+      .filter { case (w, _) => w + windowUs <= watermark }
+      .toSeq.flatMap { case (w, es) =>
+        es.groupBy(_._2).view.mapValues(_.size.toLong).toSeq
+          .sortBy { case (tpe, c) => (-c, tpe) }.take(2).zipWithIndex
+          .map { case ((tpe, c), i) => (w, i + 1L, tpe, c) }
+      }.toSet
+    assert(batch.nonEmpty)
+    assert(rows.map(r => (r.getAs[Long]("w_start_us"), r.getAs[Long]("rk"),
+      r.getAs[String]("event_type"), r.getAs[Long]("cnt"))).toSet == batch)
+  }
+
+  test("heavyHitterStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    // one hot token (every other row) among 12 cold ones
+    val tokens = (0 until 60).map(i => if (i % 2 == 0) "hot" else s"t${i * 7 % 12}")
+    val rows = assertRestartEquivalent(thirds(tokens), "update")(ds =>
+      StreamingOps.heavyHitterStream(ds, k = 3, shards = 2))
+    // the hot token's frequency exceeds n/(k+1), so the last batch still
+    // carries it among its shard's candidates
+    val hotShard = Math.floorMod("hot".hashCode, 2)
+    assert(rows.exists(r => r.getAs[Int]("shard") == hotShard &&
+      r.getAs[String]("token") == "hot"))
+  }
+
+  test("retractAggStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    // the changelog normalized to its retract stream, batch by batch
+    // (the rule of changelogNormalizeStream, with the last value per
+    // (group, id) carried across batches)
+    val last = scala.collection.mutable.Map.empty[(Long, Long), Long]
+    val retract = changelogBatches.map(_.sortBy(_.seq).flatMap { op =>
+      val key = (op.group, op.id)
+      (op.op, last.get(key)) match {
+        case ("D", Some(old)) => last -= key
+          Seq(StreamingOps.ChangeRow("-D", op.seq, 0, op.group, op.id, old))
+        case ("D", None) => Nil
+        case (_, Some(old)) => last(key) = op.value_c
+          Seq(StreamingOps.ChangeRow("-U", op.seq, 0, op.group, op.id, old),
+            StreamingOps.ChangeRow("+U", op.seq, 1, op.group, op.id, op.value_c))
+        case (_, None) => last(key) = op.value_c
+          Seq(StreamingOps.ChangeRow("+I", op.seq, 1, op.group, op.id, op.value_c))
+      }
+    })
+    val rows = assertRestartEquivalent(retract, "update")(ds =>
+      StreamingOps.retractAggStream(ds))
+    val g5 = rows.map(r => GroupSnapshot(r.getAs[Long]("group"),
+        r.getAs[Long]("ver"), r.getAs[Long]("sum_c"), r.getAs[Long]("cnt")))
+      .filter(_.group == 5L).sortBy(_.ver)
+    // the delete after the seam retracted from the accumulator restored
+    // from before it, and the version continued
+    assert(g5.last == GroupSnapshot(5L, 2L, 40L, 1L), s"restart lost the accumulator: $g5")
+  }
 }
