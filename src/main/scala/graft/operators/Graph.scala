@@ -148,8 +148,8 @@ object Graph {
       .limit(20)
 
   /** (basket, item) rows → undirected co-occurrence edge list (u < v,
-    * distinct) — shared by the gate query and ScaleProbe so the probed
-    * shape can't drift from the shipped one.
+    * distinct) — shared by the PageRank and BFS gate queries so both
+    * derive the same edge shape.
     */
   def basketEdges(items0: DataFrame): DataFrame = {
     val items = items0.distinct()

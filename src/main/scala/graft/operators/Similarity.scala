@@ -996,8 +996,8 @@ object Similarity {
     * PARTITION of the corpus (one row per vec_id, none lost, none
     * duplicated across cells). The refinement runs 1 sub-Lloyd's
     * iteration and a small fanout so the gate pays for the contract,
-    * not for convergence; the quantitative cost ladder lives in
-    * ScaleProbe/PLANS.
+    * not for convergence; the measured cost ladder is recorded in
+    * PLANS.md.
     */
   def semDedupRecChecked(s: SparkSession, dir: String, k: Int = 4,
       iters: Int = 2, thr: Double = 0.4, targetCell: Int = 50): DataFrame = {

@@ -1410,7 +1410,7 @@ object Relational {
       nShards)
 
   /** Library-facing form over any (l_returnflag, l_quantity,
-    * l_extendedprice)-shaped frame (also the ScaleProbe entry).
+    * l_extendedprice)-shaped frame.
     */
   def spearmanOf(base: DataFrame, nShards: Int = 32): DataFrame = {
     import graft.operators.PrefixSum

@@ -1492,7 +1492,6 @@ object StreamingOps {
     * The DuckDB oracle ranks the definitional net state directly.
     */
   def retractTopNGate(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    warmStreamReplays(s, dir)
     val snaps = s.read.parquet(changelogTopnPath(s, dir, n))
     snaps.withColumn("__mx", max(col("ver")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("group"))))
@@ -1675,7 +1674,6 @@ object StreamingOps {
     * included. NULLS LAST ordering on both engines.
     */
   def changelogLeftJoinGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     foldJoinDeltas(s.read.parquet(changelogLeftPath(s, dir)),
         "left-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc,
@@ -1865,7 +1863,6 @@ object StreamingOps {
     * directions; folded deltas ≡ DuckDB's net-state FULL JOIN.
     */
   def changelogFullJoinGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     foldJoinDeltas(s.read.parquet(changelogFullPath(s, dir)),
         "full-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc_nulls_last,
@@ -1958,7 +1955,6 @@ object StreamingOps {
     * net-state join.
     */
   def changelogJoinGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     foldJoinDeltas(s.read.parquet(changelogInnerPath(s, dir)),
         "changelog join")
       .orderBy(col("grp"), col("l_id"), col("r_id"))
@@ -2590,7 +2586,6 @@ object StreamingOps {
     * op per (group, id) by seq, deletes removed, SUM/COUNT per group.
     */
   def changelogAggGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val snaps = s.read.parquet(changelogAggPath(s, dir))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group")).orderBy(col("ver").desc)
@@ -2941,7 +2936,6 @@ object StreamingOps {
     * `ROWS BETWEEN 3 PRECEDING AND CURRENT ROW` over (ts, id).
     */
   def rowsOverGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(rowsOverPath(s, dir)).filter(col("id") =!= -1L)
       .select(col("key").as("k"), col("ts_us"), col("id"), col("value_c"),
         col("sum_w"), col("cnt_w"))
@@ -2981,7 +2975,6 @@ object StreamingOps {
     * the r10 verdict recorded.
     */
   def rangeOverGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(rangeOverPath(s, dir)).filter(col("event_id") =!= -1L)
       .select(col("user_id").as("k"), col("ts_us"),
         col("event_id").as("id"), col("value").as("value_c"),
@@ -3012,7 +3005,6 @@ object StreamingOps {
     * tables under `dir` must not change within the process.
     */
   def upsertSinkGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     upsertLiveView(s, upsertStatePath(s, dir), Some("del"))
       .select(col("key"), col("seq"), col("value_c"))
       .orderBy(col("key"))
@@ -3087,93 +3079,12 @@ object StreamingOps {
   // cache never invalidates: regenerating testdata under the same dir
   // within one JVM would serve stale fixtures (never happens in the
   // driver/bench/spec harnesses, which start fresh JVMs per run).
-  // Delegates to [[graft.FixtureMemo]], which is NESTING-SAFE: every
-  // replay path asks the same memo for its input fixture.
+  // Delegates to [[graft.FixtureMemo]], which is NESTING-SAFE: a
+  // replay path's memoized build asks the same memo for its input
+  // fixture (e.g. [[windowAggPath]] → [[gateEventsDayFolded]]).
   private def memoFixture[T <: AnyRef](kind: String, dir: String)(
       build: => T): T =
     graft.FixtureMemo.of(kind, dir)(build)
-
-  /** POOLED REPLAY WARM (r18 optimization, guide §2.6 — overlap
-    * independent jobs). The stream gates' replay lifecycles are
-    * independent one-shot jobs whose wall-clock is dominated by
-    * driver-side barriers (micro-batch planning, processAllAvailable
-    * waits, state-store commits on 4-partition tasks) — run back to
-    * back they sum; run concurrently they overlap almost completely
-    * on a 32-core scheduler. This warm builds EVERY memoized family
-    * replay for (process, dir) on one driver thread pool, once; the
-    * first stream gate to execute pays the pooled build (the r13–r17
-    * carrier accounting, extended across families), every later gate
-    * slices its family's memoized output. No family's build function,
-    * replay protocol (2 ordered batches + flush, own watermark,
-    * per-family state-store scope) or output changes — the pool only
-    * changes WHEN the independent lifecycles run relative to each
-    * other, which no gate's output can observe. Per-family builds
-    * stay single-flight under FixtureMemo's per-key locks, so a gate
-    * invoked outside the pool (or a second pool call racing the
-    * first) still builds each replay exactly once.
-    */
-  private[graft] def warmStreamReplays(s: SparkSession, dir: String): Unit = {
-    memoFixture("stream_replay_pool", dir) {
-      runReplayPool(Seq(
-        ("tumble", () => tumblePath(s, dir)),
-        ("slide", () => slidePath(s, dir)),
-        ("cumulate", () => cumulatePath(s, dir)),
-        ("session", () => sessionPath(s, dir)),
-        ("dynamic_session", () => dynamicSessionPath(s, dir)),
-        ("drift_psi", () => driftPsiPath(s, dir)),
-        ("rows_over", () => rowsOverPath(s, dir)),
-        ("range_over", () => rangeOverPath(s, dir)),
-        ("cep", () => cepMultiPath(s, dir)),
-        ("interval", () => intervalFullPath(s, dir)),
-        ("temporal", () => temporalLeftPath(s, dir)),
-        ("changelog_inner", () => changelogInnerPath(s, dir)),
-        ("changelog_left", () => changelogLeftPath(s, dir)),
-        ("changelog_full", () => changelogFullPath(s, dir)),
-        ("changelog_agg", () => changelogAggPath(s, dir)),
-        ("changelog_topn", () => changelogTopnPath(s, dir, 3)),
-        ("ewma", () => ewmaPath(s, dir)),
-        ("cusum", () => cusumPath(s, dir)),
-        ("sql_mr_fields", () => sqlMrFieldsPath(s, dir, 10)),
-        ("attribution", () => attributionPath(s, dir)),
-        ("topn", () => topnPath(s, dir)),
-        ("stream_dedup", () => streamDedupPath(s, dir)),
-        ("window_dedup", () => windowDedupPath(s, dir)),
-        ("window_topn", () => windowTopnPath(s, dir)),
-        ("window_join", () => windowJoinPath(s, dir)),
-        ("late_obs", () => lateObsCount(s, dir)),
-        ("upsert", () => upsertStatePath(s, dir))))
-      java.lang.Boolean.TRUE
-    }
-    ()
-  }
-
-  /** Run every `(family, build)` part on its own pool thread and wait
-    * for all of them. A part that throws is logged on stderr and
-    * otherwise ignored: its memo entry stays empty, so the family's
-    * own gate rebuilds it and fails with its own error, while every
-    * other family's output is kept.
-    */
-  private[graft] def runReplayPool(parts: Seq[(String, () => AnyRef)]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parts.length)
-    val wall0 = System.nanoTime()
-    def at: String = f"${(System.nanoTime() - wall0) / 1e9}%.1f s"
-    try {
-      val futures = parts.map { case (name, f) =>
-        pool.submit(new Runnable {
-          // per-family completion offset from pool start — the
-          // breakdown that locates the pooled wall's critical path
-          // (stderr only; the bench keeps stdout near-silent)
-          override def run(): Unit = {
-            val outcome =
-              try { f(); "done" }
-              catch { case scala.util.control.NonFatal(e) => s"failed ($e)" }
-            System.err.println(s"[stream-pool] $name $outcome at $at")
-          }
-        })
-      }
-      futures.foreach(_.get())
-    } finally pool.shutdown()
-  }
 
   /** Gate-harness conf scope shared by every streaming replay gate:
     * the RocksDB state store (the production store; transformWithState
@@ -3211,17 +3122,16 @@ object StreamingOps {
     }
   }
 
-  /** START-scoped twin of [[withGateConfs]] (r18 optimization): the
-    * gate confs only matter at streaming-query START — StreamExecution
-    * clones the session in its constructor (a strict field, evaluated
-    * inside `.start()` before it returns), freezing conf values for
-    * the query's whole life — so the mutation scope needs to cover
-    * just the start call, not the feed/stop lifecycle. The global
-    * monitor keeps concurrent starters from observing each other's
-    * scoped confs: the pooled replay warm ([[warmStreamReplays]])
-    * starts many lifecycles from many driver threads, and an unlocked
-    * session-conf window would let one family's RocksDB scope leak
-    * into another's start.
+  /** START-scoped twin of [[withGateConfs]]: the gate confs only
+    * matter at streaming-query START — StreamExecution clones the
+    * session in its constructor (a strict field, evaluated inside
+    * `.start()` before it returns), freezing conf values for the
+    * query's whole life — so the mutation scope needs to cover just
+    * the start call, not the feed/stop lifecycle. The global monitor
+    * keeps concurrent starters from observing each other's scoped
+    * confs: gates of different families may be called from different
+    * threads on one session, and an unlocked session-conf window would
+    * let one family's RocksDB scope leak into another's start.
     */
   private val gateConfLock = new AnyRef
   private def startUnderGateConfs[T](s: SparkSession, rocksdb: Boolean)(
@@ -3263,7 +3173,6 @@ object StreamingOps {
     val outDir = graft.FixtureMemo.cleanupOnExit(java.nio.file.Files
       .createTempDirectory("graft-stream-join-gate").toString)
     val streamDf = build(l.toDF(), r.toDF())
-    streamDf.schema // analyze outside the serialized start scope
     val q = startUnderGateConfs(s, rocksdb = false) {
       streamDf.writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -3316,8 +3225,8 @@ object StreamingOps {
     * day-folded fixture): each operator replays in its own memoized
     * [[replayPath]] lifecycle — its own watermark, 2 ordered batches
     * plus the flush row that advances it past every real window/session
-    * end — and is its own pool family, so the six barrier waits overlap
-    * in [[warmStreamReplays]]. Pure windowed aggregations, no
+    * end — and is its own memoized family, built the first time one of
+    * its gates asks for it. Pure windowed aggregations, no
     * transformWithState, so the replays run on the default state store
     * provider (RocksDB stays scoped to the TWS gates that require it).
     */
@@ -3355,7 +3264,6 @@ object StreamingOps {
     * the w_start bound). Replayed by [[windowAggPath]].
     */
   def streamTumbleGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
     s.read.parquet(tumblePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("event_type"),
@@ -3369,7 +3277,6 @@ object StreamingOps {
     * close-once-at-watermark contract.
     */
   def streamSlideGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
     s.read.parquet(slidePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("cnt"))
@@ -3382,7 +3289,6 @@ object StreamingOps {
     * lead-compensated watermark; each slice emits once at close.
     */
   def streamCumulateGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
     s.read.parquet(cumulatePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"),
@@ -3397,7 +3303,6 @@ object StreamingOps {
     * user bound.
     */
   def streamSessionGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(sessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
@@ -3456,7 +3361,6 @@ object StreamingOps {
     * hourly mixes score high, uniform hours near zero.
     */
   def streamDriftPsiGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
     s.read.parquet(driftPsiPath(s, dir))
       .select(col("w_start"), col("n_in_domain"), col("psi"))
@@ -3470,7 +3374,6 @@ object StreamingOps {
     * folded fixture.
     */
   def streamDynamicSessionGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(dynamicSessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
@@ -3527,7 +3430,6 @@ object StreamingOps {
     * at sf0.01 against the per-gate replays).
     */
   private def intervalFullReplayed(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(intervalFullPath(s, dir))
   }
 
@@ -3552,7 +3454,6 @@ object StreamingOps {
     * choice to arrival); the keys are the deterministic contract.
     */
   def streamDedupGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(streamDedupPath(s, dir))
       .filter(col("user_id") >= 0L)
       .orderBy(col("user_id"), col("event_type"))
@@ -3574,7 +3475,6 @@ object StreamingOps {
     * the definitional per-window counts.
     */
   def streamWindowTopNGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
     s.read.parquet(windowTopnPath(s, dir))
       .filter(col("w_start_us") <= maxUs)
@@ -3613,7 +3513,6 @@ object StreamingOps {
     * from the interval join); 194 pairs bind at sf0.01.
     */
   def streamWindowJoinGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(windowJoinPath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("user_id"),
         col("click_id"), col("purchase_id"))
@@ -3697,7 +3596,6 @@ object StreamingOps {
     * (re-dumped bit-identical at sf0.01 against the per-gate replays).
     */
   private def temporalLeftReplayed(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(temporalLeftPath(s, dir))
   }
 
@@ -3723,11 +3621,10 @@ object StreamingOps {
     * measured replay-cost cut (PLANS "2-batch replay harness"): one
     * seam already exercises the cross-batch state path; the specs own
     * finer seam semantics. Returns the output parquet dir (registered
-    * for exit cleanup) — the memoizable unit the pooled warm and the
-    * per-family caches hold. The gate-conf scope covers only the query
-    * START (see
+    * for exit cleanup) — the memoizable unit the per-family caches
+    * hold. The gate-conf scope covers only the query START (see
     * [[startUnderGateConfs]]); the feed/stop lifecycle runs unscoped,
-    * which is what lets many replays run concurrently.
+    * so replays started from different threads do not serialize.
     */
   private def replayTypedPath[T](s: SparkSession, fixture: Seq[T],
       flush: Seq[T], mode: String, rocksdb: Boolean = true)(
@@ -3739,11 +3636,6 @@ object StreamingOps {
     val outDir = graft.FixtureMemo.cleanupOnExit(java.nio.file.Files
       .createTempDirectory("graft-typed-gate").toString)
     val streamDf = build(src.toDS())
-    // force logical-plan analysis OUTSIDE the serialized start scope
-    // (.schema resolves the plan; only physical planning per micro-batch
-    // reads the scoped confs) so concurrent starters don't queue behind
-    // each other's analysis under the gate-conf monitor
-    streamDf.schema
     val q = startUnderGateConfs(s, rocksdb) {
       streamDf.writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -3935,7 +3827,6 @@ object StreamingOps {
     * machines never read one, so outputs are bit-identical.
     */
   private def cepMultiReplayed(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(cepMultiPath(s, dir))
   }
 
@@ -4158,7 +4049,6 @@ object StreamingOps {
     */
   private[graft] def streamSqlMrFieldsAt(s: SparkSession, dir: String,
       minutes: Int): DataFrame = {
-    if (minutes == 10) warmStreamReplays(s, dir)
     val parsed = sqlMrFieldsParsed(minutes)
     val m = s.read.parquet(sqlMrFieldsPath(s, dir, minutes))
     val r = foldedWithK(s, dir).select(col("user_id").as("r_uid"),
@@ -4361,14 +4251,11 @@ object StreamingOps {
     */
   def streamLateObsGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    warmStreamReplays(s, dir)
     Seq(lateObsCount(s, dir).longValue).toDF("late_dropped")
   }
 
   /** The late-observability replay's counter, memoized per (process,
-    * dir) — the replay protocol (held-rows split, noop sink,
-    * accumulator read) is unchanged; only the lifecycle joins the
-    * pooled warm's accounting.
+    * dir): held-rows split, noop sink, accumulator read.
     */
   private def lateObsCount(s: SparkSession, dir: String): java.lang.Long =
     memoFixture("late_obs_count", dir) {
@@ -4421,7 +4308,6 @@ object StreamingOps {
     * the oracle is the definitional ROW_NUMBER cut.
     */
   def streamTopNGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     val snaps = s.read.parquet(topnPath(s, dir))
     snaps.withColumn("__mx", max(col("ver")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("group"))))
@@ -4464,7 +4350,6 @@ object StreamingOps {
     * batch `ts_ewma_anomaly` gate already proves bit-compatible.
     */
   def streamEwmaGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(ewmaPath(s, dir))
       .groupBy(col("user_id"))
       .agg(round(max_by(col("ewma"),
@@ -4481,7 +4366,6 @@ object StreamingOps {
     * structural and this gate proves it against the driver's engine.
     */
   def streamCusumGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(cusumPath(s, dir))
       .groupBy(col("user_id"))
       .agg(sum(when(col("alarmed"), 1L).otherwise(0L)).as("n_alarms"),
@@ -4512,7 +4396,6 @@ object StreamingOps {
     * purchase" with one window max over the row order.
     */
   def streamAttributionGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(attributionPath(s, dir))
       .select(col("user_id"), col("purchase_id"), col("purchase_ts_us"),
         col("last_touch_id"), col("last_touch_type"),
@@ -4544,7 +4427,6 @@ object StreamingOps {
     * controlled fixtures and the gate projects the deterministic keys.
     */
   def streamWindowDedupGate(s: SparkSession, dir: String): DataFrame = {
-    warmStreamReplays(s, dir)
     s.read.parquet(windowDedupPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("w_start"), col("user_id"))

@@ -1,10 +1,10 @@
 package graft
 
-import graft.streaming.StreamingOps
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The stream replay pool fails small: one family's build error is
-  * logged and stays that family's, every other family's build is kept.
+/** A stream replay family fails small: each family is its own
+  * [[FixtureMemo]] entry, so one family's build error stays that
+  * family's, and every other family's build is kept.
   */
 class ReplayPoolSpec extends AnyFunSuite {
 
@@ -20,16 +20,9 @@ class ReplayPoolSpec extends AnyFunSuite {
       goodBuilds.incrementAndGet()
       "built"
     }
-    val err = new java.io.ByteArrayOutputStream
-    val stderr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    try StreamingOps.runReplayPool(Seq(
-      ("bad", () => bad()), ("good", () => good())))
-    finally System.setErr(stderr)
-    val log = err.toString
-    assert(log.contains("[stream-pool] bad failed") &&
-      log.contains("planted family failure"), log)
-    assert(log.contains("[stream-pool] good done at"), log)
+    val first = intercept[IllegalStateException](bad())
+    assert(first.getMessage == "planted family failure")
+    assert(good() == "built")
     // the good family's build is memoized: its gate reuses it
     assert(good() == "built" && goodBuilds.get == 1)
     // the failed build stored nothing: the family's own gate builds

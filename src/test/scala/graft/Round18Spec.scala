@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
   * introduced this round must equal the inline kernels they replaced —
   * fixture ≡ inline is the whole correctness argument for the
   * memoization, so it lives in CI, not just in the round's one-off
-  * dump diffs. Also pins the pooled replay warm's thread-safety
-  * surface at the gate level: gate outputs are identical whether the
-  * pool built their family or a direct call did (FixtureMemo
-  * single-flight is pinned separately in Round17Spec).
+  * dump diffs. Also pins the replay gates' thread-safety surface:
+  * gates of different families called from two threads at once (each
+  * starting its own replay under the shared gate-conf monitor) return
+  * the same rows as a later serial call (FixtureMemo single-flight is
+  * pinned separately in Round17Spec).
   */
 class Round18Spec extends SparkSpecBase {
 
@@ -61,9 +62,9 @@ class Round18Spec extends SparkSpecBase {
   }
 
   test("pooled replay warm: concurrent gate calls agree with each other") {
-    // two gates of DIFFERENT families asked for from two threads while
-    // the pool may be mid-build: both must return their family's exact
-    // memoized output (same rows as asking again afterwards)
+    // two gates of DIFFERENT families asked for from two threads, so
+    // both replays may start and run at once: both must return their
+    // family's exact memoized output (same rows as asking again)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global

@@ -563,13 +563,15 @@ class Round7Spec extends SparkSpecBase {
       res(Similarity.probeLshIndex(spark, lshFull, probeVec)))
 
     // IVF: quantizer trained on generation 0 only; the delta is assigned
-    // to existing cells, never retrained
+    // to existing cells, never retrained. Each index is probed with the
+    // quantizer its write returned (radii covering every row it holds),
+    // so both probes are exact top-k by construction
     val ivfInc = tmp("ivf-inc"); val ivfFull = tmp("ivf-full")
     val cents = Similarity.writeIvfIndex(spark, genA, ivfInc)
-    Similarity.appendToIvfIndex(spark, genB, ivfInc, cents)
-    Similarity.writeIvfIndexAssigned(spark, emb, ivfFull, cents)
-    assert(res(Similarity.probeIvfIndex(spark, ivfInc, cents, probeVec)) ==
-      res(Similarity.probeIvfIndex(spark, ivfFull, cents, probeVec)))
+    val incQuant = Similarity.appendToIvfIndex(spark, genB, ivfInc, cents)
+    val fullQuant = Similarity.writeIvfIndexAssigned(spark, emb, ivfFull, cents)
+    assert(res(Similarity.probeIvfIndex(spark, ivfInc, incQuant, probeVec)) ==
+      res(Similarity.probeIvfIndex(spark, ivfFull, fullQuant, probeVec)))
 
     // appended vectors are genuinely servable: probing with a gen-B
     // vector finds that vector itself as top-1 in both index families
@@ -579,7 +581,7 @@ class Round7Spec extends SparkSpecBase {
     val bVec = bRow.getSeq[Float](1).toArray
     assert(Similarity.probeLshIndex(spark, lshInc, bVec)
       .collect()(0).getLong(0) == bId)
-    assert(Similarity.probeIvfIndex(spark, ivfInc, cents, bVec)
+    assert(Similarity.probeIvfIndex(spark, ivfInc, incQuant, bVec)
       .collect()(0).getLong(0) == bId)
   }
 

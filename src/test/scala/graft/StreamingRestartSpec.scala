@@ -118,6 +118,27 @@ class StreamingRestartSpec extends SparkSpecBase {
       b3)
   }
 
+  /** [[changelogBatches]] normalized to its retract stream, batch by
+    * batch: the rule of changelogNormalizeStream, with the last value
+    * per (group, id) carried across batches.
+    */
+  private val retractBatches: Seq[Seq[StreamingOps.ChangeRow]] = {
+    val last = scala.collection.mutable.Map.empty[(Long, Long), Long]
+    changelogBatches.map(_.sortBy(_.seq).flatMap { op =>
+      val key = (op.group, op.id)
+      (op.op, last.get(key)) match {
+        case ("D", Some(old)) => last -= key
+          Seq(StreamingOps.ChangeRow("-D", op.seq, 0, op.group, op.id, old))
+        case ("D", None) => Nil
+        case (_, Some(old)) => last(key) = op.value_c
+          Seq(StreamingOps.ChangeRow("-U", op.seq, 0, op.group, op.id, old),
+            StreamingOps.ChangeRow("+U", op.seq, 1, op.group, op.id, op.value_c))
+        case (_, None) => last(key) = op.value_c
+          Seq(StreamingOps.ChangeRow("+I", op.seq, 1, op.group, op.id, op.value_c))
+      }
+    })
+  }
+
   /** A seq-ordered two-sided changelog: sides alternate, groups 0-2,
     * ids 0-3, with deletes that empty a side (the padding swaps).
     */
@@ -345,24 +366,7 @@ class StreamingRestartSpec extends SparkSpecBase {
 
   test("retractAggStream: restart at every batch boundary equals the uninterrupted run") {
     import spark.implicits._
-    // the changelog normalized to its retract stream, batch by batch
-    // (the rule of changelogNormalizeStream, with the last value per
-    // (group, id) carried across batches)
-    val last = scala.collection.mutable.Map.empty[(Long, Long), Long]
-    val retract = changelogBatches.map(_.sortBy(_.seq).flatMap { op =>
-      val key = (op.group, op.id)
-      (op.op, last.get(key)) match {
-        case ("D", Some(old)) => last -= key
-          Seq(StreamingOps.ChangeRow("-D", op.seq, 0, op.group, op.id, old))
-        case ("D", None) => Nil
-        case (_, Some(old)) => last(key) = op.value_c
-          Seq(StreamingOps.ChangeRow("-U", op.seq, 0, op.group, op.id, old),
-            StreamingOps.ChangeRow("+U", op.seq, 1, op.group, op.id, op.value_c))
-        case (_, None) => last(key) = op.value_c
-          Seq(StreamingOps.ChangeRow("+I", op.seq, 1, op.group, op.id, op.value_c))
-      }
-    })
-    val rows = assertRestartEquivalent(retract, "update")(ds =>
+    val rows = assertRestartEquivalent(retractBatches, "update")(ds =>
       StreamingOps.retractAggStream(ds))
     val g5 = rows.map(r => GroupSnapshot(r.getAs[Long]("group"),
         r.getAs[Long]("ver"), r.getAs[Long]("sum_c"), r.getAs[Long]("cnt")))
@@ -370,5 +374,60 @@ class StreamingRestartSpec extends SparkSpecBase {
     // the delete after the seam retracted from the accumulator restored
     // from before it, and the version continued
     assert(g5.last == GroupSnapshot(5L, 2L, 40L, 1L), s"restart lost the accumulator: $g5")
+  }
+
+  test("attributionStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    // 3 users, one row a minute; per user block b = i / 3 a click at
+    // b % 5 == 3 and a purchase at b % 5 == 0, so each credited purchase
+    // (b = 5 and 10, in the second and third batch) credits the click
+    // of the batch before it, which only restored state remembers
+    val rows = (0 until 45).map { i =>
+      val b = i / 3
+      (i % 3L, Base + i * Minute, i.toLong,
+        if (b % 5 == 3) "click" else if (b % 5 == 0) "purchase" else "cart")
+    }
+    val out = assertRestartEquivalent(thirds(rows), "update")(ds =>
+      StreamingOps.attributionStream(ds))
+    val credits = out.map(r => (r.getAs[Long]("purchase_id"),
+      r.getAs[Long]("last_touch_id"), r.getAs[String]("last_touch_type")))
+    // the first purchase per user has no touch before it
+    assert(credits.toSet == (0 until 3).flatMap(u =>
+      Seq((15L + u, 9L + u, "click"), (30L + u, 24L + u, "click"))).toSet)
+  }
+
+  test("changelogNormalizeStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(changelogBatches, "update")(ds =>
+      StreamingOps.changelogNormalizeStream(ds))
+    // the batch normalization of the same changelog, including group 5's
+    // delete after the seam, which retracts the value learned before it
+    val got = rows.map(r => StreamingOps.ChangeRow(r.getAs[String]("kind"),
+      r.getAs[Long]("seq"), r.getAs[Int]("sub"), r.getAs[Long]("group"),
+      r.getAs[Long]("id"), r.getAs[Long]("value_c")))
+    assert(got.sortBy(r => (r.seq, r.sub, r.group, r.id)) ==
+      retractBatches.flatten.sortBy(r => (r.seq, r.sub, r.group, r.id)))
+    assert(got.contains(StreamingOps.ChangeRow("-D", 103L, 0, 5L, 1L, 100L)))
+  }
+
+  test("windowedPsiStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val width = 10
+    val baseline = (0 until 5).map(i =>
+      events.count(e => math.floor(e._5 / width).toInt == i).toLong)
+    val windowUs = 10 * Minute
+    val rows = assertRestartEquivalent(thirds(events), "append")(ds =>
+      StreamingOps.windowedPsiStream(eventsDf(ds), baseline, width, "10 minutes"))
+    // every window the watermark (last ts - 5 s) has closed emits once,
+    // with its own row count in the histogram
+    val watermark = events.map(_._2.getTime).max * 1000 - 5000000L
+    val batch = events.map(e => e._2.getTime * 1000)
+      .groupBy(us => us - Math.floorMod(us, windowUs))
+      .filter { case (w, _) => w + windowUs <= watermark }
+      .map { case (w, us) => (w, us.length.toLong) }.toSet
+    assert(batch.nonEmpty)
+    assert(rows.map(r => (r.getAs[Long]("w_start"),
+      r.getAs[Long]("n_in_domain"))).toSet == batch)
+    assert(rows.length == batch.size)
   }
 }
