@@ -9,12 +9,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Tables.names.foreach(n => Tables.t(spark, sfDir, n).count())
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Contiguous sequential pattern matching over keyed event series —
   * the MATCH_RECOGNIZE capability class (Flink SQL's CEP surface;
@@ -469,58 +470,6 @@ object Cep {
     }
   }
 
-  /** Relaxed-contiguity (followedBy) pattern class: symbol steps with
-    * any quantifier (r13 — looping relaxed states: a quantified step's
-    * run is a SUBSEQUENCE of matching rows, greedy by default), plus
-    * zero-width negations ([[validateNeg]]). Alternation and repeated
-    * symbols are fine (subsequence parsing needs no closure rule);
-    * `cmp`/`any` stay banned — a PREV predicate navigates physically
-    * adjacent rows, which followedBy deliberately skips, and a
-    * wildcard step would defeat the alphabet-bounded state contract.
-    */
-  private[graft] def validateSubseq(pattern: Seq[Step]): Unit = {
-    require(pattern.nonEmpty, "cep: empty pattern")
-    pattern.foreach { st =>
-      require(st.cmp.isEmpty && !st.any,
-        "cep: relaxed contiguity supports symbol steps only — a PREV " +
-          "predicate navigates physically adjacent rows, which " +
-          "followedBy deliberately skips, and a wildcard step would " +
-          "defeat the alphabet-bounded state contract")
-      require(st.sumCap.isEmpty,
-        "cep: running-aggregate DEFINE predicates are contiguous-mode " +
-          "only (a relaxed run's membership is not prefix-decidable " +
-          "under a cap when rows can be skipped)")
-      st.rep.foreach { case (lo, hi) =>
-        require(!st.plus && !st.opt,
-          "cep: rep bounds override the quantifier flags")
-        require(0 <= lo && lo <= hi && hi >= 1,
-          s"cep: rep bounds must satisfy 0 <= lo <= hi, hi >= 1 " +
-            s"(got ($lo, $hi))")
-      }
-    }
-    // r16: cross-variable DEFINE references run in relaxed mode too —
-    // the relaxed subsequence walk tracks per-step consumed
-    // positions (`taken`), so FIRST/LAST navigation reads the current
-    // path's takes exactly as the contiguous walk's leaf pools do.
-    // Same structural rules as the contiguous class: strictly-earlier
-    // target, never a zero-width negation.
-    pattern.toIndexedSeq.zipWithIndex.foreach { case (st, i) =>
-      st.cross.foreach { cr =>
-        require(cr.step >= 0 && cr.step < i,
-          s"cep: a cross-variable DEFINE reference must name an " +
-            s"EARLIER step (step $i references ${cr.step} — a " +
-            "not-yet-matched variable has no rows to navigate)")
-        require(!pattern(cr.step).neg,
-          "cep: a cross-variable reference targets a zero-width " +
-            "negation step, which consumes no row to navigate")
-      }
-    }
-    require(pattern.head.bounds._1 >= 1 && !pattern.head.neg,
-      "cep: first step must be required and consuming (candidate " +
-        "starts and window pruning key on the first step's symbol)")
-    validateNeg(pattern, relaxed = true)
-  }
-
   /** COLLAPSE-CLOSURE distinctness: any two steps separated only by
     * OPTIONAL steps have distinct symbols (with zero steps between,
     * this is the plain adjacent-distinct rule). Optional steps can
@@ -536,7 +485,7 @@ object Cep {
     *
     * Every contiguous pattern runs the same backtracking walk inside
     * or outside the class; the class bounds only the timed-out-partial
-    * surface ([[validateTimeoutScope]]), where it makes "the" partial
+    * surface ([[cepTimedOutOf]]), where it makes "the" partial
     * of a stale head well-defined.
     */
   private[graft] def closureHolds(pattern: IndexedSeq[Step]): Boolean = {
@@ -557,15 +506,35 @@ object Cep {
     }
   }
 
-  /** The checks every contiguous pattern needs: non-empty, sane rep
-    * bounds, sane PREV offsets and cross references, a required
-    * predicate-free first step (candidate starts and pruning key on
-    * it), and the negation rules.
+  /** The checks every flat pattern needs: non-empty, sane rep bounds,
+    * sane PREV offsets and cross references (an EARLIER, consuming
+    * target — the relaxed walk tracks per-step takes, so FIRST/LAST
+    * navigation runs in both modes), a required predicate-free first
+    * step (candidate starts and pruning key on it), and the negation
+    * rules. A `relaxed` (followedBy) pattern is symbol steps with any
+    * quantifier (a quantified step's run is a SUBSEQUENCE of matching
+    * rows) plus zero-width negations; alternation and repeated symbols
+    * are fine (subsequence parsing needs no closure rule), while
+    * `cmp`/`any` stay banned — a PREV predicate navigates physically
+    * adjacent rows, which followedBy deliberately skips, and a wildcard
+    * step would defeat the alphabet-bounded state contract.
     */
-  private[graft] def validateCommon(pattern: Seq[Step]): Unit = {
+  private[graft] def validateCommon(pattern: Seq[Step],
+      relaxed: Boolean = false): Unit = {
     require(pattern.nonEmpty, "cep: empty pattern")
     val pat = pattern.toIndexedSeq
     pat.foreach { st =>
+      if (relaxed) {
+        require(st.cmp.isEmpty && !st.any,
+          "cep: relaxed contiguity supports symbol steps only — a PREV " +
+            "predicate navigates physically adjacent rows, which " +
+            "followedBy deliberately skips, and a wildcard step would " +
+            "defeat the alphabet-bounded state contract")
+        require(st.sumCap.isEmpty,
+          "cep: running-aggregate DEFINE predicates are contiguous-mode " +
+            "only (a relaxed run's membership is not prefix-decidable " +
+            "under a cap when rows can be skipped)")
+      }
       st.rep.foreach { case (lo, hi) =>
         require(!st.plus && !st.opt,
           "cep: rep bounds override the quantifier flags — leave plus/" +
@@ -574,9 +543,7 @@ object Cep {
           s"cep: rep bounds must satisfy 0 <= lo <= hi, hi >= 1 " +
             s"(got ($lo, $hi))")
       }
-    }
-    pat.foreach { st =>
-      require(st.cmpOff >= 1,
+      require(relaxed || st.cmpOff >= 1,
         s"cep: PREV offset must be >= 1 (got ${st.cmpOff})")
       require(!st.neg || !st.any, "cep: negation of a wildcard")
     }
@@ -599,7 +566,7 @@ object Cep {
         "navigates input rows, and the row before the match start is " +
         "outside the machine's buffer (MATCH_RECOGNIZE patterns open " +
         "with a predicate-free variable for the same reason)")
-    validateNeg(pat, relaxed = false)
+    validateNeg(pat, relaxed)
     // a trailing quantified/optional step is allowed: the walk's
     // run-resolution rules (bounding row / window staleness) give the
     // greedy trailing run a sound completion point on a stream
@@ -664,6 +631,9 @@ object Cep {
       // aggs list is the timeout sentinel, real matches must differ.
       needsAggs: Boolean = true)
       extends Serializable {
+    // The constructor is the one pattern check: every batch fold and
+    // the streaming multi-pattern entry build a Machine on the driver,
+    // so a rejected pattern fails before any job or query starts.
     // GROUP-QUANTIFIER mode: the compiled tree is the program (pattern
     // then only lists its leaves); after-match is restricted to the two
     // whole-match strategies — FIRST/LAST target FLAT step indices,
@@ -671,26 +641,21 @@ object Cep {
     private val program: Vector[GInstr] = grouped match {
       case Some(g) =>
         require(contiguous, "cep: grouped patterns are contiguous-mode")
+        validateGrouped(g)
         require(after == SkipPastLast || after == SkipToNextRow,
           "cep: grouped patterns support AFTER MATCH SKIP PAST LAST " +
             "ROW / TO NEXT ROW (FIRST/LAST name flat steps)")
-        validateGrouped(g)
         compile(g)
       case None =>
-        validateAfter(pattern, after)
         // relaxed contiguity (Flink CEP's followedBy): rows between
         // step matches are skipped (alternation sets and repeated
         // symbols allowed: A B A and even A A are unambiguous under
         // subsequence semantics)
-        if (contiguous) {
-          validateCommon(pattern)
-          // a flat step list is a GCat of leaves: leaf index == step
-          // index == pc, so the per-step rules below index by pc
-          compile(GCat(pattern.map(GLf(_))))
-        } else {
-          validateSubseq(pattern)
-          null
-        }
+        validateCommon(pattern, relaxed = !contiguous)
+        validateAfter(pattern, after)
+        // a flat step list is a GCat of leaves: leaf index == step
+        // index == pc, so the per-step rules below index by pc
+        if (contiguous) compile(GCat(pattern.map(GLf(_)))) else null
     }
     private val firstPred: String => Boolean = grouped match {
       case Some(g) =>
@@ -735,13 +700,14 @@ object Cep {
     // match IS the buffer. Elsewhere a stale head is resolved inside
     // the search, where a single "the" partial is ambiguous — rejected
     // rather than guessed.
-    if (withTimeouts) {
-      require(grouped.isEmpty && contiguous && after == SkipPastLast,
+    if (withTimeouts)
+      require(grouped.isEmpty && contiguous && after == SkipPastLast &&
+        closureHolds(pattern) && pattern.last.bounds == ((1, 1)) &&
+        !pattern.exists(st => st.cmp.isDefined || st.any || st.reluctant ||
+          st.neg || st.sumCap.isDefined || st.cross.nonEmpty),
         "cep: timed-out partials need a contiguous collapse-closure " +
           "pattern with a required one-row tail under AFTER MATCH SKIP " +
           "PAST LAST ROW (elsewhere the partial to surface is ambiguous)")
-      validateTimeoutScope(pattern)
-    }
     // (ts, id, tpe, value_c) — value_c rides along untouched by the
     // walk; MEASURES folds it per step at completion
     private var buf = Vector.empty[(Long, Long, String, Long)]
@@ -1341,10 +1307,9 @@ object Cep {
     */
   def cepMatchOf(events: DataFrame, pattern: Seq[Step],
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepMatch] = {
-    validateCommon(pattern)
-    matchInternal(events, pattern, windowUs, after, contiguous = true)
-  }
+      : Dataset[CepMatch] =
+    matchScan(events, pattern.toIndexedSeq, windowUs, after,
+      contiguous = true, grouped = None)
 
   /** RELAXED-CONTIGUITY pattern matching — Flink CEP's `followedBy`
     * class: rows between step matches are skipped (a One step takes
@@ -1379,10 +1344,9 @@ object Cep {
     */
   def cepFollowedByOf(events: DataFrame, pattern: Seq[Step],
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepMatch] = {
-    validateSubseq(pattern)
-    matchInternal(events, pattern, windowUs, after, contiguous = false)
-  }
+      : Dataset[CepMatch] =
+    matchScan(events, pattern.toIndexedSeq, windowUs, after,
+      contiguous = false, grouped = None)
 
   /** The per-partition segmented scan shared by the batch folds: one
     * machine per key, every feed's emissions drained in order, and a
@@ -1421,33 +1385,70 @@ object Cep {
       def next(): O = { pump(); q.dequeue() }
     }
 
-  private def matchInternal(events: DataFrame, pattern: Seq[Step],
-      windowUs: Long, after: AfterMatch, contiguous: Boolean)
-      : Dataset[CepMatch] = {
-    validateAfter(pattern, after)
+  /** The events row every fold scans: (user_id, ts_us, event_id,
+    * event_type, value_c), value_c the `value` column in exact cents, or
+    * 0 where nothing reads it (symbol-only patterns keep working on
+    * frames without `value`).
+    */
+  private[graft] def eventsRow(events: DataFrame, withValue: Boolean)
+      : DataFrame =
+    events.select(col("user_id").cast("long"),
+      unix_micros(col("ts")).as("ts_us"), col("event_id").cast("long"),
+      col("event_type"),
+      (if (withValue) round(col("value") * 100).cast("long") else lit(0L))
+        .as("value_c"))
+
+  /** The one keyed scan of the batch folds: `mk`'s Machine is built once
+    * on the driver first (its constructor is the pattern check, so a
+    * rejected pattern fails at call time, before any job), then one key
+    * repartition, a per-partition (user_id, ts, event_id) sort and
+    * [[segmentedScan]].
+    */
+  private def keyedScan[O <: Product : TypeTag](events: DataFrame,
+      withValue: Boolean, mk: () => Machine)(
+      conv: (Long, Machine, (CepMatch, List[StepAgg])) => Iterator[O])
+      : Dataset[O] = {
+    mk()
     val ss = events.sparkSession
     import ss.implicits._
-    val pat = pattern.toIndexedSeq
-    // the value column rides along only when a DEFINE predicate needs
-    // it — symbol-only patterns keep working on frames without `value`
-    val valueC =
-      if (pat.exists(st => st.cmp.isDefined || st.sumCap.isDefined ||
-          st.cross.nonEmpty))
-        round(col("value") * 100).cast("long")
-      else lit(0L)
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        valueC.as("value_c"))
+    eventsRow(events, withValue)
       .as[(Long, Long, Long, String, Long)]
       .repartition(col("user_id"))
       .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(pat, windowUs, after, contiguous,
-          needsAggs = false))(
-          (u, _, r) => Iterator.single(r._1.copy(user_id = u)))
-      }
+      .mapPartitions(it => segmentedScan(it, mk)(conv))
   }
+
+  /** Match-only fold (flat, relaxed or grouped): the value channel rides
+    * along only when a DEFINE predicate reads it.
+    */
+  private def matchScan(events: DataFrame, leaves: IndexedSeq[Step],
+      windowUs: Long, after: AfterMatch, contiguous: Boolean,
+      grouped: Option[GPat]): Dataset[CepMatch] =
+    keyedScan(events, leaves.exists(st => st.cmp.isDefined ||
+        st.sumCap.isDefined || st.cross.nonEmpty),
+      () => new Machine(leaves, windowUs, after, contiguous, grouped,
+        needsAggs = false))(
+      (u, _, r) => Iterator.single(r._1.copy(user_id = u)))
+
+  /** MEASURES fold (flat or grouped): one [[CepMeasured]] row per
+    * (match, step or leaf).
+    */
+  private def measuresScan(events: DataFrame, leaves: IndexedSeq[Step],
+      windowUs: Long, after: AfterMatch, grouped: Option[GPat])
+      : Dataset[CepMeasured] =
+    keyedScan(events, withValue = true,
+      () => new Machine(leaves, windowUs, after, grouped = grouped)) {
+      case (u, _, (c, aggs)) => aggs.iterator.map(measuredOf(u, c, _))
+    }
+
+  /** One step's MEASURES row of a match completed on key `u` — shared by
+    * the batch measures folds and the streaming measured channel.
+    */
+  private[graft] def measuredOf(u: Long, c: CepMatch, a: StepAgg)
+      : CepMeasured =
+    CepMeasured(u, c.start_event_id, c.start_ts_us, c.end_event_id,
+      c.end_ts_us, c.n_rows, a.step, a.symbol, a.cnt, a.sum_value_c,
+      a.min_value_c, a.max_value_c, a.first_event_id, a.last_event_id)
 
   /** One match × step row of [[cepMeasuresOf]]: the match identity
     * columns plus the step's MEASURES (COUNT, SUM of cents value,
@@ -1469,29 +1470,8 @@ object Cep {
     * (one key repartition, per-partition sort, segmented scan).
     */
   def cepMeasuresOf(events: DataFrame, pattern: Seq[Step],
-      windowUs: Long, after: AfterMatch = SkipPastLast): Dataset[CepMeasured] = {
-    validateCommon(pattern)
-    val ss = events.sparkSession
-    import ss.implicits._
-    val pat = pattern.toIndexedSeq
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long").as("value_c"))
-      .as[(Long, Long, Long, String, Long)]
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(pat, windowUs, after)) {
-          case (u, _, (c, aggs)) =>
-            aggs.iterator.map(a => CepMeasured(u, c.start_event_id,
-              c.start_ts_us, c.end_event_id, c.end_ts_us, c.n_rows,
-              a.step, a.symbol, a.cnt, a.sum_value_c,
-              a.min_value_c, a.max_value_c,
-              a.first_event_id, a.last_event_id))
-        }
-      }
-  }
+      windowUs: Long, after: AfterMatch = SkipPastLast): Dataset[CepMeasured] =
+    measuresScan(events, pattern.toIndexedSeq, windowUs, after, None)
 
   /** One output row of the ALL-ROWS-PER-MATCH folds ([[cepRowsOf]] /
     * [[cepRowsGroupedOf]]): a consumed input row with its match's
@@ -1530,43 +1510,17 @@ object Cep {
     * window) are kills, not timeouts — Flink's own distinction. Same
     * one-shuffle segmented scan as every CEP fold.
     */
-  /** Driver-side twin of the Machine's withTimeouts scope check — the
-    * rejection must fire before a task does (batch and streaming
-    * timeout surfaces share it).
-    */
-  private[graft] def validateTimeoutScope(pat: IndexedSeq[Step]): Unit =
-    require(closureHolds(pat) &&
-      !pat.exists(st => st.cmp.isDefined || st.any || st.reluctant ||
-        st.neg || st.sumCap.isDefined || st.cross.nonEmpty) &&
-      pat.last.bounds == ((1, 1)),
-      "cep: timed-out partials need a contiguous collapse-closure " +
-        "pattern with a required one-row tail under AFTER MATCH SKIP " +
-        "PAST LAST ROW (elsewhere the partial to surface is ambiguous)")
-
   def cepTimedOutOf(events: DataFrame, pattern: Seq[Step],
       windowUs: Long): Dataset[CepOutcome] = {
-    validateCommon(pattern)
     val pat = pattern.toIndexedSeq
-    validateTimeoutScope(pat)
-    val ss = events.sparkSession
-    import ss.implicits._
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        lit(0L).as("value_c"))
-      .as[(Long, Long, Long, String, Long)]
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(pat, windowUs, SkipPastLast,
-          contiguous = true, withTimeouts = true)) {
-          case (u, _, (c, aggs)) =>
-            // the empty-aggs sentinel marks a timeout (real matches
-            // carry one StepAgg per step — patterns are non-empty)
-            Iterator.single(CepOutcome(u, c.start_event_id, c.start_ts_us,
-              c.end_event_id, c.end_ts_us, c.n_rows, aggs.isEmpty))
-        }
-      }
+    keyedScan(events, withValue = false, () => new Machine(pat, windowUs,
+      SkipPastLast, contiguous = true, withTimeouts = true)) {
+      case (u, _, (c, aggs)) =>
+        // the empty-aggs sentinel marks a timeout (real matches
+        // carry one StepAgg per step — patterns are non-empty)
+        Iterator.single(CepOutcome(u, c.start_event_id, c.start_ts_us,
+          c.end_event_id, c.end_ts_us, c.n_rows, aggs.isEmpty))
+    }
   }
 
   /** cep_timeout gate — the funnel under a 1-day completion window
@@ -1587,29 +1541,16 @@ object Cep {
 
   private def rowsScan(events: DataFrame, leaves: IndexedSeq[Step],
       windowUs: Long, after: AfterMatch, grouped: Option[GPat])
-      : Dataset[CepRowMatched] = {
-    val ss = events.sparkSession
-    import ss.implicits._
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long").as("value_c"))
-      .as[(Long, Long, Long, String, Long)]
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(leaves, windowUs, after,
-          contiguous = true, grouped = grouped, withRows = true,
-          needsAggs = false)) {
-          case (u, m, (c, _)) =>
-            m.popRows().iterator.map { case (step, ts, id, tpe, vc) =>
-              CepRowMatched(u, c.start_event_id, c.start_ts_us,
-                c.end_event_id, c.end_ts_us, c.n_rows, id, ts, tpe, vc,
-                step)
-            }
+      : Dataset[CepRowMatched] =
+    keyedScan(events, withValue = true, () => new Machine(leaves, windowUs,
+      after, contiguous = true, grouped = grouped, withRows = true,
+      needsAggs = false)) {
+      case (u, m, (c, _)) =>
+        m.popRows().iterator.map { case (step, ts, id, tpe, vc) =>
+          CepRowMatched(u, c.start_event_id, c.start_ts_us,
+            c.end_event_id, c.end_ts_us, c.n_rows, id, ts, tpe, vc, step)
         }
-      }
-  }
+    }
 
   /** ALL ROWS PER MATCH — the SQL standard's other MATCH_RECOGNIZE
     * output mode (Flink's planner ships both): one output row per
@@ -1624,11 +1565,8 @@ object Cep {
     */
   def cepRowsOf(events: DataFrame, pattern: Seq[Step],
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepRowMatched] = {
-    validateCommon(pattern)
-    validateAfter(pattern, after)
+      : Dataset[CepRowMatched] =
     rowsScan(events, pattern.toIndexedSeq, windowUs, after, None)
-  }
 
   /** ALL ROWS PER MATCH over a GROUP-QUANTIFIER pattern: `step` is the
     * leaf's index in [[gLeaves]] order, and a repeated group's leaf
@@ -1638,23 +1576,9 @@ object Cep {
     */
   def cepRowsGroupedOf(events: DataFrame, gpat: GPat,
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepRowMatched] = {
-    validateGroupedEntry(gpat, after)
+      : Dataset[CepRowMatched] =
     rowsScan(events, gLeaves(gpat).toIndexedSeq, windowUs, after,
       Some(gpat))
-  }
-
-  /** Driver-side twin of the Machine's grouped-mode requires: the
-    * grouped entry points must reject bad trees and flat-step
-    * AFTER MATCH forms BEFORE a task runs (the Machine re-validates
-    * in-ctor as the backstop).
-    */
-  private def validateGroupedEntry(gpat: GPat, after: AfterMatch): Unit = {
-    validateGrouped(gpat)
-    require(after == SkipPastLast || after == SkipToNextRow,
-      "cep: grouped patterns support AFTER MATCH SKIP PAST LAST ROW " +
-        "/ TO NEXT ROW (FIRST/LAST name flat steps)")
-  }
 
   /** MEASURES over GROUP-QUANTIFIER patterns — [[cepMeasuresOf]]'s
     * grouped twin: one output row per (match, LEAF in [[gLeaves]]
@@ -1668,30 +1592,9 @@ object Cep {
     */
   def cepMeasuresGroupedOf(events: DataFrame, gpat: GPat,
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepMeasured] = {
-    validateGroupedEntry(gpat, after)
-    val ss = events.sparkSession
-    import ss.implicits._
-    val leaves = gLeaves(gpat).toIndexedSeq
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long").as("value_c"))
-      .as[(Long, Long, Long, String, Long)]
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(leaves, windowUs, after,
-          contiguous = true, grouped = Some(gpat))) {
-          case (u, _, (c, aggs)) =>
-            aggs.iterator.map(a => CepMeasured(u, c.start_event_id,
-              c.start_ts_us, c.end_event_id, c.end_ts_us, c.n_rows,
-              a.step, a.symbol, a.cnt, a.sum_value_c,
-              a.min_value_c, a.max_value_c,
-              a.first_event_id, a.last_event_id))
-        }
-      }
-  }
+      : Dataset[CepMeasured] =
+    measuresScan(events, gLeaves(gpat).toIndexedSeq, windowUs, after,
+      Some(gpat))
 
   /** cep_funnel — the gate pattern: click → view+ → purchase over
     * contiguous per-user rows, completing within 7 days (the synthetic
@@ -1893,25 +1796,6 @@ object Cep {
       .toDF()
       .orderBy(col("user_id"), col("start_ts_us"), col("start_event_id"))
 
-  /** cep_vshape — the SQL-standard MATCH_RECOGNIZE flagship: the
-    * V-pattern `STRT DOWN+ UP+` with DEFINE predicates over the value
-    * column (DOWN: value < PREV(value); UP: value > PREV(value);
-    * STRT: any row). Exercises three r12 capabilities at once:
-    * wildcard steps, PREV predicates, and a trailing quantified step
-    * (the UP+ run resolves at the first non-ascending row — the
-    * backtracking walk's run-resolution rule — or at the batch
-    * END-OF-INPUT flush: 49 pending end-of-data ascents resolve there
-    * at sf0.01, the finite-input semantics [[cepMatchOf]] documents;
-    * the streaming twin keeps them pending). SKIP PAST LAST makes
-    * consecutive Vs interact: a new
-    * descent starting right after an accepted V has its natural STRT
-    * (the previous V's peak) already consumed, so its start is pushed
-    * one row in — the oracle's floor recursion, binding on 1928 of
-    * the selections (1212 pairs die entirely to the push). 2021
-    * matches; the 7-day window exceeds every V span at gate scale
-    * (max 6.4 d — verified), so windowed chunking (oracled by
-    * cep_backtrack) stays out of this gate's oracle.
-    */
   /** cep_reluctant — LAZY quantifiers (MATCH_RECOGNIZE's `+?`):
     * view+? view takes the SHORTEST run that lets the final step
     * match, so a view island resolves into consecutive disjoint PAIRS
@@ -1931,6 +1815,25 @@ object Cep {
       .toDF()
       .orderBy(col("user_id"), col("start_ts_us"), col("start_event_id"))
 
+  /** cep_vshape — the SQL-standard MATCH_RECOGNIZE flagship: the
+    * V-pattern `STRT DOWN+ UP+` with DEFINE predicates over the value
+    * column (DOWN: value < PREV(value); UP: value > PREV(value);
+    * STRT: any row). Exercises three r12 capabilities at once:
+    * wildcard steps, PREV predicates, and a trailing quantified step
+    * (the UP+ run resolves at the first non-ascending row — the
+    * backtracking walk's run-resolution rule — or at the batch
+    * END-OF-INPUT flush: 49 pending end-of-data ascents resolve there
+    * at sf0.01, the finite-input semantics [[cepMatchOf]] documents;
+    * the streaming twin keeps them pending). SKIP PAST LAST makes
+    * consecutive Vs interact: a new
+    * descent starting right after an accepted V has its natural STRT
+    * (the previous V's peak) already consumed, so its start is pushed
+    * one row in — the oracle's floor recursion, binding on 1928 of
+    * the selections (1212 pairs die entirely to the push). 2021
+    * matches; the 7-day window exceeds every V span at gate scale
+    * (max 6.4 d — verified), so windowed chunking (oracled by
+    * cep_backtrack) stays out of this gate's oracle.
+    */
   def cepVshape(s: SparkSession, dir: String): DataFrame =
     cepMatchOf(graft.Tables.t(s, dir, "events"),
       Seq(Step("*", plus = false, any = true),
@@ -2072,29 +1975,9 @@ object Cep {
     */
   def cepMatchGroupedOf(events: DataFrame, gpat: GPat,
       windowUs: Long, after: AfterMatch = SkipPastLast)
-      : Dataset[CepMatch] = {
-    validateGroupedEntry(gpat, after)
-    val ss = events.sparkSession
-    import ss.implicits._
-    val leaves = gLeaves(gpat).toIndexedSeq
-    val valueC =
-      if (leaves.exists(st => st.cmp.isDefined || st.sumCap.isDefined ||
-          st.cross.nonEmpty))
-        round(col("value") * 100).cast("long")
-      else lit(0L)
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        valueC.as("value_c"))
-      .as[(Long, Long, Long, String, Long)]
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts_us"), col("event_id"))
-      .mapPartitions { it =>
-        segmentedScan(it, () => new Machine(leaves, windowUs, after,
-          contiguous = true, grouped = Some(gpat), needsAggs = false))(
-          (u, _, r) => Iterator.single(r._1.copy(user_id = u)))
-      }
-  }
+      : Dataset[CepMatch] =
+    matchScan(events, gLeaves(gpat).toIndexedSeq, windowUs, after,
+      contiguous = true, grouped = Some(gpat))
 
   /** cep_group — the GROUP-QUANTIFIER gate: ((click|view)(signup|
     * error))+ purchase within 24 h — an alternating two-symbol-CLASS

@@ -645,45 +645,30 @@ object MatchRecognize {
         if (isFirst) Cep.SkipToFirst(idx) else Cep.SkipToLast(idx)
       case None => after
     }
-    if (hasGroups) {
-      // GROUP QUANTIFIERS: build the pattern TREE; the split-program
-      // machine validates it (group bodies must consume, no negs,
-      // after-match restricted) — run its checks now so the SQL
-      // surface fails at parse time, not first execution
-      // singleton concatenations collapse so parsed trees are the
-      // canonical programmatic shapes (GRep over a bare GAlt, not over
-      // GCat(List(GAlt)))
-      def mkG(ns: List[PNode]): Cep.GPat = ns.map {
-        case PLeaf(it) => Cep.GLf(mkStep(it)): Cep.GPat
-        case PGroup(cs, lo, hi, rel) =>
-          if (lo == 1 && hi == 1 && !rel) mkG(cs)
-          else Cep.GRep(mkG(cs), lo, hi, rel)
-        case PAlt(arms) => Cep.GAlt(arms.map(mkG))
-      } match {
-        case List(one) => one
-        case many      => Cep.GCat(many)
-      }
-      val g = mkG(tree)
-      Cep.validateGrouped(g)
-      require(resolvedAfter == Cep.SkipPastLast ||
-          resolvedAfter == Cep.SkipToNextRow,
-        "match_recognize: grouped patterns support AFTER MATCH SKIP " +
-          "PAST LAST ROW / TO NEXT ROW (FIRST/LAST name flat steps)")
-      Parsed(partitionCol, orderCols.toList, steps, resolvedAfter,
-        windowUs, rawMeasures.result(), items.toList.map(_.name),
-        grouped = Some(g), allRows = allRows, subsets = subsets.toMap,
-        withUnmatched = withUnmatched, rowPreds = allPreds)
-    } else {
-      // the machine's own validation runs too (cepMatchOf) — these
-      // parser-level requires exist so the SQL surface fails with SQL-
-      // level messages before the machine's
-      Cep.validateCommon(steps)
-      Cep.validateAfter(steps, resolvedAfter)
-      Parsed(partitionCol, orderCols.toList, steps, resolvedAfter,
-        windowUs, rawMeasures.result(), items.toList.map(_.name),
-        allRows = allRows, subsets = subsets.toMap,
-        withUnmatched = withUnmatched, rowPreds = allPreds)
+    // GROUP QUANTIFIERS: build the pattern TREE; singleton
+    // concatenations collapse so parsed trees are the canonical
+    // programmatic shapes (GRep over a bare GAlt, not over
+    // GCat(List(GAlt)))
+    def mkG(ns: List[PNode]): Cep.GPat = ns.map {
+      case PLeaf(it) => Cep.GLf(mkStep(it)): Cep.GPat
+      case PGroup(cs, lo, hi, rel) =>
+        if (lo == 1 && hi == 1 && !rel) mkG(cs)
+        else Cep.GRep(mkG(cs), lo, hi, rel)
+      case PAlt(arms) => Cep.GAlt(arms.map(mkG))
+    } match {
+      case List(one) => one
+      case many      => Cep.GCat(many)
     }
+    val grouped = if (hasGroups) Some(mkG(tree)) else None
+    // the Machine's constructor is the pattern check: build it now so
+    // the SQL surface fails at parse time, not first execution
+    new Cep.Machine(grouped.fold(steps.toIndexedSeq)(
+      Cep.gLeaves(_).toIndexedSeq), windowUs, resolvedAfter,
+      grouped = grouped)
+    Parsed(partitionCol, orderCols.toList, steps, resolvedAfter,
+      windowUs, rawMeasures.result(), items.toList.map(_.name),
+      grouped = grouped, allRows = allRows, subsets = subsets.toMap,
+      withUnmatched = withUnmatched, rowPreds = allPreds)
   }
 
   /** Strict MEASURES parse: `expr AS alias` entries, comma separated —
@@ -974,13 +959,6 @@ object MatchRecognize {
     t.substring(1, t.length - 1)
   }
 
-  /** Run a MATCH_RECOGNIZE clause against an events-shaped frame: parse
-    * and delegate to [[Cep.cepMatchOf]]. The clause's PARTITION BY /
-    * ORDER BY must be the frame's key/time shape (user_id; ts then
-    * optionally event_id) — the machine's segmented scan is keyed on
-    * exactly that, so anything else is rejected rather than silently
-    * re-mapped.
-    */
   /** Runner-side half of the product-alphabet construction (r17, see
     * [[RowPred]]): resolve every row-predicate field against the input
     * frame's SCHEMA (unknown or non-numeric fields rejected, naming
@@ -1021,19 +999,34 @@ object MatchRecognize {
     else df.withColumn("event_type",
       substring_index(col("event_type"), "|", 1))
 
+  /** The clause shape every MATCH_RECOGNIZE runner, batch or streaming,
+    * needs: PARTITION BY user_id and ORDER BY ts, then optionally
+    * event_id — the machine's keyed scan runs on exactly that, so
+    * anything else is rejected rather than silently re-mapped — and the
+    * output mode the `surface` runs (`allRows`: ALL ROWS PER MATCH).
+    */
+  private[graft] def requireRunnable(parsed: Parsed, surface: String,
+      allRows: Boolean): Unit = {
+    require(parsed.partitionCol == "user_id" &&
+      (parsed.orderCols == Seq("ts") ||
+        parsed.orderCols == Seq("ts", "event_id")),
+      s"$surface: PARTITION BY ${parsed.partitionCol} ORDER BY " +
+        s"${parsed.orderCols.mkString(", ")} — this runner keys on " +
+        "user_id and orders by ts, event_id")
+    require(parsed.allRows == allRows,
+      if (allRows) s"$surface: this runner implements ALL ROWS PER " +
+        "MATCH — the clause asks for one row per match (matchRecognizeOf)"
+      else s"$surface: the clause asks for ALL ROWS PER MATCH, a batch " +
+        "output mode (matchRecognizeRowsOf) — this runner emits per match")
+  }
+
+  /** Run a MATCH_RECOGNIZE clause against an events-shaped frame: parse
+    * and delegate to [[Cep.cepMatchOf]] (or its grouped twin); the clause
+    * shape is [[requireRunnable]]'s.
+    */
   def matchRecognizeOf(events: DataFrame, sql: String): Dataset[Cep.CepMatch] = {
     val parsed = parse(sql)
-    require(parsed.partitionCol == "user_id",
-      s"match_recognize: PARTITION BY ${parsed.partitionCol} — this " +
-        "runner keys on user_id")
-    require(parsed.orderCols == Seq("ts") ||
-        parsed.orderCols == Seq("ts", "event_id"),
-      s"match_recognize: ORDER BY ${parsed.orderCols.mkString(", ")} — " +
-        "this runner orders by ts, event_id")
-    require(!parsed.allRows,
-      "match_recognize: the clause asks for ALL ROWS PER MATCH — run " +
-        "it with matchRecognizeRowsOf (this runner emits one row per " +
-        "match)")
+    requireRunnable(parsed, "matchRecognizeOf", allRows = false)
     val ev = fieldEvents(events, parsed)
     parsed.grouped match {
       case Some(g) =>
@@ -1043,26 +1036,6 @@ object MatchRecognize {
     }
   }
 
-  /** ONE-ROW-PER-MATCH with the clause's MEASURES as columns: parse,
-    * run [[Cep.cepMeasuresOf]], and PIVOT the per-(match, step) rows
-    * into one row per match carrying each measure under its alias —
-    * match identity columns (user_id, start/end ids and timestamps,
-    * n_rows) ride along for joinability. Measure variables must occur
-    * exactly ONCE in PATTERN (a repeated variable's occurrences are
-    * distinct steps here; aggregate across them downstream); a SUBSET
-    * union variable pools its members' steps (COUNT/SUM add, MIN/MAX
-    * pool, FIRST/LAST navigate to the union's first/last consumed row
-    * in match order — steps consume contiguously, so step order IS
-    * match order). MATCH_NUMBER() numbers a partition's matches
-    * sequentially in match order (one ranking window per key — the
-    * standard's partition-scoped numbering); CLASSIFIER() is per-row
-    * and rejected here (ALL ROWS PER MATCH is where a row exists to
-    * classify). RUNNING/FINAL markers are accepted and ignored: in
-    * ONE ROW PER MATCH the two coincide at the match's final row (the
-    * standard's own equivalence). The pivot is one hash aggregation
-    * keyed on the match identity — no extra shuffle beyond
-    * cepMeasuresOf's own segmented scan.
-    */
   /** A measure leaf aggregating a NON-canonical field — beyond "*"
     * (COUNT), "value" (the cents channel), "event_id" (the id
     * navigations), and the niladic markers' empty field. These route
@@ -1119,21 +1092,33 @@ object MatchRecognize {
     case f => col(f)
   }
 
+  /** ONE-ROW-PER-MATCH with the clause's MEASURES as columns: parse,
+    * run [[Cep.cepMeasuresOf]], and PIVOT the per-(match, step) rows
+    * into one row per match carrying each measure under its alias —
+    * match identity columns (user_id, start/end ids and timestamps,
+    * n_rows) ride along for joinability. Measure variables must occur
+    * exactly ONCE in PATTERN (a repeated variable's occurrences are
+    * distinct steps here; aggregate across them downstream); a SUBSET
+    * union variable pools its members' steps (COUNT/SUM add, MIN/MAX
+    * pool, FIRST/LAST navigate to the union's first/last consumed row
+    * in match order — steps consume contiguously, so step order IS
+    * match order). MATCH_NUMBER() numbers a partition's matches
+    * sequentially in match order (one ranking window per key — the
+    * standard's partition-scoped numbering); CLASSIFIER() is per-row
+    * and rejected here (ALL ROWS PER MATCH is where a row exists to
+    * classify). RUNNING/FINAL markers are accepted and ignored: in
+    * ONE ROW PER MATCH the two coincide at the match's final row (the
+    * standard's own equivalence). The pivot is one hash aggregation
+    * keyed on the match identity — no extra shuffle beyond
+    * cepMeasuresOf's own segmented scan.
+    */
   def matchRecognizeMeasuresOf(events: DataFrame, sql: String): DataFrame = {
     val parsed = parse(sql)
-    require(parsed.partitionCol == "user_id" &&
-      (parsed.orderCols == Seq("ts") ||
-        parsed.orderCols == Seq("ts", "event_id")),
-      "match_recognize: this runner keys on user_id and orders by " +
-        "ts, event_id")
+    requireRunnable(parsed, "matchRecognizeMeasuresOf", allRows = false)
     require(parsed.grouped.isEmpty,
       "match_recognize: MEASURES range over FLAT pattern variables — " +
         "a repeated group's leaves have no single step to aggregate " +
         "(aggregate the grouped match rows downstream)")
-    require(!parsed.allRows,
-      "match_recognize: the clause asks for ALL ROWS PER MATCH — run " +
-        "it with matchRecognizeRowsOf (RUNNING/FINAL per-row measures " +
-        "live there)")
     if (extLeaves(parseMeasures(parsed.rawMeasures)).isEmpty)
       pivotMeasured(
         Cep.cepMeasuresOf(fieldEvents(events, parsed), parsed.pattern,
@@ -1142,25 +1127,39 @@ object MatchRecognize {
     else pivotMeasuredRows(events, parsed)
   }
 
-  /** The MEASURES pivot over a CepMeasured-shaped frame (one row per
-    * match × step): per-(match, step) aggregates under their aliases,
-    * one hash aggregation keyed on the match identity, MATCH_NUMBER as
-    * a per-key rank. Shared by the batch pivot runner and the
-    * streaming gate (the streaming measures replay lands the same
-    * shape). `md` is BY-NAME: name validation runs before the frame
-    * is touched (the rejection specs probe with a null frame).
+  /** A MEASURES expression as one Column: `leaf` turns each aggregate
+    * leaf into its Column, and +, −, *, / compose the leaves inside the
+    * same aggregation or projection (expressions over aggregates — no
+    * second pass).
     */
-  private[graft] def pivotMeasured(md: => DataFrame, parsed: Parsed)
-      : DataFrame = {
+  private def evalM(e: MExpr)(leaf: MAgg => Column): Column = e match {
+    case a: MAgg         => leaf(a)
+    case l: MLit         => l.column
+    case MBin('+', l, r) => evalM(l)(leaf) + evalM(r)(leaf)
+    case MBin('*', l, r) => evalM(l)(leaf) * evalM(r)(leaf)
+    case MBin('/', l, r) => evalM(l)(leaf) / evalM(r)(leaf)
+    case MBin(_, l, r)   => evalM(l)(leaf) - evalM(r)(leaf)
+  }
+
+  /** The one ONE-ROW-PER-MATCH MEASURES pivot: per-measure aggregates
+    * under their aliases in one hash aggregation keyed on the match
+    * identity, MATCH_NUMBER as a per-key rank. `leaf` aggregates one
+    * measure leaf over the rows of its measured name's pattern
+    * variables, given as (name, step index): a SUBSET union pools its
+    * members, a pattern variable is itself, and each must occur exactly
+    * once in PATTERN. `frame` is BY-NAME: the CLASSIFIER and name rules
+    * run before the frame is touched (the rejection specs probe with a
+    * null frame).
+    */
+  private def pivotWith(frame: => DataFrame, parsed: Parsed)(
+      leaf: (MAgg, Seq[(String, Int)]) => Column): DataFrame = {
     val measures = parseMeasures(parsed.rawMeasures)
     require(!measures.exists(m =>
         mLeaves(m.expr).exists(_.func == "CLASSIFIER")),
       "match_recognize: CLASSIFIER() names the row's consuming " +
         "variable — ONE ROW PER MATCH has no row to classify (use " +
         "ALL ROWS PER MATCH)")
-    // a measured name is a SUBSET union (→ its members' steps, pooled)
-    // or a pattern variable (→ its single step)
-    def stepsOf(name: String): Seq[Int] =
+    def varsOf(name: String): Seq[(String, Int)] =
       parsed.subsets.getOrElse(name, List(name)).map { v =>
         val occ = parsed.varNames.zipWithIndex.filter(_._1 == v)
         require(occ.nonEmpty,
@@ -1168,22 +1167,41 @@ object MatchRecognize {
         require(occ.length == 1,
           s"match_recognize: MEASURES over '$v', which PATTERN uses " +
             s"${occ.length} times — each occurrence is a distinct step")
-        occ.head._2
+        occ.head
       }
-    def isMn(m: Measure): Boolean = m.expr match {
+    val (mns, rest) = measures.partition(_.expr match {
       case MAgg("MATCH_NUMBER", _, _) => true
       case _ => false
+    })
+    val aggs = rest.map(m =>
+      evalM(m.expr)(a => leaf(a, varsOf(a.varName))).as(m.alias))
+    val byMatch = frame.groupBy(col("user_id"), col("start_event_id"),
+      col("start_ts_us"), col("end_event_id"), col("end_ts_us"),
+      col("n_rows"))
+    val pivoted =
+      if (aggs.nonEmpty) byMatch.agg(aggs.head, aggs.tail: _*)
+      // MEASURES held only MATCH_NUMBER(): distinct match identity
+      else byMatch.agg(max(lit(1)).as("__d")).drop("__d")
+    // every MATCH_NUMBER alias materializes (aliases are distinct by
+    // parseMeasures; repeated MATCH_NUMBER entries are legal and equal)
+    mns.foldLeft(pivoted) { (df, mn) =>
+      df.withColumn(mn.alias,
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("start_ts_us"), col("start_event_id")))
+          .cast("long"))
     }
-    // validate every measured name BEFORE touching the frame — parse
-    // and name errors must fire without a scan (the rejection specs
-    // probe with a null frame)
-    measures.filterNot(isMn)
-      .foreach(m => mLeaves(m.expr).foreach(a => stepsOf(a.varName)))
-    // one aggregate Column per leaf; +/− arithmetic composes the
-    // leaves INSIDE the same hash aggregation (expressions over
-    // aggregates — no second pass)
-    def aggCol(a: MAgg): Column = {
-      val in = col("step").isin(stepsOf(a.varName): _*)
+  }
+
+  /** The MEASURES pivot over a CepMeasured-shaped frame (one row per
+    * match × step): a leaf reads its variables' (match, step) rows.
+    * Shared by the batch pivot runner and the streaming gate (the
+    * streaming measures replay lands the same shape).
+    */
+  private[graft] def pivotMeasured(md: => DataFrame, parsed: Parsed)
+      : DataFrame =
+    pivotWith(md, parsed) { (a, vars) =>
+      val in = col("step").isin(vars.map(_._2): _*)
       a.func match {
         // single variable = one (match, step) row; union = its members'
         // rows pooled — the additive/extremal forms are the same code
@@ -1209,38 +1227,6 @@ object MatchRecognize {
             .getField("last_event_id")
       }
     }
-    def evalM(e: MExpr): Column = e match {
-      case a: MAgg         => aggCol(a)
-      case l: MLit         => l.column
-      case MBin('+', l, r) => evalM(l) + evalM(r)
-      case MBin('*', l, r) => evalM(l) * evalM(r)
-      case MBin('/', l, r) => evalM(l) / evalM(r)
-      case MBin(_, l, r)   => evalM(l) - evalM(r)
-    }
-    val aggs = measures.filterNot(isMn)
-      .map(m => evalM(m.expr).as(m.alias))
-    val pivoted =
-      if (aggs.nonEmpty)
-        md.groupBy(col("user_id"), col("start_event_id"),
-            col("start_ts_us"), col("end_event_id"), col("end_ts_us"),
-            col("n_rows"))
-          .agg(aggs.head, aggs.tail: _*)
-      else // MEASURES held only MATCH_NUMBER(): distinct match identity
-        md.groupBy(col("user_id"), col("start_event_id"),
-            col("start_ts_us"), col("end_event_id"), col("end_ts_us"),
-            col("n_rows"))
-          .agg(max(lit(1)).as("__d")).drop("__d")
-    // every MATCH_NUMBER alias materializes (aliases are distinct by
-    // parseMeasures; repeated MATCH_NUMBER entries are legal and equal)
-    measures.filter(isMn).foldLeft(pivoted) {
-      (df, mn) =>
-        df.withColumn(mn.alias,
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("start_ts_us"), col("start_event_id")))
-            .cast("long"))
-    }
-  }
 
   /** The FIELD-BREADTH pivot (r17): ONE ROW PER MATCH with MEASURES
     * over ARBITRARY numeric input columns — the CepMeasured fast path
@@ -1248,7 +1234,8 @@ object MatchRecognize {
     * the ALL-ROWS scan instead: one row per consumed row (classifier
     * attached), ONE equi-join pulling the referenced columns from the
     * source on (user_id, event_id), then the same one-hash-aggregation
-    * pivot keyed on the match identity. Contiguous consumption makes
+    * pivot keyed on the match identity, a leaf testing membership on
+    * CLASSIFIER. Contiguous consumption makes
     * (ts_us, event_id) order the match order, so FIRST/LAST navigate
     * by a struct min/max exactly as the step-ordered fast path does.
     * Exactness contract: SUM/AVG over a floating-point field (other
@@ -1260,46 +1247,21 @@ object MatchRecognize {
     * over unpartitioned data, no driver loop.
     */
   private def pivotMeasuredRows(events: DataFrame, parsed: Parsed)
-      : DataFrame = {
-    val measures = parseMeasures(parsed.rawMeasures)
-    require(!measures.exists(m =>
-        mLeaves(m.expr).exists(_.func == "CLASSIFIER")),
-      "match_recognize: CLASSIFIER() names the row's consuming " +
-        "variable — ONE ROW PER MATCH has no row to classify (use " +
-        "ALL ROWS PER MATCH)")
-    // same name rules as the fast path: a measured variable occurs
-    // exactly once; a SUBSET union pools its members (classifier-keyed
-    // here ≡ step-keyed there for single-occurrence variables)
-    def namesOf(name: String): Seq[String] =
-      parsed.subsets.getOrElse(name, List(name)).map { v =>
-        val occ = parsed.varNames.count(_ == v)
-        require(occ >= 1,
-          s"match_recognize: MEASURES names '$v' which PATTERN never uses")
-        require(occ == 1,
-          s"match_recognize: MEASURES over '$v', which PATTERN uses " +
-            s"$occ times — each occurrence is a distinct step")
-        v
-      }
-    def isMn(m: Measure): Boolean = m.expr match {
-      case MAgg("MATCH_NUMBER", _, _) => true
-      case _ => false
-    }
-    measures.filterNot(isMn)
-      .foreach(m => mLeaves(m.expr).foreach(a => namesOf(a.varName)))
-    val extCols = resolveExtFields(events, measures)
-    val rows = Cep.cepRowsOf(fieldEvents(events, parsed), parsed.pattern,
-      parsed.windowUs, parsed.after).toDF()
-      .withColumn("classifier",
-        element_at(array(parsed.varNames.map(lit): _*), col("step") + 1))
-    val joined =
+      : DataFrame =
+    pivotWith({
+      val extCols = resolveExtFields(events, parseMeasures(parsed.rawMeasures))
+      val rows = Cep.cepRowsOf(fieldEvents(events, parsed), parsed.pattern,
+        parsed.windowUs, parsed.after).toDF()
+        .withColumn("classifier",
+          element_at(array(parsed.varNames.map(lit): _*), col("step") + 1))
       if (extCols.isEmpty) rows
       else rows.join(events.select(
           col("user_id").cast("long").as("user_id") +:
           col("event_id").cast("long").as("event_id") +:
           extCols.map(col): _*),
         Seq("user_id", "event_id"))
-    def aggCol(a: MAgg): Column = {
-      val in = col("classifier").isin(namesOf(a.varName): _*)
+    }, parsed) { (a, vars) =>
+      val in = col("classifier").isin(vars.map(_._1): _*)
       a.func match {
         // count(), not sum-of-ones: a variable that consumed zero rows
         // (an optional or zero-take leaf) must count 0, not NULL — the
@@ -1319,29 +1281,6 @@ object MatchRecognize {
             extFieldCol(a).as("v")))).getField("v")
       }
     }
-    def evalM(e: MExpr): Column = e match {
-      case a: MAgg         => aggCol(a)
-      case l: MLit         => l.column
-      case MBin('+', l, r) => evalM(l) + evalM(r)
-      case MBin('*', l, r) => evalM(l) * evalM(r)
-      case MBin('/', l, r) => evalM(l) / evalM(r)
-      case MBin(_, l, r)   => evalM(l) - evalM(r)
-    }
-    val aggs = measures.filterNot(isMn)
-      .map(m => evalM(m.expr).as(m.alias))
-    val pivoted = joined.groupBy(col("user_id"), col("start_event_id"),
-        col("start_ts_us"), col("end_event_id"), col("end_ts_us"),
-        col("n_rows"))
-      .agg(aggs.head, aggs.tail: _*)
-    measures.filter(isMn).foldLeft(pivoted) {
-      (df, mn) =>
-        df.withColumn(mn.alias,
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("start_ts_us"), col("start_event_id")))
-            .cast("long"))
-    }
-  }
 
   /** ALL ROWS PER MATCH — the SQL standard's other output mode: one
     * row per CONSUMED input row, carrying the match identity columns
@@ -1372,14 +1311,7 @@ object MatchRecognize {
     */
   def matchRecognizeRowsOf(events: DataFrame, sql: String): DataFrame = {
     val parsed = parse(sql)
-    require(parsed.partitionCol == "user_id" &&
-      (parsed.orderCols == Seq("ts") ||
-        parsed.orderCols == Seq("ts", "event_id")),
-      "match_recognize: this runner keys on user_id and orders by " +
-        "ts, event_id")
-    require(parsed.allRows,
-      "match_recognize: this runner implements ALL ROWS PER MATCH — " +
-        "the clause asks for one row per match (matchRecognizeOf)")
+    requireRunnable(parsed, "matchRecognizeRowsOf", allRows = true)
     val rows = parsed.grouped match {
       case Some(g) =>
         Cep.cepRowsGroupedOf(fieldEvents(events, parsed), g,
@@ -1451,18 +1383,12 @@ object MatchRecognize {
       }
       val mcols = measures.map { m =>
         val w = if (m.mode == "FINAL") whole else running
-        def evalM(e: MExpr): Column = e match {
+        evalM(m.expr) {
           case MAgg("MATCH_NUMBER", _, _) =>
             dense_rank().over(mnW).cast("long")
           case MAgg("CLASSIFIER", _, _) => col("classifier")
-          case a: MAgg               => aggColW(a, w)
-          case l: MLit               => l.column
-          case MBin('+', l, r)       => evalM(l) + evalM(r)
-          case MBin('*', l, r)       => evalM(l) * evalM(r)
-          case MBin('/', l, r)       => evalM(l) / evalM(r)
-          case MBin(_, l, r)         => evalM(l) - evalM(r)
-        }
-        evalM(m.expr).as(m.alias)
+          case a                        => aggColW(a, w)
+        }.as(m.alias)
       }
       src0.select(out.columns.map(col).toSeq ++ mcols: _*)
     }
@@ -1478,11 +1404,7 @@ object MatchRecognize {
       // as the plain ALL ROWS output), unmatched rows with nulls —
       // and the CEP scan is evaluated ONCE (a union + anti-join shape
       // would walk the segmented scan twice).
-      val src = events.select(col("user_id").cast("long"),
-        unix_micros(col("ts")).as("ts_us"),
-        col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long").as("value_c"))
-      src.join(matched.drop("ts_us", "event_type", "value_c"),
+      Cep.eventsRow(events, withValue = true).join(matched.drop("ts_us", "event_type", "value_c"),
         Seq("user_id", "event_id"), "left")
     }
   }

@@ -2067,14 +2067,8 @@ object StreamingOps {
   def cepStreamSqlMeasures(events: Dataset[(Long, Long, Long, String, Long)],
       sql: String): Dataset[graft.operators.Cep.CepMeasured] = {
     val parsed = graft.operators.MatchRecognize.parse(sql)
-    require(parsed.partitionCol == "user_id" &&
-      (parsed.orderCols == Seq("ts") ||
-        parsed.orderCols == Seq("ts", "event_id")),
-      "match_recognize: the streaming runner keys on user_id and " +
-        "orders by ts, event_id")
-    require(!parsed.allRows,
-      "match_recognize: ALL ROWS PER MATCH is a batch output mode — " +
-        "the streaming measures runner emits per-step aggregate rows")
+    graft.operators.MatchRecognize.requireRunnable(parsed,
+      "cepStreamSqlMeasures", allRows = false)
     require(parsed.grouped.isEmpty,
       "match_recognize: MEASURES range over FLAT pattern variables")
     // strict-parse the MEASURES clause now — a malformed measure must
@@ -2101,13 +2095,8 @@ object StreamingOps {
       "cepStreamSqlMulti: clause names repeat")
     val specs = clauses.map { case (name, sql) =>
       val p = graft.operators.MatchRecognize.parse(sql)
-      require(p.partitionCol == "user_id" &&
-        (p.orderCols == Seq("ts") || p.orderCols == Seq("ts", "event_id")),
-        s"match_recognize '$name': the streaming runner keys on " +
-          "user_id and orders by ts, event_id")
-      require(!p.allRows,
-        s"match_recognize '$name': ALL ROWS PER MATCH is a batch " +
-          "output mode — the streaming runner emits one row per match")
+      graft.operators.MatchRecognize.requireRunnable(p,
+        s"cepStreamSqlMulti '$name'", allRows = false)
       requireNoRowPreds(p, s"cepStreamSqlMulti '$name'")
       CepSpec(p.pattern.toIndexedSeq, p.windowUs, p.after,
         grouped = p.grouped)
@@ -2357,14 +2346,8 @@ object StreamingOps {
             val tag =
               if (sp.withTimeouts && aggs.isEmpty) i + CepTimeoutTag else i
             out += ((tag, shell(cm)))
-            if (sp.measured) aggs.foreach { a =>
-              out += ((i + CepMeasuredTag,
-                graft.operators.Cep.CepMeasured(key, cm.start_event_id,
-                  cm.start_ts_us, cm.end_event_id, cm.end_ts_us,
-                  cm.n_rows, a.step, a.symbol, a.cnt, a.sum_value_c,
-                  a.min_value_c, a.max_value_c, a.first_event_id,
-                  a.last_event_id)))
-            }
+            if (sp.measured) aggs.foreach(a => out += ((i + CepMeasuredTag,
+              graft.operators.Cep.measuredOf(key, cm, a))))
           }
           ripeRows.foreach { case (ts, id, tpe, vc) =>
             m.feedM(ts, id, tpe, vc).foreach { case (c, aggs) =>
@@ -2407,18 +2390,10 @@ object StreamingOps {
       s"cep multi-pattern stream: ${specs.length} specs — the timeout tag offset " +
         s"($CepTimeoutTag) must stay disjoint from spec indices")
     specs.foreach { sp =>
-      if (sp.grouped.isEmpty) {
-        if (sp.contiguous) graft.operators.Cep.validateCommon(sp.pattern)
-        else graft.operators.Cep.validateSubseq(sp.pattern)
-        graft.operators.Cep.validateAfter(sp.pattern, sp.after)
-      }
-      if (sp.withTimeouts) {
-        require(sp.grouped.isEmpty && sp.contiguous &&
-          sp.after == graft.operators.Cep.SkipPastLast,
-          "cep multi-pattern stream: withTimeouts needs a contiguous flat " +
-            "pattern under AFTER MATCH SKIP PAST LAST ROW")
-        graft.operators.Cep.validateTimeoutScope(sp.pattern)
-      }
+      // the Machine's constructor is the pattern check: build each
+      // spec's machine here, so a rejection fires before any query
+      new graft.operators.Cep.Machine(sp.pattern, sp.windowUs, sp.after,
+        sp.contiguous, sp.grouped, withTimeouts = sp.withTimeouts)
       if (sp.measured)
         require(sp.grouped.isEmpty,
           "cep multi-pattern stream: the measured channel ranges over FLAT " +
@@ -4105,15 +4080,8 @@ object StreamingOps {
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None)
       : Dataset[graft.operators.Cep.CepMatch] = {
     val parsed = graft.operators.MatchRecognize.parse(sql)
-    require(parsed.partitionCol == "user_id" &&
-      (parsed.orderCols == Seq("ts") ||
-        parsed.orderCols == Seq("ts", "event_id")),
-      "match_recognize: the streaming runner keys on user_id and " +
-        "orders by ts, event_id")
-    require(!parsed.allRows,
-      "match_recognize: ALL ROWS PER MATCH is a batch output mode " +
-        "(matchRecognizeRowsOf) — the streaming runner emits one row " +
-        "per match")
+    graft.operators.MatchRecognize.requireRunnable(parsed, "cepStreamSql",
+      allRows = false)
     requireNoRowPreds(parsed, "cepStreamSql")
     cepStreamValued(events, parsed.pattern, parsed.windowUs,
       parsed.after, contiguous = true, lateCounter, parsed.grouped)

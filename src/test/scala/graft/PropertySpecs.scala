@@ -1221,7 +1221,7 @@ object CepMachineProps extends Properties("CepMachine") {
   }
 
   /** Relaxed patterns with quantifiers and negations: symbol steps
-    * (no cmp/any — validateSubseq's contract), step 0 required
+    * (no cmp/any — the relaxed validateCommon contract), step 0 required
     * consuming, one optional negation at an interior-before-required
     * or trailing position, and (r16) one optional cross-variable
     * FIRST/LAST reference from a later step to an earlier consuming
@@ -1280,7 +1280,7 @@ object CepMachineProps extends Properties("CepMachine") {
     }
   }
 
-  /** Shrink guard mirroring validateSubseq + validateNeg. */
+  /** Shrink guard mirroring the relaxed validateCommon + validateNeg. */
   private def validRelaxedQPat(pat: IndexedSeq[Cep.Step]): Boolean =
     pat.nonEmpty &&
       pat.head.bounds._1 >= 1 && !pat.head.neg &&

@@ -430,4 +430,83 @@ class StreamingRestartSpec extends SparkSpecBase {
       r.getAs[Long]("n_in_domain"))).toSet == batch)
     assert(rows.length == batch.size)
   }
+
+  /** (id, ts, text) docs, one a minute; the first doc of the second and
+    * third batch repeats the text of the doc before it one second later,
+    * so both repeats fall inside the 5-second dedup horizon across a seam.
+    */
+  private val docs: Seq[(Long, java.sql.Timestamp, String)] =
+    (0 until 45).map { i =>
+      val repeat = i == 15 || i == 30
+      val n = if (repeat) i - 1 else i
+      val ms = (Base + n * Minute) / 1000 + (if (repeat) 1000 else 0)
+      (i.toLong, new java.sql.Timestamp(ms),
+        s"order $n of user ${n % 7} shipped to depot ${n * 31 % 97}")
+    }
+
+  test("nearDupDedupStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(docs), "append")(ds =>
+      StreamingOps.nearDupDedupStream(ds.toDF("id", "ts", "text")))
+    // both repeats drop through the signature state restored at the seam
+    assert(rows.map(_.getAs[Long]("id")).sorted ==
+      docs.map(_._1).filterNot(Set(15L, 30L)))
+  }
+
+  test("noveltyFilterStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val snapshot = docs.filter(_._1 % 4 == 0).map(_._3).toDF("text")
+    val rows = assertRestartEquivalent(thirds(docs), "append")(ds =>
+      StreamingOps.noveltyFilterStream(ds.toDF("id", "ts", "text"), snapshot))
+    // the batch twin: every doc whose text the snapshot lacks
+    val inSnap = docs.filter(_._1 % 4 == 0).map(_._3).toSet
+    assert(rows.map(_.getAs[Long]("id")).sorted ==
+      docs.filterNot(d => inSnap(d._3)).map(_._1))
+  }
+
+  /** Temporal-join ops for 3 keys, one a minute: per key block b = i / 3
+    * a version opens at b % 4 == 0 and a D closes the key at b % 8 == 6;
+    * the other rows are facts. Facts right after a seam join the version
+    * learned before it; a flush row drains every fact.
+    */
+  private val temporalOps: Seq[StreamingOps.TemporalOp] =
+    (0 until 45).map { i =>
+      val b = i / 3
+      val ts = Base + i * Minute
+      if (b % 4 == 0) StreamingOps.TemporalOp("R", "I", i, ts, i % 3L, 0L, i * 10L)
+      else if (b % 8 == 6) StreamingOps.TemporalOp("R", "D", i, ts, i % 3L, 0L, 0L)
+      else StreamingOps.TemporalOp("L", "I", 0L, ts, i % 3L, i, i.toLong)
+    } :+ StreamingOps.TemporalOp("F", "I", Long.MaxValue, Base + 60 * Minute, 0L, -1L, 0L)
+
+  /** The batch twin: each fact joined with the latest version of its key
+    * at or before its time; None when there is none or a D closed it.
+    */
+  private val temporalAsOf: Seq[StreamingOps.TemporalJoined] =
+    temporalOps.filter(_.side == "L").map { f =>
+      val v = temporalOps.filter(o => o.side == "R" && o.key == f.key && o.ts_us <= f.ts_us)
+        .sortBy(_.ts_us).lastOption
+      StreamingOps.TemporalJoined(f.key, f.id, f.ts_us, f.value_c,
+        v.filter(_.op != "D").map(_.value_c))
+    }
+
+  private def joinedOf(rows: Seq[Row]): Seq[StreamingOps.TemporalJoined] =
+    rows.map(r => StreamingOps.TemporalJoined(r.getAs[Long]("key"),
+      r.getAs[Long]("id"), r.getAs[Long]("ts_us"), r.getAs[Long]("l_val"),
+      Option(r.getAs[java.lang.Long]("r_val")).map(_.longValue)))
+      .sortBy(_.id)
+
+  test("temporalJoinStream: restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(temporalOps), "append")(ds =>
+      StreamingOps.temporalJoinStream(ds))
+    assert(joinedOf(rows) == temporalAsOf.filter(_.r_val.isDefined))
+  }
+
+  test("temporalJoinStream (left outer): restart at every batch boundary equals the uninterrupted run") {
+    import spark.implicits._
+    val rows = assertRestartEquivalent(thirds(temporalOps), "append")(ds =>
+      StreamingOps.temporalJoinStream(ds, leftOuter = true))
+    assert(joinedOf(rows) == temporalAsOf)
+    assert(temporalAsOf.exists(_.r_val.isEmpty), "no fact fell in a closed gap")
+  }
 }
