@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.Tables.t
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -149,7 +150,7 @@ object Dedup {
   def minhashLsh(s: SparkSession, dir: String, thr: Double = 0.7): DataFrame =
     // read the memoized pair table; re-assert the kernel's (i, j) output
     // order (parquet round-trips rows, not order)
-    s.read.parquet(lshPairsPath(s, dir, thr)).orderBy(col("i"), col("j"))
+    Tables.parquet(s, lshPairsPath(s, dir, thr)).orderBy(col("i"), col("j"))
 
   /** (doc_id, band, bhash) LSH band table for a shingle-hash frame: the
     * 128-permutation minhash signature collapsed to 32 4-row band hashes.
@@ -193,7 +194,7 @@ object Dedup {
       val out = graft.FixtureMemo.cleanupOnExit(java.nio.file.Files
         .createTempDirectory("graft-minhash-pairs").toString)
       minhashLshPairs(t(s, dir, "documents"), thr,
-        shOpt = Some(s.read.parquet(docShinglesPath(s, dir))))
+        shOpt = Some(Tables.parquet(s, docShinglesPath(s, dir))))
         .write.mode("overwrite").parquet(out)
       out
     }
@@ -207,7 +208,7 @@ object Dedup {
     graft.FixtureMemo.of(s"minhash_clusters|$thr", dir) {
       val out = graft.FixtureMemo.cleanupOnExit(java.nio.file.Files
         .createTempDirectory("graft-minhash-clusters").toString)
-      clustersOfPairs(s.read.parquet(lshPairsPath(s, dir, thr))
+      clustersOfPairs(Tables.parquet(s, lshPairsPath(s, dir, thr))
         .select(col("i"), col("j")))
         .write.mode("overwrite").parquet(out)
       out
@@ -270,7 +271,7 @@ object Dedup {
       thr: Double = 0.7): DataFrame = {
     // sh feeds only the band table now (the verify pass moved to the
     // shared pair fixture), so no cache; full feeds only the exceptAll
-    val sh = s.read.parquet(docShinglesPath(s, dir))
+    val sh = Tables.parquet(s, docShinglesPath(s, dir))
     val bands = bandTable(sh).cache()
     val full = bandCandidates(bands, None)
     // loose-cap equality via occupancy alone: if NO bucket exceeds the
@@ -286,7 +287,7 @@ object Dedup {
     // n_pairs is the verified-pair count — the exact kernel the memoized
     // pair table already ran (verifyJaccard over the uncapped band
     // candidates); count the shared table instead of re-verifying (r18)
-    val nFull = s.read.parquet(lshPairsPath(s, dir, thr))
+    val nFull = Tables.parquet(s, lshPairsPath(s, dir, thr))
       .agg(count(lit(1)).as("n_pairs"))
     val dSub = tight.exceptAll(full).agg(count(lit(1)).as("d2"))
     nFull.crossJoin(dEq).crossJoin(dSub)
@@ -306,7 +307,7 @@ object Dedup {
     */
   def ngramJaccard(s: SparkSession, dir: String, thr: Double = 0.7): DataFrame =
     ngramJaccardOf(graft.Tables.t(s, dir, "documents"), thr,
-      shOpt = Some(s.read.parquet(docShinglesPath(s, dir))))
+      shOpt = Some(Tables.parquet(s, docShinglesPath(s, dir))))
 
   /** Library-facing form over any (doc_id, text) DataFrame. */
   def ngramJaccardOf(docs: DataFrame, thr: Double,
@@ -363,7 +364,7 @@ object Dedup {
   def containmentPairs(s: SparkSession, dir: String,
       thrNum: Int = 9, thrDen: Int = 10): DataFrame =
     containmentOf(graft.Tables.t(s, dir, "documents"), thrNum, thrDen,
-      shOpt = Some(s.read.parquet(docShinglesPath(s, dir))))
+      shOpt = Some(Tables.parquet(s, docShinglesPath(s, dir))))
 
   /** Library-facing form over any (doc_id, text) DataFrame. */
   def containmentOf(docs: DataFrame, thrNum: Int, thrDen: Int,
@@ -416,7 +417,7 @@ object Dedup {
     * tables under `dir` must not change within the process.
     */
   def nearDupClusters(s: SparkSession, dir: String, thr: Double = 0.7): DataFrame =
-    s.read.parquet(clustersPath(s, dir, thr)).orderBy(col("doc_id"))
+    Tables.parquet(s, clustersPath(s, dir, thr)).orderBy(col("doc_id"))
 
   /** The last mile of near-dup dedup: WHICH copy to keep. Every doc is
     * assigned its cluster (its own id if unclustered — singleton groups
@@ -433,7 +434,7 @@ object Dedup {
   def nearDupCanonical(s: SparkSession, dir: String,
       thr: Double = 0.7): DataFrame = {
     // unordered read — the cluster table feeds a join, not the output
-    val clusters = s.read.parquet(clustersPath(s, dir, thr))
+    val clusters = Tables.parquet(s, clustersPath(s, dir, thr))
     val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
     docs.join(clusters, Seq("doc_id"), "left")
       .withColumn("grp", coalesce(col("cluster_rep"), col("doc_id")))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.Tables.t
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -80,7 +81,7 @@ object Graph {
     * pattern; the edge DEFINITION and every consumer are unchanged).
     */
   private def scopedEdges(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.FixtureMemo.of("copurchase_edges_mod4", dir) {
+    Tables.parquet(s, graft.FixtureMemo.of("copurchase_edges_mod4", dir) {
       val out = graft.FixtureMemo.cleanupOnExit(java.nio.file.Files
         .createTempDirectory("graft-copurchase-edges").toString)
       basketEdges(t(s, dir, "lineitem")

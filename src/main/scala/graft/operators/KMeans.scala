@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.Tables.t
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,7 +70,7 @@ object KMeans {
     // the SAME assignmentsOf(embeddings, k, iters) run the emb_semdedup
     // family's shared fixture executes (r18; d2 rides the fixture so
     // the inertia sum is the identical decimal arithmetic)
-    s.read.parquet(assignmentsPath(s, dir, k, iters))
+    Tables.parquet(s, assignmentsPath(s, dir, k, iters))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("d2")).cast(DoubleType), 4).as("inertia"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.Tables.t
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -706,7 +707,7 @@ object Similarity {
     // the fixture now lives in KMeans (r18 — emb_kmeans summarizes the
     // SAME assignment run, so one memoized table serves both; this
     // accessor keeps the (vec_id, cid) slice its consumers saw before)
-    s.read.parquet(KMeans.assignmentsPath(s, dir, k, iters))
+    Tables.parquet(s, KMeans.assignmentsPath(s, dir, k, iters))
       .select(col("vec_id"), col("cid"))
 
   /** The UNCAPPED flat drop set off the shared assignment — the
@@ -723,7 +724,7 @@ object Similarity {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The one-level sub-assignment table off the shared coarse
@@ -744,7 +745,7 @@ object Similarity {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The recursive-refinement assignment table off the shared coarse
@@ -768,7 +769,7 @@ object Similarity {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Library-facing form over any (vec_id, embedding) DataFrame. Caller

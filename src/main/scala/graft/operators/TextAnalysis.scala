@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.Tables.t
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -436,7 +437,7 @@ object TextAnalysis {
   def leakageSafeSplit(s: SparkSession, dir: String,
       thr: Double = 0.7): DataFrame = {
     // memoized cluster table (unordered — it feeds a join)
-    val clusters = s.read.parquet(
+    val clusters = Tables.parquet(s, 
       graft.operators.Dedup.clustersPath(s, dir, thr))
     t(s, dir, "documents").select(col("doc_id"))
       .join(clusters, Seq("doc_id"), "left")
@@ -463,7 +464,7 @@ object TextAnalysis {
       budget: Long = 2048, nShards: Int = 32): DataFrame =
     trainShardsOf(t(s, dir, "documents"), thr, budget, nShards,
       // memoized cluster table shared with the dedup/leakage gates
-      clustersOpt = Some(s.read.parquet(
+      clustersOpt = Some(Tables.parquet(s, 
         graft.operators.Dedup.clustersPath(s, dir, thr))))
 
   /** Library-facing form over any (doc_id, n_chars, text) DataFrame;
@@ -1228,7 +1229,7 @@ object TextAnalysis {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The detect result (maximal cross-doc runs) at the gate
@@ -1245,7 +1246,7 @@ object TextAnalysis {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The HASHED-KEY detect result off the shared index (r17): the
@@ -1268,7 +1269,7 @@ object TextAnalysis {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** text_substring_dedup gate: maximal cross-doc repeated runs of

@@ -253,7 +253,7 @@ object TransactionPipeline {
       }
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
-    s.read.parquet(outDir)
+    graft.Tables.parquet(s, outDir)
       .select(col("id"), col("amount"), col("currency"),
         col("timestamp").as("event_ts"), col("merchant"),
         col("userId").as("user_id"), col("amountInUsd").as("amount_usd"),

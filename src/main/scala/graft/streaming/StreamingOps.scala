@@ -677,7 +677,7 @@ object StreamingOps {
     */
   def upsertLiveView(spark: SparkSession, stateDir: String,
       tombstoneCol: Option[String] = None): DataFrame = {
-    val state = spark.read.parquet(stateDir)
+    val state = graft.Tables.parquet(spark, stateDir)
     tombstoneCol.fold(state)(tc => state.filter(!coalesce(col(tc), lit(false))))
   }
 
@@ -1492,7 +1492,7 @@ object StreamingOps {
     * The DuckDB oracle ranks the definitional net state directly.
     */
   def retractTopNGate(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    val snaps = s.read.parquet(changelogTopnPath(s, dir, n))
+    val snaps = graft.Tables.parquet(s, changelogTopnPath(s, dir, n))
     snaps.withColumn("__mx", max(col("ver")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("group"))))
       .filter(col("ver") === col("__mx") && col("rk") > 0)
@@ -1674,7 +1674,7 @@ object StreamingOps {
     * included. NULLS LAST ordering on both engines.
     */
   def changelogLeftJoinGate(s: SparkSession, dir: String): DataFrame = {
-    foldJoinDeltas(s.read.parquet(changelogLeftPath(s, dir)),
+    foldJoinDeltas(graft.Tables.parquet(s, changelogLeftPath(s, dir)),
         "left-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc,
         col("r_id").asc_nulls_last)
@@ -1863,7 +1863,7 @@ object StreamingOps {
     * directions; folded deltas ≡ DuckDB's net-state FULL JOIN.
     */
   def changelogFullJoinGate(s: SparkSession, dir: String): DataFrame = {
-    foldJoinDeltas(s.read.parquet(changelogFullPath(s, dir)),
+    foldJoinDeltas(graft.Tables.parquet(s, changelogFullPath(s, dir)),
         "full-outer changelog join")
       .orderBy(col("grp").asc, col("l_id").asc_nulls_last,
         col("r_id").asc_nulls_last)
@@ -1955,7 +1955,7 @@ object StreamingOps {
     * net-state join.
     */
   def changelogJoinGate(s: SparkSession, dir: String): DataFrame = {
-    foldJoinDeltas(s.read.parquet(changelogInnerPath(s, dir)),
+    foldJoinDeltas(graft.Tables.parquet(s, changelogInnerPath(s, dir)),
         "changelog join")
       .orderBy(col("grp"), col("l_id"), col("r_id"))
   }
@@ -2561,7 +2561,7 @@ object StreamingOps {
     * op per (group, id) by seq, deletes removed, SUM/COUNT per group.
     */
   def changelogAggGate(s: SparkSession, dir: String): DataFrame = {
-    val snaps = s.read.parquet(changelogAggPath(s, dir))
+    val snaps = graft.Tables.parquet(s, changelogAggPath(s, dir))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group")).orderBy(col("ver").desc)
     snaps.withColumn("__rn", row_number().over(w))
@@ -2911,7 +2911,7 @@ object StreamingOps {
     * `ROWS BETWEEN 3 PRECEDING AND CURRENT ROW` over (ts, id).
     */
   def rowsOverGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(rowsOverPath(s, dir)).filter(col("id") =!= -1L)
+    graft.Tables.parquet(s, rowsOverPath(s, dir)).filter(col("id") =!= -1L)
       .select(col("key").as("k"), col("ts_us"), col("id"), col("value_c"),
         col("sum_w"), col("cnt_w"))
       .orderBy(col("k"), col("ts_us"), col("id"))
@@ -2950,7 +2950,7 @@ object StreamingOps {
     * the r10 verdict recorded.
     */
   def rangeOverGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(rangeOverPath(s, dir)).filter(col("event_id") =!= -1L)
+    graft.Tables.parquet(s, rangeOverPath(s, dir)).filter(col("event_id") =!= -1L)
       .select(col("user_id").as("k"), col("ts_us"),
         col("event_id").as("id"), col("value").as("value_c"),
         col("sum_w"), col("cnt_w"))
@@ -3240,7 +3240,7 @@ object StreamingOps {
     */
   def streamTumbleGate(s: SparkSession, dir: String): DataFrame = {
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    s.read.parquet(tumblePath(s, dir))
+    graft.Tables.parquet(s, tumblePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("event_type"),
         col("cnt"), col("sum_value"))
       .filter(col("w_start") <= maxUs)
@@ -3253,7 +3253,7 @@ object StreamingOps {
     */
   def streamSlideGate(s: SparkSession, dir: String): DataFrame = {
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    s.read.parquet(slidePath(s, dir))
+    graft.Tables.parquet(s, slidePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("cnt"))
       .filter(col("w_start") <= maxUs)
       .orderBy(col("w_start"))
@@ -3265,7 +3265,7 @@ object StreamingOps {
     */
   def streamCumulateGate(s: SparkSession, dir: String): DataFrame = {
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    s.read.parquet(cumulatePath(s, dir))
+    graft.Tables.parquet(s, cumulatePath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"), col("sum_value"))
       .filter(col("w_start") <= maxUs)
@@ -3278,7 +3278,7 @@ object StreamingOps {
     * user bound.
     */
   def streamSessionGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(sessionPath(s, dir))
+    graft.Tables.parquet(s, sessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"))
@@ -3337,7 +3337,7 @@ object StreamingOps {
     */
   def streamDriftPsiGate(s: SparkSession, dir: String): DataFrame = {
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    s.read.parquet(driftPsiPath(s, dir))
+    graft.Tables.parquet(s, driftPsiPath(s, dir))
       .select(col("w_start"), col("n_in_domain"), col("psi"))
       .filter(col("w_start") <= maxUs)
       .orderBy(col("w_start"))
@@ -3349,7 +3349,7 @@ object StreamingOps {
     * folded fixture.
     */
   def streamDynamicSessionGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(dynamicSessionPath(s, dir))
+    graft.Tables.parquet(s, dynamicSessionPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_micros(col("w_start")).as("w_start"),
         unix_micros(col("w_end")).as("w_end"), col("cnt"))
@@ -3405,7 +3405,7 @@ object StreamingOps {
     * at sf0.01 against the per-gate replays).
     */
   private def intervalFullReplayed(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(intervalFullPath(s, dir))
+    graft.Tables.parquet(s, intervalFullPath(s, dir))
   }
 
   private def intervalFullPath(s: SparkSession, dir: String): String =
@@ -3429,7 +3429,7 @@ object StreamingOps {
     * choice to arrival); the keys are the deterministic contract.
     */
   def streamDedupGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(streamDedupPath(s, dir))
+    graft.Tables.parquet(s, streamDedupPath(s, dir))
       .filter(col("user_id") >= 0L)
       .orderBy(col("user_id"), col("event_type"))
   }
@@ -3451,7 +3451,7 @@ object StreamingOps {
     */
   def streamWindowTopNGate(s: SparkSession, dir: String): DataFrame = {
     val (maxUs, _) = gateFlush(gateEventsDayFolded(s, dir))
-    s.read.parquet(windowTopnPath(s, dir))
+    graft.Tables.parquet(s, windowTopnPath(s, dir))
       .filter(col("w_start_us") <= maxUs)
       .select(col("w_start_us"), col("rk"), col("event_type"), col("cnt"))
       .orderBy(col("w_start_us"), col("rk"))
@@ -3488,7 +3488,7 @@ object StreamingOps {
     * from the interval join); 194 pairs bind at sf0.01.
     */
   def streamWindowJoinGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(windowJoinPath(s, dir))
+    graft.Tables.parquet(s, windowJoinPath(s, dir))
       .select(unix_micros(col("w_start")).as("w_start"), col("user_id"),
         col("click_id"), col("purchase_id"))
       .orderBy(col("click_id"), col("purchase_id"))
@@ -3571,7 +3571,7 @@ object StreamingOps {
     * (re-dumped bit-identical at sf0.01 against the per-gate replays).
     */
   private def temporalLeftReplayed(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(temporalLeftPath(s, dir))
+    graft.Tables.parquet(s, temporalLeftPath(s, dir))
   }
 
   private def temporalLeftPath(s: SparkSession, dir: String): String =
@@ -3802,7 +3802,7 @@ object StreamingOps {
     * machines never read one, so outputs are bit-identical.
     */
   private def cepMultiReplayed(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(cepMultiPath(s, dir))
+    graft.Tables.parquet(s, cepMultiPath(s, dir))
   }
 
   /** The cache holds the replay's parquet PATH, not a DataFrame —
@@ -4025,7 +4025,7 @@ object StreamingOps {
   private[graft] def streamSqlMrFieldsAt(s: SparkSession, dir: String,
       minutes: Int): DataFrame = {
     val parsed = sqlMrFieldsParsed(minutes)
-    val m = s.read.parquet(sqlMrFieldsPath(s, dir, minutes))
+    val m = graft.Tables.parquet(s, sqlMrFieldsPath(s, dir, minutes))
     val r = foldedWithK(s, dir).select(col("user_id").as("r_uid"),
       col("ts_us").as("r_ts"), col("event_id").as("r_id"),
       col("k"), round(col("value") * 100).cast("long").as("r_vc"))
@@ -4276,7 +4276,7 @@ object StreamingOps {
     * the oracle is the definitional ROW_NUMBER cut.
     */
   def streamTopNGate(s: SparkSession, dir: String): DataFrame = {
-    val snaps = s.read.parquet(topnPath(s, dir))
+    val snaps = graft.Tables.parquet(s, topnPath(s, dir))
     snaps.withColumn("__mx", max(col("ver")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("group"))))
       .filter(col("ver") === col("__mx"))
@@ -4318,7 +4318,7 @@ object StreamingOps {
     * batch `ts_ewma_anomaly` gate already proves bit-compatible.
     */
   def streamEwmaGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(ewmaPath(s, dir))
+    graft.Tables.parquet(s, ewmaPath(s, dir))
       .groupBy(col("user_id"))
       .agg(round(max_by(col("ewma"),
           struct(col("ts_us"), col("event_id"))), 6).as("ewma_final"),
@@ -4334,7 +4334,7 @@ object StreamingOps {
     * structural and this gate proves it against the driver's engine.
     */
   def streamCusumGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(cusumPath(s, dir))
+    graft.Tables.parquet(s, cusumPath(s, dir))
       .groupBy(col("user_id"))
       .agg(sum(when(col("alarmed"), 1L).otherwise(0L)).as("n_alarms"),
         round(max(col("sp_raw")), 6).as("max_sp"),
@@ -4364,7 +4364,7 @@ object StreamingOps {
     * purchase" with one window max over the row order.
     */
   def streamAttributionGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(attributionPath(s, dir))
+    graft.Tables.parquet(s, attributionPath(s, dir))
       .select(col("user_id"), col("purchase_id"), col("purchase_ts_us"),
         col("last_touch_id"), col("last_touch_type"),
         col("last_touch_latency_us"))
@@ -4395,7 +4395,7 @@ object StreamingOps {
     * controlled fixtures and the gate projects the deterministic keys.
     */
   def streamWindowDedupGate(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(windowDedupPath(s, dir))
+    graft.Tables.parquet(s, windowDedupPath(s, dir))
       .filter(col("user_id") >= 0L)
       .select(col("w_start"), col("user_id"))
       .orderBy(col("w_start"), col("user_id"))
